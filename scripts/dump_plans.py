@@ -1,11 +1,12 @@
-"""Dump .explain("formatted") for headline queries to plans/<tag>/<query>_<suffix>.txt.
+"""Dump .explain("formatted") for headline queries to plans/<query>_<suffix>.txt.
 
 Usage: python scripts/dump_plans.py <suffix> [query ...]
 
 With no query names, dumps every bench HEADLINE query (using the bench
 OVERRIDES so the captured plan is the plan the bench actually times).
 Planning only — nothing is executed, so this is safe to run while other
-work is in flight.
+work is in flight. The dumps are for ad-hoc before/after diffs and are not
+committed; ``tests/test_plan_shape.py`` holds the asserted plan shapes.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ def main() -> None:
     names = sys.argv[2:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "plans", "r06")
+                           "plans")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app="sparktax-plans", cores=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")

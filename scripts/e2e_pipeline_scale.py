@@ -12,7 +12,7 @@ stats (frontier size, sample rows, atom-join rows, wall) plus the
 recovered taxonomy.
 
 Usage:
-    python scripts/e2e_pipeline_scale.py [replicas=24] [sf_dir=/root/testdata/sf0.1] [base=/dev/shm/sparktax-e2e] [cores=32] [wave_size=16] [prefetch=1]
+    python scripts/e2e_pipeline_scale.py [replicas=24] [sf_dir=/root/testdata/sf0.1] [base=/dev/shm/sparktax-e2e] [cores=32] [wave_size=16]
 
 With ``SPARKTAX_E2E_KEEP=1`` the corpus + pipeline workdir persist, so a
 second invocation at a different ``cores`` reuses every stage and times
@@ -124,7 +124,6 @@ def main() -> None:
     base = sys.argv[3] if len(sys.argv) > 3 else "/dev/shm/sparktax-e2e"
     cores = int(sys.argv[4]) if len(sys.argv) > 4 else 32
     wave_size = int(sys.argv[5]) if len(sys.argv) > 5 else 16
-    prefetch = (sys.argv[6] != "0") if len(sys.argv) > 6 else True
     corpus = os.path.join(base, "corpus")
     workdir = os.path.join(base, "work")
     os.makedirs(base, exist_ok=True)
@@ -170,10 +169,7 @@ def main() -> None:
     ex = ExpressiveExtractor(
         kg,
         tv,
-        ExpressiveParams(
-            max_waves=8, threshold_min=0.6, wave_size=wave_size,
-            prefetch=prefetch,
-        ),
+        ExpressiveParams(max_waves=8, threshold_min=0.6, wave_size=wave_size),
     )
     ex.instrument = True
     t0 = time.perf_counter()
@@ -181,7 +177,7 @@ def main() -> None:
     wall = time.perf_counter() - t0
     n_tasks = sum(w["frontier"] for w in ex.wave_log)
     print(json.dumps({"stage": "expressive", "cores": cores,
-                      "wave_size": wave_size, "prefetch": prefetch,
+                      "wave_size": wave_size,
                       "wall_sec": round(wall, 1), "tasks": n_tasks,
                       "tasks_per_sec": round(n_tasks / wall, 3),
                       "waves": ex.wave_log, "edges": len(taxo)}))

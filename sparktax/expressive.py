@@ -6,10 +6,8 @@ runs as one Spark job sequence (SURVEY §3.2):
 
 per wave (all W frontier axioms at once):
   1. extension + seeded sample per axiom, tagged by ``task_id`` (set
-     semantics = joins, sparktax.axioms) — and, while this wave's
-     kernels run, the NEXT wave's samples prefetch on a driver thread
-     in a dedicated FAIR scheduler pool (idle-slot-only; see
-     ``_sample_pairs``/``_predict_next_frontier``);
+     semantics = joins, sparktax.axioms), submitted as concurrent
+     driver-thread jobs (``_sample_tasks``);
   2. candidate-atom mining = three joins (O15/O16) + frequency prefilter
      (O24) over ALL tasks in one pass;
   3. ONE ``applyInPandas`` over ``task_id``: HAC on the sample's
@@ -77,10 +75,6 @@ class ExpressiveParams:
     # target (skew.auto_hot_keys); int pins the count; None opts out.
     salt_hot_min: int | str | None = "auto"
     salt_buckets: int = 16
-    # overlap next-wave extension scans (JVM) with this wave's kernels
-    # (Python workers) — disjoint resources, so prefetching hides the scan
-    # latency entirely when the queue already determines the next frontier
-    prefetch: bool = True
 
     @classmethod
     def from_json(cls, path_or_dict) -> "ExpressiveParams":
@@ -202,11 +196,10 @@ class ExpressiveExtractor:
         self.wave_log: list[dict] = []
         self.instrument = False
         self._last_atom_rows: int | None = None
-        self._wave_size: int | None = None  # resolved by run()
 
     # ---------------------------------------------------------- sampling
     def _sample_pairs(
-        self, pairs: list[tuple[int, str]], pool: str | None = None
+        self, pairs: list[tuple[int, str]]
     ) -> dict[tuple[int, str], list[tuple[int, int]]]:
         """Seeded samples for ``(task_id, axiom_key)`` pairs.
 
@@ -214,28 +207,17 @@ class ExpressiveExtractor:
         (TakeOrderedAndProject: per-partition top-k + driver merge, no
         shuffle, no full sort even over ⊤'s extension). The pairs submit
         as CONCURRENT Spark jobs from driver threads — latency is the
-        slowest extension scan, not the sum of 16 of them. A sample
-        depends only on ``(key, tid, seed)``, never on wave number or
-        threshold — the invariant that makes next-wave PREFETCH safe.
-
-        ``pool``: Spark scheduler pool for these jobs. Prefetch passes a
-        dedicated pool so the speculative scans only consume slots the
-        current wave leaves idle — under plain FIFO the earlier-submitted
-        prefetch jobs would outrank the wave's OWN mining/kernel jobs and
-        starve the critical path (measured: the first prefetch run
-        regressed instead of overlapping). Requires
-        ``spark.scheduler.mode=FAIR`` (set by ``get_spark``).
+        slowest extension scan, not the sum of 16 of them (the FAIR
+        scheduler set by ``get_spark`` shares slots between them). A
+        sample depends only on ``(key, tid, seed)``, never on wave number
+        or threshold.
         """
         from concurrent.futures import ThreadPoolExecutor
 
         if not pairs:
             return {}
-        sc = self.kg.triples.sparkSession.sparkContext
 
         def one(pair: tuple[int, str]):
-            # local properties are per-thread (pinned-thread mode): tag
-            # every worker thread with the pool before submitting
-            sc.setLocalProperty("spark.scheduler.pool", pool)
             tid, key = pair
             ax = parse_axiom(key)
             rows = (
@@ -250,38 +232,20 @@ class ExpressiveExtractor:
         with ThreadPoolExecutor(max_workers=min(8, len(pairs))) as exe:
             return dict(exe.map(one, pairs))
 
-    def _sample_tasks(self, axioms: list[str]) -> tuple[DataFrame, dict[int, str]]:
-        """One (task_id, h) sample DF for a whole frontier. The combined
-        sample is ≤ wave_size·size rows (8k at defaults), so it lands
-        driver-side and re-enters as a local (broadcastable) DataFrame —
-        cheaper than the localCheckpoint it replaces."""
-        spark = self.kg.triples.sparkSession
-        task_of = dict(enumerate(axioms))
+    def _sample_tasks(
+        self, task_of: dict[int, str]
+    ) -> tuple[DataFrame, dict[int, int]]:
+        """One (task_id, h) sample DF for a whole frontier, plus each
+        task's sample size. The combined sample is ≤ wave_size·size rows
+        (8k at defaults), so it lands driver-side and re-enters as a local
+        (broadcastable) DataFrame — cheaper than a localCheckpoint."""
         fetched = self._sample_pairs(list(task_of.items()))
         all_rows = [r for pair in sorted(fetched) for r in fetched[pair]]
-        df = spark.createDataFrame(
+        sizes = {tid: len(rows) for (tid, _k), rows in fetched.items()}
+        df = self.kg.triples.sparkSession.createDataFrame(
             all_rows, "task_id long, h long"
-        ) if all_rows else spark.createDataFrame([], "task_id long, h long")
-        return df, task_of
-
-    def _predict_next_frontier(self, st: "_State") -> list[tuple[int, str]]:
-        """The next wave's ``(task_id, key)`` slots, as far as the current
-        queue determines them. Kernels only APPEND to the queue, so the
-        first ``wave_size`` unprocessed keys — and their task ids — are
-        already final while this wave's kernels run; only slots beyond
-        ``len(predicted)`` can be filled by newly-found children. A
-        queue regeneration (threshold relax) invalidates the prediction,
-        which the consume step detects by (tid, key) mismatch."""
-        out: list[tuple[int, str]] = []
-        seen: set[str] = set()
-        for key in st.queue:
-            if key in st.processed or key in seen:
-                continue
-            seen.add(key)
-            out.append((len(out), key))
-            if len(out) == self._wave_size:
-                break
-        return out
+        )
+        return df, sizes
 
     # ---------------------------------------------------------- kernel
     def _label_wave(self, samples: DataFrame) -> pd.DataFrame:
@@ -474,20 +438,14 @@ class ExpressiveExtractor:
             st = _State(queue=[Top().key()], threshold=p.threshold_initial)
         self.threshold = st.threshold
         self.concepts_only = st.concepts_only
-        spark = self.kg.triples.sparkSession
         # resolve the frontier width ONCE and pin it in the state: a
         # resumed run keeps the original width even on different hardware
         # (wave composition feeds sample seeds via task ids)
         if st.wave_size is None:
-            st.wave_size = p.wave_size or _auto_wave_size(spark)
-        self._wave_size = st.wave_size
-        from concurrent.futures import ThreadPoolExecutor
-
-        pf_pool = ThreadPoolExecutor(max_workers=1) if p.prefetch else None
-        pf_future = None
+            st.wave_size = p.wave_size or _auto_wave_size(self.kg.triples.sparkSession)
         while st.queue and st.waves < p.max_waves and len(st.taxonomy) < p.max_nodes:
             frontier = []
-            while st.queue and len(frontier) < self._wave_size:
+            while st.queue and len(frontier) < st.wave_size:
                 key = st.queue.pop(0)
                 if key in st.processed:
                     continue
@@ -498,50 +456,15 @@ class ExpressiveExtractor:
             _t0 = _time.perf_counter()
             _edges_before = len(st.taxonomy)
             task_of = dict(enumerate(frontier))
-            # consume the prefetch: keep only samples whose predicted
-            # (tid, key) slot materialized — a queue regeneration or a
-            # shorter-than-predicted frontier falls back to live sampling
-            pre: dict[tuple[int, str], list] = {}
-            if pf_future is not None:
-                try:
-                    pre = pf_future.result()
-                except Exception:
-                    pre = {}  # prefetch is an optimization, never a failure
-                pf_future = None
-            by_tid = {
-                tid: rows
-                for (tid, key), rows in pre.items()
-                if task_of.get(tid) == key
-            }
-            prefetch_hits = len(by_tid)
-            missing = [(t, k) for t, k in task_of.items() if t not in by_tid]
-            _ts = _time.perf_counter()
-            for (tid, _k), rows_ in self._sample_pairs(missing).items():
-                by_tid[tid] = rows_
-            _sample_sec = round(_time.perf_counter() - _ts, 3)
-            all_rows = [r for tid in sorted(by_tid) for r in by_tid[tid]]
-            samples = (
-                spark.createDataFrame(all_rows, "task_id long, h long")
-                if all_rows
-                else spark.createDataFrame([], "task_id long, h long")
-            )
-            sizes = {tid: len(rows_) for tid, rows_ in by_tid.items()}
-            # launch the NEXT wave's extension scans (JVM) before this
-            # wave's kernels (Python workers) start — disjoint resources
-            if pf_pool is not None:
-                pred = self._predict_next_frontier(st)
-                if pred:
-                    pf_future = pf_pool.submit(
-                        self._sample_pairs, pred, "sparktax_prefetch"
-                    )
+            samples, sizes = self._sample_tasks(task_of)
+            _sample_sec = round(_time.perf_counter() - _t0, 3)
             labels = self._label_wave(samples)
             st.waves += 1
             wave_stat = {
                 "wave": st.waves,
                 "frontier": len(frontier),
                 "sample_rows": sum(sizes.values()),
-                "prefetch_hits": prefetch_hits,
-                "sample_sec": _sample_sec,  # sync sampling on the critical path
+                "sample_sec": _sample_sec,
                 "wall_sec": round(_time.perf_counter() - _t0, 3),
                 "threshold": st.threshold,
             }
@@ -610,10 +533,6 @@ class ExpressiveExtractor:
             self.wave_log.append(wave_stat)
             if ckpt is not None:
                 ckpt.save_state(state_name, st.to_json())
-        if pf_pool is not None:
-            # don't block exit on a speculative in-flight scan; the thread
-            # finishes its collect and is reclaimed
-            pf_pool.shutdown(wait=False)
         return st.taxonomy
 
     def named_taxonomy(self, edges: list[tuple[str, str]]) -> list[tuple[str, str]]:

@@ -23,13 +23,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparktax.extract.rules import PRONOUNS, STATEMENT_RE
+from sparktax.extract.rules import PRONOUNS
 
-_TRIPLE_OUT = "conv_id string, turn_idx int, subj string, pred string, obj string"
 _TRIPLE_OUT_FULL = (
     "conv_id string, turn_idx int, stmt_idx int, subj string, pred string, obj string"
 )
@@ -37,55 +35,6 @@ _MENTION_OUT = (
     "conv_id string, turn_idx int, surface string, kind string, "
     "span_start int, span_end int"
 )
-
-
-_EMPTY_TRIPLES = {
-    "conv_id": pd.Series(dtype="object"),
-    "turn_idx": pd.Series(dtype="int32"),
-    "subj": pd.Series(dtype="object"),
-    "pred": pd.Series(dtype="object"),
-    "obj": pd.Series(dtype="object"),
-}
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized statement extraction over one Arrow batch.
-
-    The whole batch is scanned as ONE joined string (``\\x00`` separators —
-    unmatched by any token of the statement grammar, so matches cannot
-    cross row boundaries) and match positions are mapped back to rows via
-    ``searchsorted``. ~2× faster and far less allocation-heavy than
-    per-row ``Series.str.extractall`` — this kernel is the 100 TB hot path
-    and its memory traffic sets the per-node throughput ceiling.
-    """
-    texts = pdf["text"].fillna("").to_numpy()
-    if len(texts) == 0:
-        return pd.DataFrame(_EMPTY_TRIPLES)
-    joined = "\x00".join(texts)
-    ends = np.cumsum(
-        np.fromiter((len(t) + 1 for t in texts), dtype=np.int64, count=len(texts))
-    )
-    starts: list[int] = []
-    subs: list[str] = []
-    preds: list[str] = []
-    objs: list[str] = []
-    for m in STATEMENT_RE.finditer(joined):
-        starts.append(m.start())
-        subs.append(m.group(1))
-        preds.append(m.group(2))
-        objs.append(m.group(3))
-    if not starts:
-        return pd.DataFrame(_EMPTY_TRIPLES)
-    rows = np.searchsorted(ends, np.asarray(starts, dtype=np.int64), side="right")
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[rows],
-            "turn_idx": pdf["turn_idx"].to_numpy()[rows].astype("int32"),
-            "subj": subs,
-            "pred": preds,
-            "obj": objs,
-        }
-    )
 
 
 def _join_text_buffer(text) -> tuple[bytes, np.ndarray]:
@@ -207,23 +156,6 @@ def extract_triples(
 
     res = cols.mapInArrow(gen, schema=_TRIPLE_OUT_FULL + extra_ddl)
     return res if with_stmt_idx else res.drop("stmt_idx")
-
-
-def extract_triples_pandas(
-    transcripts: DataFrame, keep_pronouns: bool = False
-) -> DataFrame:
-    """pandas-lane variant of :func:`extract_triples` (kept for kernel
-    benchmarking; same semantics)."""
-    cols = transcripts.select("conv_id", "turn_idx", "text")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _extract_batch(pdf)
-            if not keep_pronouns and len(out):
-                out = out[~out["subj"].isin(PRONOUNS)]
-            yield out
-
-    return cols.mapInPandas(gen, schema=_TRIPLE_OUT)
 
 
 def extract_triples_contextual(transcripts: DataFrame) -> DataFrame:

@@ -68,7 +68,9 @@ def connected_components(
 
     Nodes appearing only as isolated (self-edge or absent) map to
     themselves. Convergence: the edge multiset signature
-    (count + xxhash64 sum) is stable across a large+small round.
+    (count + xxhash64 sum) is stable across a large+small round. Raises
+    ``RuntimeError`` if that fixpoint is not reached within ``max_iter``
+    rounds — a truncated loop would silently return split components.
     """
     # Spark 4.1: localCheckpoint of a plan carrying filter-derived
     # constraints breaks attribute dedup on the subsequent self-union
@@ -116,6 +118,10 @@ def _cc_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
 
     # at fixpoint every edge is (node → component-min)
     assignment = e.groupBy("u").agg(F.min("v").alias("component")).select(

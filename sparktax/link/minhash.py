@@ -2,9 +2,9 @@
 
 Pipeline (the SparkER / MinHashLSH pattern):
 
-1. ``shingle``     — character n-grams via ``sequence``+``transform``
-                     (Catalyst array expressions) + ``explode``; one narrow
-                     stage, no Python.
+1. ``shingle``     — character n-grams via one lookahead-regex pass
+                     (``regexp_extract_all``, codegen'd) + ``explode``; one
+                     narrow stage, no Python, no exchange.
 2. ``minhash_signatures`` — k permutations hᵢ(x) = (aᵢ·x + bᵢ) mod p over
                      ``xxhash64(shingle)``; one ``groupBy(id)`` computing k
                      ``min`` aggregates in a single shuffle (map-side
@@ -55,12 +55,9 @@ def shingle(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     Pure Catalyst, fully codegen: gram extraction via the lookahead-regex
     device (:func:`char_grams`) — no interpreted higher-order lambda.
     """
-    from sparktax.session import fan_out
-
     grams = F.array_distinct(char_grams(F.lower(F.col(text_col)), n))
     return (
-        fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", grams.alias("_grams"))
+        df.select(F.col(id_col).alias("id"), grams.alias("_grams"))
         .select("id", F.explode("_grams").alias("shingle"))
         .filter(F.length("shingle") > 0)
     )

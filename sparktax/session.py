@@ -133,12 +133,10 @@ def get_spark(
         # dictionaries) are small relative to triples at any scale
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", _default_driver_mem())
-        # FAIR across on-demand pools: concurrent driver-thread jobs (the
-        # expressive wave sampler, its next-wave prefetch) share slots
-        # instead of FIFO head-of-line blocking — prefetch jobs run in a
-        # "sparktax_prefetch" pool so speculative scans only use capacity
-        # the current wave's jobs leave idle. Single-job workloads (the
-        # bench, the gate) are unaffected: one pool, one job.
+        # FAIR: concurrent driver-thread jobs (the expressive wave
+        # sampler's per-axiom scans, DSIR's overlapped count jobs) share
+        # slots instead of FIFO head-of-line blocking. Single-job
+        # workloads (the bench, the gate) are unaffected: one job.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -162,30 +160,3 @@ def stop_spark() -> None:
     if s is not None:
         s.stop()
 
-
-def fan_out(df, parallelism: int | None = None):
-    """Round-robin repartition a narrow source up to the session's default
-    parallelism — a NO-OP whenever the input already has that many
-    partitions (so at production scale, where scans arrive in thousands of
-    splits, this never fires and never adds a shuffle).
-
-    Rationale (round-4 lesson + optimization guide §2.5 "input skew"): a
-    single-row-group parquet file plans as ONE scan task no matter how many
-    byte-range splits Spark makes, so every narrow stage downstream — gram
-    explosion, Arrow kernels, map-side partial aggregation — runs on one
-    core. Fanning the narrow projection out first costs one small shuffle
-    of the projected columns and unlocks the full task slots. Apply to the
-    PROJECTED input (ids + the column the kernel needs), never to wide
-    rows.
-    """
-    if getattr(df, "isStreaming", False):
-        return df
-    sc = df.sparkSession.sparkContext
-    target = int(parallelism or sc.defaultParallelism)
-    try:
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if current >= target:
-        return df
-    return df.repartition(target)

@@ -153,19 +153,6 @@ def dedup_near(
     return ex.join(dropped, id_col, "left_anti")
 
 
-def _shingle_hash_array(text_col: str, n: int):
-    """array<long> of xxhash64'd distinct character n-grams — the compact
-    stored form of a document's shingle set (8 bytes/shingle, no text
-    retained in the index). Exact Jaccard over these equals exact Jaccard
-    over the shingles themselves up to 64-bit hash collisions."""
-    from sparktax.link.minhash import char_grams
-
-    grams = F.array_distinct(char_grams(F.lower(F.col(text_col)), n))
-    return F.transform(
-        F.filter(grams, lambda g: F.length(g) > 0), lambda g: F.xxhash64(g)
-    )
-
-
 def dedup_incremental(
     new_batch: DataFrame,
     index_dir: str,
@@ -489,14 +476,11 @@ def word_shingles(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFram
     measured ~50× slower on the same shape). Values are identical: windows
     with fewer than ``n`` tokens — which the old form emitted and then
     filtered out — simply never match the regex."""
-    from sparktax.session import fan_out
-
     norm = normalized_text(F.col(text_col))
     pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
     grams = F.array_distinct(F.regexp_extract_all(norm, F.lit(pat), 1))
     return (
-        fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", grams.alias("_g"))
+        df.select(F.col(id_col).alias("id"), grams.alias("_g"))
         .select("id", F.explode("_g").alias("shingle"))
     )
 

@@ -250,35 +250,6 @@ def test_auto_wave_size_rule(spark):
     assert _State.from_json(_State().to_json()).wave_size is None
 
 
-def test_prefetch_off_matches_on(ekg):
-    """Wave pipelining is a latency optimization, never a semantics
-    change: prefetch=False must reproduce the default run edge-for-edge
-    (samples depend only on (key, tid, seed)), and the pipelined run must
-    actually hit its prefetch on the multi-wave path."""
-    from dataclasses import replace
-
-    from sparktax.expressive import ExpressiveExtractor, ExpressiveParams
-    from sparktax.typevec import type_vectors
-
-    kg, triples, info = ekg
-    emb = type_vectors(kg, k=16).localCheckpoint()
-    # wave_size=2 leaves a queue backlog after wave 1's children land, so
-    # later waves are predictable → the prefetch path actually exercises
-    # (at the default 16 this small graph drains its queue every wave and
-    # prefetch correctly stays idle — hits only come from backlog)
-    params = ExpressiveParams(
-        size=500, min_size=25, max_waves=4, wave_size=2,
-        threshold_initial=0.9, seed=1,
-    )
-    on = ExpressiveExtractor(kg, emb, params)
-    edges_on = on.run()
-    off = ExpressiveExtractor(kg, emb, replace(params, prefetch=False))
-    assert off.run() == edges_on
-    assert all(w["prefetch_hits"] == 0 for w in off.wave_log)
-    # wave 1 has nothing to prefetch from; later waves should hit
-    assert sum(w["prefetch_hits"] for w in on.wave_log) > 0
-
-
 def test_remainder_regeneration_on_relax(ekg, spark):
     """When the queue drains, the relaxed threshold revisits the
     *remainders* of extracted classes (reference extractor.py:90-98) —

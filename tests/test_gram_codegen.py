@@ -1,6 +1,6 @@
 """Round-6 optimization guards: the codegen regex gram builders must stay
-row-identical to the original interpreted-HOF forms, and fan_out must stay
-a strict no-op when the input is already parallel enough.
+row-identical to the original interpreted-HOF forms, on adversarial inputs
+and on a slice of real generated documents.
 
 The old forms are kept INLINE here as executable specifications — if a
 future edit changes gram values (e.g. drops the short-text truncation case
@@ -9,11 +9,12 @@ or the DOTALL flag), these fail pointing at the exact divergence.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from sparktax.link.minhash import shingle
-from sparktax.session import fan_out
 from sparktax.textops import normalized_text, simhash, word_shingles
 
 TRICKY = [
@@ -33,9 +34,24 @@ TRICKY = [
 ]
 
 
+DOCUMENTS = Path(__file__).resolve().parents[1] / "perfbench/data/sf0.001/documents.parquet"
+
+
 @pytest.fixture(scope="module")
 def tricky(spark):
     return spark.createDataFrame(TRICKY, "doc_id int, text string")
+
+
+@pytest.fixture(scope="module")
+def inputs(spark, tricky):
+    """The adversarial rows plus a 200-doc slice of real documents."""
+    docs = (
+        spark.read.parquet(str(DOCUMENTS))
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(200)
+    )
+    return {"tricky": tricky, "documents": docs}
 
 
 def _old_shingle(df, text_col, id_col, n):
@@ -72,17 +88,21 @@ def _old_word_shingles(df, n, text_col, id_col):
 
 
 @pytest.mark.parametrize("n", [2, 3, 5])
-def test_char_shingle_matches_hof_reference(tricky, n):
-    got = sorted(map(tuple, shingle(tricky, "text", "doc_id", n=n).collect()))
-    want = sorted(map(tuple, _old_shingle(tricky, "text", "doc_id", n).collect()))
-    assert got == want
+def test_char_shingle_matches_hof_reference(inputs, n):
+    for name, df in inputs.items():
+        got = sorted(map(tuple, shingle(df, "text", "doc_id", n=n).collect()))
+        want = sorted(map(tuple, _old_shingle(df, "text", "doc_id", n).collect()))
+        assert got, name
+        assert got == want, name
 
 
 @pytest.mark.parametrize("n", [1, 2, 4])
-def test_word_shingles_match_hof_reference(tricky, n):
-    got = sorted(map(tuple, word_shingles(tricky, n, "text", "doc_id").collect()))
-    want = sorted(map(tuple, _old_word_shingles(tricky, n, "text", "doc_id").collect()))
-    assert got == want
+def test_word_shingles_match_hof_reference(inputs, n):
+    for name, df in inputs.items():
+        got = sorted(map(tuple, word_shingles(df, n, "text", "doc_id").collect()))
+        want = sorted(map(tuple, _old_word_shingles(df, n, "text", "doc_id").collect()))
+        assert got, name
+        assert got == want, name
 
 
 def test_simhash_empty_and_whitespace_docs_survive(tricky):
@@ -136,15 +156,3 @@ def test_stopword_regex_counts_adjacent_and_substring_tokens(spark):
     # "la" and "los" are stopwords (fr/es); "lalande" is neither
     assert abs(rows[3]["stopword_ratio"] - round(2 / 3, 6)) < 1e-9
 
-
-def test_fan_out_noop_when_parallel_enough(spark):
-    df = spark.range(1000).repartition(4)
-    assert fan_out(df, parallelism=4) is df
-    assert fan_out(df, parallelism=2) is df
-
-
-def test_fan_out_expands_single_partition(spark):
-    df = spark.range(1000).coalesce(1)
-    out = fan_out(df, parallelism=4)
-    assert out.rdd.getNumPartitions() == 4
-    assert out.count() == 1000

@@ -156,6 +156,15 @@ def test_connected_components_random(spark):
     assert dict(zip(got.node, got.component)) == want
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    path = [(i, i + 1) for i in range(200)]
+    df = spark.createDataFrame(pd.DataFrame(path, columns=["src", "dst"]))
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iter=1)
+    got = connected_components(df).toPandas()
+    assert len(got) == 201 and set(got.component) == {0}
+
+
 # ---------------------------------------------------------------- canonicalize
 def test_canonical_map_and_rewrite(spark):
     ents = spark.createDataFrame(
