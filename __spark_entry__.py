@@ -477,14 +477,22 @@ def q_split_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "split")
 
 
+def _hex_int(expr: str, n: int = 15, off: int = 1) -> str:
+    """DuckDB twin of ``sparktax.hashing.md5_60`` (``n=15``) and ``md5_32``
+    (``n=8``): the ``n`` hex chars of the string ``expr`` from position
+    ``off`` as an exact BIGINT. ``strpos('123456789abcdef', c)`` maps '0'
+    to 0 (a miss) and '1'..'f' to 1..15, so no from_hex is needed."""
+    return " + ".join(
+        f"strpos('123456789abcdef', substr({expr},{off + j},1))::BIGINT"
+        f" * {16 ** (n - 1 - j)}"
+        for j in range(n)
+    )
+
+
 def _split_corpus_sql() -> str:
     from sparktax.textops import split_thresholds
 
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(doc_id::VARCHAR || "
-        f"':{_SPLIT_SEED}'),{j + 1},1))::BIGINT * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int(f"md5(doc_id::VARCHAR || ':{_SPLIT_SEED}')")
     ths = split_thresholds(_SPLIT_FRACTIONS)
     case = (
         "CASE "
@@ -514,11 +522,7 @@ def _dedup_spans_sql(w: int = 8) -> str:
     keys, gaps-and-islands interval merge, and a lambda rebuild of the
     kept token stream."""
     norm = _NORM.format(c="coalesce(text, '')")
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(g),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int("md5(g)")
     return f"""
         WITH toks AS (
             SELECT doc_id,
@@ -621,11 +625,7 @@ def _doc_clusters_sql() -> str:
 
     K, B, seed = _DOCCLUS_K, _DOCCLUS_BUCKETS, _DOCCLUS_SEED
     norm = _NORM.format(c="coalesce(text, '')")
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(g),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int("md5(g)")
     grams_cte = f"""
         toks AS (
             SELECT doc_id,
@@ -794,11 +794,7 @@ def _qclf_sql() -> str:
     )
     wq, bq = _qclf_replica_weights(sf_dir)
     norm = _NORM.format(c="coalesce(text, '')")
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(g),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int("md5(g)")
     w_values = ", ".join(
         f"({i}, {int(wq[i])})" for i in range(len(wq))
     )
@@ -999,11 +995,7 @@ def _dsir_sql(buckets: int = 4096) -> str:
     from sparktax.textops import dsir_bucket_weights
 
     norm = _NORM.format(c="text")
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(g),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int("md5(g)")
     grams_cte = f"""
         toks AS (
             SELECT doc_id,
@@ -1122,11 +1114,7 @@ def _perplexity_sql(buckets: int = 4096) -> str:
     from sparktax.textops import lm_bucket_logprobs
 
     norm = _NORM.format(c="coalesce(text, '')")
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(g),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int("md5(g)")
     grams_cte = f"""
         toks AS (
             SELECT doc_id,
@@ -1192,11 +1180,8 @@ def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _training_order_sql() -> str:
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(doc_id::VARCHAR || ':' || "
-        f"copy_idx::VARCHAR || ':{_ORDER_SEED}'),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
+    u60 = _hex_int(
+        f"md5(doc_id::VARCHAR || ':' || copy_idx::VARCHAR || ':{_ORDER_SEED}')"
     )
     return f"""
         WITH mixed AS ({_mix_corpora_sql()}),
@@ -1218,11 +1203,7 @@ def _mix_corpora_sql() -> str:
             (d, mix_weight_params(w)) for d, w in sorted(_MIX_WEIGHTS.items())
         )
     )
-    u60 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(doc_id::VARCHAR || "
-        f"':{_MIX_SEED}'),{j + 1},1))::BIGINT * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    u60 = _hex_int(f"md5(doc_id::VARCHAR || ':{_MIX_SEED}')")
     return f"""
         WITH w(dom, base, thresh) AS (VALUES {vals}),
         u AS (SELECT doc_id, source, ({u60}) AS u60 FROM documents),
@@ -1856,11 +1837,7 @@ def _lsh_sig_cte(n_planes: int = 16, n_bands: int = 4, seed: int = 42) -> str:
     first 15 md5 hex chars (strpos device), vectors quantized to
     ``round(x·2²⁰)``, all-integer dot products — signatures bit-identical
     to Spark's, so the banded candidate sets match exactly."""
-    hex15 = " + ".join(
-        f"strpos('123456789abcdef', substr(mh,{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    hex15 = _hex_int("mh")
     bits = n_planes // n_bands
     mask = (1 << bits) - 1
     return f"""
@@ -1998,8 +1975,9 @@ _MEDIA_GOLD_SQL = """
 def _md5int_centroid_values(n_cells: int, seed: int) -> str:
     """``(cell, pos, w)`` VALUES rows for the md5int centroid oracles:
     read the gate parquet directly (outside Spark), sort by the hashlib
-    md5 rank (bit-identical to the Spark-side ``md5_rank_expr``), run the
-    SAME numpy ``_lloyd``, quantize to ``round(c·2²⁰)`` ints."""
+    md5 rank (bit-identical to the Spark-side
+    ``sparktax.hashing.md5_rank_expr``), run the SAME numpy ``_lloyd``,
+    quantize to ``round(c·2²⁰)`` ints."""
     import hashlib
     import os
 
@@ -2084,10 +2062,10 @@ def _ivf_sql(
     """DuckDB replica of the md5int IVF probe. The centroids are
     recomputed HERE, outside Spark: read the gate's parquet directly, sort
     by the hashlib md5 rank (bit-identical to the Spark-side
-    ``md5_rank_expr``), run the SAME numpy ``_lloyd``, quantize to
-    ``round(c·2²⁰)`` ints, and embed them as literal VALUES. Assignment is
-    then all-integer in both engines; rerank is the proven rounded-cosine
-    pattern. The gate runs at sf0.01 (driver contract);
+    ``sparktax.hashing.md5_rank_expr``), run the SAME numpy ``_lloyd``,
+    quantize to ``round(c·2²⁰)`` ints, and embed them as literal VALUES.
+    Assignment is then all-integer in both engines; rerank is the proven
+    rounded-cosine pattern. The gate runs at sf0.01 (driver contract);
     ``SPARK_GRAFT_ORACLE_SF_DIR`` overrides for local checks at other
     scales."""
     w_values = _md5int_centroid_values(n_cells, seed)
@@ -2143,8 +2121,8 @@ def _pq_codebook_values(
 ) -> tuple[str, int]:
     """Codebooks for the PQ oracles, recomputed OUTSIDE Spark: read the
     gate parquet, sort by the hashlib md5 rank (bit-identical to the
-    Spark ``md5_rank_expr`` sample order), run the SAME numpy L2 Lloyd
-    per subspace (seed+m), quantize to ``round(c·2²⁰)`` ints, and emit
+    ``sparktax.hashing.md5_rank_expr`` sample order), run the SAME numpy
+    L2 Lloyd per subspace (seed+m), quantize to ``round(c·2²⁰)`` ints, and emit
     them as a VALUES list ``(sub, subpos, code, cw)``. Returns the
     VALUES string and sub_dim."""
     import hashlib
@@ -2348,16 +2326,9 @@ def _ivfpq_sql(
 
 def _simhash_sql() -> str:
     """DuckDB replica of sparktax.textops.simhash: md5-prefix token hashes
-    (hex parsed via the strpos('123456789abcdef', …) trick — '0' maps to 0
-    because strpos returns 0 on miss), 64 per-bit majority sums, bit 63
-    packed through a −2⁶³ offset so nothing overflows a signed BIGINT."""
-
-    def hex8(col: str, off: int) -> str:
-        return " + ".join(
-            f"strpos('123456789abcdef', substr({col},{off + j},1))::BIGINT"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
+    (two 8-hex-char halves, parsed by :func:`_hex_int`), 64 per-bit
+    majority sums, bit 63 packed through a −2⁶³ offset so nothing
+    overflows a signed BIGINT."""
 
     votes = ", ".join(
         f"sum(({'lo' if i < 32 else 'hi'} >> {i % 32}) & 1) AS v{i}"
@@ -2375,8 +2346,8 @@ def _simhash_sql() -> str:
             FROM documents
         ),
         b AS (
-            SELECT doc_id, ({hex8("md5(tok)", 1)}) AS hi,
-                   ({hex8("md5(tok)", 9)}) AS lo
+            SELECT doc_id, ({_hex_int("md5(tok)", 8)}) AS hi,
+                   ({_hex_int("md5(tok)", 8, 9)}) AS lo
             FROM toks
         ),
         v AS (SELECT doc_id, count(*) AS n, {votes} FROM b GROUP BY doc_id),
@@ -2399,11 +2370,7 @@ def _minhash_sql(
     from sparktax.link.minhash import _hash_params
 
     p = (1 << 31) - 1
-    hex15 = " + ".join(
-        f"strpos('123456789abcdef', substr(md5(shingle),{j + 1},1))::BIGINT"
-        f" * {16 ** (14 - j)}"
-        for j in range(15)
-    )
+    hex15 = _hex_int("md5(shingle)")
     mins = ", ".join(
         f"min((x * {a} + {b}) % {p}) AS h{i}"
         for i, (a, b) in enumerate(_hash_params(k, seed))
@@ -2669,7 +2636,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             h AS (
                 SELECT doc_id, i,
-                       ({" + ".join(f"strpos('123456789abcdef', substr(md5(gram),{1 + j},1))::BIGINT * {16 ** (7 - j)}" for j in range(8))})
+                       ({_hex_int("md5(gram)", 8)})
                            AS hv
                 FROM g
             ),
@@ -3046,10 +3013,7 @@ def oracle_sql() -> dict[str, str]:
             pool AS (SELECT DISTINCT h FROM kg WHERE r = 0 AND t = {N_OFF + 1}),
             keyed AS (
                 SELECT h,
-                       ({" + ".join(
-                           f"strpos('123456789abcdef', substr(md5(h::VARCHAR || ':7'),{j + 1},1))::BIGINT * {16 ** (14 - j)}"
-                           for j in range(15)
-                       )}) AS k
+                       ({_hex_int("md5(h::VARCHAR || ':7')")}) AS k
                 FROM pool
             )
             SELECT h FROM keyed ORDER BY k, h LIMIT 50

@@ -76,8 +76,6 @@ class StageCheckpointer:
         df_or_fn,
         params: dict | None = None,
         upstream: list[str] | None = None,
-        partition_by: str | None = None,
-        num_partitions: int | None = None,
     ) -> DataFrame:
         """Materialize (or resume) one named stage.
 
@@ -94,12 +92,7 @@ class StageCheckpointer:
 
         df = df_or_fn() if callable(df_or_fn) else df_or_fn
         t0 = time.perf_counter()
-        out = df
-        if partition_by:
-            out = out.repartition(
-                *( [num_partitions] if num_partitions else [] ), partition_by
-            )
-        out.write.mode("overwrite").parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         wall = time.perf_counter() - t0
 
         stored = self.spark.read.parquet(data_dir)

@@ -144,17 +144,6 @@ def hac_children(
     return children, out_heights
 
 
-def children_to_edges(children: np.ndarray) -> np.ndarray:
-    """(child, parent) edge list; leaves 0..n-1, internal n..2n-2
-    (reference build_clustering, libs/cluster/_cluster.py:39-47)."""
-    n = len(children) + 1
-    edges = np.empty((2 * (n - 1), 2), dtype=np.int64)
-    for k, (a, b) in enumerate(children):
-        edges[2 * k] = (a, n + k)
-        edges[2 * k + 1] = (b, n + k)
-    return edges
-
-
 def leaf_closure(children: np.ndarray) -> list[tuple[int, int]]:
     """(ancestor_or_self, leaf) pairs for every leaf (the roll-up table,
     reference init_composition, libs/cluster/_cluster.py:88-111)."""

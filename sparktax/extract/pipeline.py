@@ -265,11 +265,3 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
 
     return cols.mapInArrow(gen, schema=_MENTION_OUT)
 
-
-def add_mention_ids(mentions: DataFrame) -> DataFrame:
-    """Assign globally-unique mention ids without a global sort.
-
-    ``monotonically_increasing_id`` is partition-local and stable per plan —
-    fine as an opaque key (never used for ordering).
-    """
-    return mentions.withColumn("mention_id", F.monotonically_increasing_id())

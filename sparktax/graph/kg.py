@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from sparktax.hashing import seeded_hash
+
 # relations dropped by the reference's `lightweight` mode
 # (libs/graph/knowledge_graph.py:160-162)
 LIGHTWEIGHT_EXCLUDED = ("rdfs:label", "foaf:name", "dcterms:description")
@@ -366,18 +368,5 @@ class KnowledgeGraph:
         )
         if exclude is not None:
             pool = pool.join(exclude, "h", "left_anti")
-        if rank_on == "md5":
-            key = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("h").cast("string"), F.lit(seed))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-        elif rank_on == "xxhash64":
-            key = F.xxhash64(F.col("h"), F.lit(seed))
-        else:
-            raise ValueError(f"rank_on must be 'xxhash64' or 'md5', got {rank_on!r}")
+        key = seeded_hash(F.col("h"), rank_on, seed, name="rank_on")
         return pool.orderBy(key, F.col("h")).limit(n).select("h")

@@ -28,16 +28,12 @@ from sparktax.link.minhash import fuzzy_match_pairs
 
 def canonical_entity_map(
     entities: DataFrame,
-    fuzzy: bool = True,
     jaccard_threshold: float = 0.75,
-    protect: DataFrame | None = None,
     fuzzy_max_digit_ratio: float | None = None,
-    **lsh_kw,
 ) -> DataFrame:
     """→ (id, canonical_id) for every entity (identity rows included).
 
-    ``entities``: (id, uri). ``protect``: optional (id) DataFrame of
-    entities excluded from merging (e.g. class/sentinel nodes).
+    ``entities``: (id, uri).
 
     ``fuzzy_max_digit_ratio``: when set, uris whose digit fraction exceeds
     it are EXCLUDED from the fuzzy lane (they still exact-merge). ID-like
@@ -49,12 +45,8 @@ def canonical_entity_map(
     canonicalization budget there. Merging ids by string similarity would
     also be semantically wrong, so skipping them loses nothing.
     """
-    pool = entities
-    if protect is not None:
-        pool = pool.join(protect.select("id"), "id", "left_anti")
-
     exact = (
-        pool.select("id", normalize_surface(F.col("uri")).alias("_key"))
+        entities.select("id", normalize_surface(F.col("uri")).alias("_key"))
         .groupBy("_key")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)
@@ -63,20 +55,15 @@ def canonical_entity_map(
             F.element_at("ids", 1).alias("dst"),
         )
     )
-    edges = exact
-    if fuzzy:
-        fpool = pool
-        if fuzzy_max_digit_ratio is not None:
-            n_digits = F.length(F.regexp_replace(F.col("uri"), "[^0-9]", ""))
-            fpool = pool.filter(
-                n_digits <= fuzzy_max_digit_ratio * F.length("uri")
-            )
-        fz = fuzzy_match_pairs(
-            fpool, "uri", "id", threshold=jaccard_threshold, **lsh_kw
-        ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        edges = exact.unionByName(fz)
+    fpool = entities
+    if fuzzy_max_digit_ratio is not None:
+        n_digits = F.length(F.regexp_replace(F.col("uri"), "[^0-9]", ""))
+        fpool = entities.filter(n_digits <= fuzzy_max_digit_ratio * F.length("uri"))
+    fz = fuzzy_match_pairs(fpool, "uri", "id", threshold=jaccard_threshold).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    )
 
-    comp = connected_components(edges)  # (node, component)
+    comp = connected_components(exact.unionByName(fz))  # (node, component)
     merged = comp.select(
         F.col("node").alias("id"), F.col("component").alias("canonical_id")
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparktax.hashing import check_hasher, seeded_hash
+
 # 2^31-1: keeps aᵢ·x + bᵢ < 2^62 — no int64 overflow (Spark 4 ANSI mode
 # errors on overflow, so the hash arithmetic must provably fit).
 _MERSENNE = (1 << 31) - 1
@@ -76,16 +78,11 @@ def _base_hash(col, hasher: str):
     """Non-negative base hash of a shingle, mod p.
 
     ``xxhash64`` (default) is the scale path — one JVM intrinsic per
-    shingle. ``md5`` is the oracle path: the first 15 hex chars of md5
-    read as a 60-bit integer (``conv`` is exact there), which DuckDB can
-    reproduce with the strpos hex trick — same device as the SimHash
-    oracle. Signatures become bit-identical across engines; everything
-    downstream (permutations, banding, verify) is plain arithmetic."""
-    if hasher == "md5":
-        raw = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    else:
-        raw = F.xxhash64(col)
-    return F.pmod(raw, F.lit(_MERSENNE))
+    shingle. ``md5`` is the oracle path (:func:`sparktax.hashing.md5_60`):
+    signatures become bit-identical across engines; everything downstream
+    (permutations, banding, verify) is plain arithmetic. Any other value
+    raises."""
+    return F.pmod(seeded_hash(col, hasher), F.lit(_MERSENNE))
 
 
 def minhash_signatures(
@@ -115,9 +112,11 @@ def band_buckets(
     """(id, band, bucket) — the LSH blocking projection of a signature
     table. Bucket keys are xxhash64 of the band slice (8-byte shuffle
     keys) by default; ``hasher="md5"`` uses the raw comma-joined slice
-    string — bigger keys, but engine-portable (the oracle path). Shared
-    by the self-join candidate generator below and the incremental-dedup
-    index (new-batch buckets equi-join STORED buckets)."""
+    string — bigger keys, but engine-portable (the oracle path); any
+    other ``hasher`` raises. Shared by the self-join candidate generator
+    below and the incremental-dedup index (new-batch buckets equi-join
+    STORED buckets)."""
+    check_hasher(hasher)
     r_expr = (F.size("sig") / F.lit(bands)).cast("int")
 
     def _bucket(bidx):

@@ -35,7 +35,6 @@ def run_pipeline(
     workdir: str,
     isa_uri: str = "is_a",
     fuzzy_threshold: float = 0.85,
-    edge_partitions: int | None = None,
     taxonomy: bool = True,
     encode_method: str = "hash",
     expressive: bool = False,
@@ -98,7 +97,6 @@ def run_pipeline(
     edges = ck.stage(
         "40_edges",
         lambda: rewrite_triples(triples, mapping).repartition(
-            *([edge_partitions] if edge_partitions else []),
             F.col("h"),
             F.pmod(F.xxhash64("t"), F.lit(8)),
         ),

@@ -20,9 +20,8 @@ vectors touched until an optional exact rerank of the few survivors.
 Spark shapes (all JVM-side joins/aggregates, no cross join anywhere):
 
 - codebook training: driver-side numpy Lloyd on a seeded hash-ranked
-  BOUNDED sample (the proven ``train_ivf_centroids`` pattern —
-  sparktax/simsearch.py:290); codebooks are tiny literals shipped to
-  executors.
+  BOUNDED sample (the proven ``simsearch.train_ivf_centroids`` pattern);
+  codebooks are tiny literals shipped to executors.
 - encoding: one narrow pass — Arrow-batched BLAS argmin per subspace
   (``mode="float"``), or the all-integer posexplode + broadcast-join +
   codegen-hash-aggregate shape (``mode="md5int"``) that makes the codes
@@ -33,9 +32,9 @@ Spark shapes (all JVM-side joins/aggregates, no cross join anywhere):
   on (sub, code) → partial-aggregated sum per (query, doc). The corpus
   side carries ONLY (id, code) pairs through the scan — at 10⁹ docs the
   scan reads the ~100 GB code table, never the 3 TB vectors.
-- IVF composition (:func:`ivfpq_topk`): the existing coarse-cell
-  equi-join prunes candidates to ``n_probe/n_cells`` of the corpus
-  BEFORE any ADC scoring. Non-residual variant (codes quantize the raw
+- IVF composition (:func:`ivfpq_topk`): the coarse-cell equi-join
+  (``simsearch.ivf_candidates``) prunes candidates to ``n_probe/n_cells``
+  of the corpus BEFORE any ADC scoring. Non-residual variant (codes quantize the raw
   vector, not the cell residual): FAISS's ``by_residual=False`` — chosen
   so the same code table serves every cell and the oracle stays
   integer-exact; documented deviation from the TPAMI default.
@@ -53,7 +52,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
-from sparktax.simsearch import md5_rank_expr, pair_cosine
+from sparktax.hashing import seeded_hash
+from sparktax.simsearch import (
+    ivf_candidates,
+    rerank_cosine,
+    top_k,
+    train_ivf_centroids,
+)
 
 __all__ = [
     "train_pq_codebooks",
@@ -106,12 +111,7 @@ def train_pq_codebooks(
     subspaces even on degenerate data. ``rank_on="md5"`` orders the
     sample by the engine-portable md5 rank (hashlib-replicable), making
     the codebooks reproducible outside Spark — the oracle lane."""
-    if rank_on == "md5":
-        key = md5_rank_expr(F.col(id_col), seed)
-    elif rank_on == "xxhash64":
-        key = F.xxhash64(F.col(id_col), F.lit(seed))
-    else:
-        raise ValueError(f"rank_on must be 'xxhash64' or 'md5', got {rank_on!r}")
+    key = seeded_hash(F.col(id_col), rank_on, seed, name="rank_on")
     pdf = (
         embeddings.orderBy(key, F.col(id_col)).limit(sample).select(vec_col).toPandas()
     )
@@ -294,7 +294,7 @@ def _adc_score(codes: DataFrame, lut: DataFrame) -> DataFrame:
     )
 
 
-def _exact_rerank(
+def _top_k_reranked(
     approx: DataFrame,
     embeddings: DataFrame,
     queries: DataFrame,
@@ -303,34 +303,14 @@ def _exact_rerank(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Keep each query's top-``rerank`` ADC candidates, fetch ONLY their
-    raw vectors (equi-join on id — at 10⁹ docs this touches ``rerank``
-    rows per query, not the corpus), and re-rank by exact rounded
-    cosine."""
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        approx.withColumn("_ark", F.row_number().over(w_adc))
-        .filter(F.col("_ark") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv = broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    )
-    cv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    scored = pair_cosine(
-        shortlist.join(qv, "query_id").join(cv, "neighbor_id"),
-        "_qv",
-        "_cv",
-        ["query_id", "neighbor_id"],
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    )
+    """Top-``k`` of the ADC scores. With ``rerank`` > 0: keep each
+    query's top-``rerank`` ADC candidates, fetch ONLY their raw vectors
+    (equi-join on id — at 10⁹ docs this touches ``rerank`` rows per
+    query, not the corpus), and rank by exact rounded cosine instead."""
+    if rerank > 0:
+        shortlist = top_k(approx, rerank).select("query_id", "neighbor_id")
+        approx = rerank_cosine(shortlist, embeddings, queries, id_col, vec_col)
+    return top_k(approx, k)
 
 
 def pq_topk(
@@ -375,14 +355,7 @@ def pq_topk(
         codes = pq_encode(embeddings, codebooks, id_col, vec_col, mode)
     lut = _adc_lut(queries, codebooks, id_col, vec_col, mode)
     approx = _adc_score(codes, lut)
-    if rerank > 0:
-        return _exact_rerank(
-            approx, embeddings, queries, k, rerank, id_col, vec_col
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return approx.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k_reranked(approx, embeddings, queries, k, rerank, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -412,13 +385,6 @@ def ivfpq_topk(
 
     Exactness anchor (tested): ``n_probe=n_cells`` + ``rerank`` ≥
     candidate count degrades to the exact rounded-cosine top-k."""
-    from sparktax.simsearch import (
-        _quantized_cells,
-        _top_cells_udf,
-        ivf_assign,
-        train_ivf_centroids,
-    )
-
     rank_on = "md5" if mode == "md5int" else "xxhash64"
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -430,29 +396,8 @@ def ivfpq_topk(
             embeddings, m_sub, n_codes, sample, seed=seed,
             id_col=id_col, vec_col=vec_col, rank_on=rank_on,
         )
-    if mode == "md5int":
-        corpus_cells = _quantized_cells(
-            embeddings, centroids, 1, id_col, vec_col
-        ).withColumnRenamed("id", "neighbor_id")
-        query_cells = _quantized_cells(
-            queries, centroids, n_probe, id_col, vec_col
-        ).withColumnRenamed("id", "query_id")
-    elif mode == "float":
-        corpus_cells = ivf_assign(
-            embeddings, centroids, id_col, vec_col
-        ).withColumnRenamed("id", "neighbor_id")
-        probe_cells = _top_cells_udf(centroids, n_probe)
-        query_cells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-        )
-    else:
-        raise ValueError(f"mode must be 'float' or 'md5int', got {mode!r}")
-    cand = (
-        corpus_cells.join(broadcast(query_cells), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cand = ivf_candidates(
+        embeddings, queries, centroids, n_probe, mode, id_col, vec_col
     )
     codes = pq_encode(embeddings, codebooks, id_col, vec_col, mode)
     lut = _adc_lut(queries, codebooks, id_col, vec_col, mode)
@@ -465,11 +410,4 @@ def ivfpq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("w").alias("score"))
     )
-    if rerank > 0:
-        return _exact_rerank(
-            approx, embeddings, queries, k, rerank, id_col, vec_col
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return approx.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k_reranked(approx, embeddings, queries, k, rerank, id_col, vec_col)

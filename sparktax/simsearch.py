@@ -1,10 +1,20 @@
 """Similarity search over an embedding column (array<float>).
 
-* :func:`cosine_topk` — brute-force exact top-k, pure Catalyst
-  (``zip_with`` dot product + window rank). Baseline and oracle target.
+* :func:`cosine_topk` — brute-force exact top-k (codegen'd
+  :func:`pair_cosine` + window rank). Baseline and oracle target.
 * :func:`lsh_topk` — random-hyperplane (sign-LSH) bucketed ANN: linear
   signature pass, candidates from Hamming-band equi-join, exact rerank.
-  The 100 TB path: no cross join ever materializes.
+* :func:`ivf_topk` — IVF ANN over k-means cells; :func:`materialize_ivf_index`
+  persists the inverted lists bucketed by cell and :func:`ivf_topk_indexed`
+  probes them with scan-time bucket pruning.
+* :func:`embedding_near_duplicates`, :func:`semantic_dedup` — near-dup
+  pairs and SemDeDup over the same blocking devices.
+
+Every ANN path (here and in :mod:`sparktax.pq`) is one chain: assign
+(:func:`top_cells`) → candidates (:func:`ivf_candidates` or sign-LSH bands)
+→ exact rerank (:func:`rerank_cosine`) → per-query :func:`top_k`. No cross
+join ever materializes. ``mode``/``assign_mode="md5int"`` swaps the float
+assignment for an all-integer one DuckDB replays bit-for-bit.
 
 Scores are rounded to 6 decimals so results hash identically across
 engines (float-sum order differences live below that).
@@ -19,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
+
+from sparktax.hashing import seeded_hash
 
 
 def _dot(a, b):
@@ -98,12 +110,35 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
     pairs = cand.join(q, F.col("neighbor_id") != F.col("query_id"))
-    scored = pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
+    return top_k(pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"]), k)
+
+
+def top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best ``(query_id, neighbor_id, score)`` rows,
+    numbered 1..k in ``rank`` — ties break toward the smaller
+    neighbor_id. Spark plans the ``rank <= k`` filter as a Partial+Final
+    ``WindowGroupLimit``, so only ≤ k rows per query and partition cross
+    the exchange."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def rerank_cosine(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id, score) — exact rounded cosine of each
+    candidate pair. Query vectors broadcast; candidate vectors are fetched
+    by id equi-join, so only candidates touch the raw corpus vectors."""
+    qv = broadcast(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     )
+    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    pairs = cand.join(qv, "query_id").join(cv, "neighbor_id")
+    return pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
 
 
 def hyperplane_signatures(
@@ -205,52 +240,45 @@ def lsh_topk(
     """Approximate top-k: candidates = corpus vectors sharing ≥1 signature
     band with the query (Hamming-style blocking), exact cosine rerank on
     candidates only."""
-    bits = n_planes // n_bands
-    mask = (1 << bits) - 1
 
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.shiftrightunsigned("sig", bits * i)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("key"),
-                        )
-                        for i in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("id", "bk.band", "bk.key")
+    def banded(df: DataFrame) -> DataFrame:
+        sigs = hyperplane_signatures(
+            df, dim, n_planes, seed, id_col, vec_col, plane_gen
+        )
+        return _sig_bands(sigs, n_planes, n_bands)
 
-    corpus_sig = banded(
-        hyperplane_signatures(
-            embeddings, dim, n_planes, seed, id_col, vec_col, plane_gen
-        )
-    )
-    query_sig = banded(
-        hyperplane_signatures(
-            queries, dim, n_planes, seed, id_col, vec_col, plane_gen
-        )
-    )
-    cand_ids = (
-        corpus_sig.alias("c")
-        .join(broadcast(query_sig.alias("q")), ["band", "key"])
+    cand = (
+        banded(embeddings).alias("c")
+        .join(broadcast(banded(queries).alias("q")), ["band", "key"])
         .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .distinct()
     )
-    qv = broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    )
-    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    pairs = cand_ids.join(qv, "query_id").join(cv, "neighbor_id")
-    scored = pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return top_k(rerank_cosine(cand, embeddings, queries, id_col, vec_col), k)
+
+
+def _sig_bands(sigs: DataFrame, n_planes: int, n_bands: int) -> DataFrame:
+    """(id, band, key) — each packed sign signature cut into ``n_bands``
+    slices of ``n_planes // n_bands`` bits; vectors sharing any
+    (band, key) become candidates."""
+    bits = n_planes // n_bands
+    mask = (1 << bits) - 1
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.shiftrightunsigned("sig", bits * i)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("key"),
+                    )
+                    for i in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("id", "bk.band", "bk.key")
 
 
 def _lloyd(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
@@ -273,20 +301,6 @@ def _lloyd(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
     return C
 
 
-def md5_rank_expr(col, seed: int):
-    """Exact 60-bit integer of the first 15 hex chars of
-    ``md5(col || ':' || seed)`` — the engine-portable seeded rank (DuckDB
-    replicates it via the strpos hex device; hashlib replicates it in
-    Python)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", col.cast("string"), F.lit(seed))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 def train_ivf_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -304,12 +318,7 @@ def train_ivf_centroids(
     literal expressions. ``rank_on="md5"`` orders the sample by the
     engine-portable md5 rank (hashlib-replicable), making the trained
     centroids reproducible outside Spark."""
-    if rank_on == "md5":
-        key = md5_rank_expr(F.col(id_col), seed)
-    elif rank_on == "xxhash64":
-        key = F.xxhash64(F.col(id_col), F.lit(seed))
-    else:
-        raise ValueError(f"rank_on must be 'xxhash64' or 'md5', got {rank_on!r}")
+    key = seeded_hash(F.col(id_col), rank_on, seed, name="rank_on")
     pdf = (
         embeddings.orderBy(key, F.col(id_col))
         .limit(sample)
@@ -340,21 +349,6 @@ def _top_cells_udf(centroids: np.ndarray, n: int):
         return pd.Series(list(top))
 
     return _cells
-
-
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell) — each vector's nearest-centroid cell. A narrow
-    Arrow-batched matmul pass; no shuffle."""
-    cells = _top_cells_udf(centroids, 1)
-    return embeddings.select(
-        F.col(id_col).alias("id"),
-        F.element_at(cells(F.col(vec_col)), 1).alias("cell"),
-    )
 
 
 def _quantized_cells(
@@ -398,6 +392,57 @@ def _quantized_cells(
     )
 
 
+def top_cells(
+    df: DataFrame,
+    centroids: np.ndarray,
+    n: int,
+    mode: str = "float",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, cell) — each vector's ``n`` highest-dot centroid cells, one
+    row per cell. ``mode="float"``: one narrow Arrow-batched matmul pass
+    (:func:`_top_cells_udf`) + explode. ``mode="md5int"``: the all-integer
+    assignment (:func:`_quantized_cells`) DuckDB replays bit-for-bit. Both
+    break ties toward the higher cell index."""
+    if mode == "md5int":
+        return _quantized_cells(df, centroids, n, id_col, vec_col)
+    if mode != "float":
+        raise ValueError(f"mode must be 'float' or 'md5int', got {mode!r}")
+    cells = _top_cells_udf(centroids, n)(F.col(vec_col))
+    # top-1 stays a projection: unlike a generator, Catalyst prunes it when
+    # the cell is unused (semantic_dedup's kept-id output), skipping the UDF
+    cell = F.element_at(cells, 1) if n == 1 else F.explode(cells)
+    return df.select(F.col(id_col).alias("id"), cell.alias("cell"))
+
+
+def ivf_candidates(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    centroids: np.ndarray,
+    n_probe: int,
+    mode: str = "float",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id) — every other corpus vector whose cell is
+    among the query's ``n_probe`` closest cells: the corpus (id, cell)
+    pairs equi-join a broadcast query-probe table on ``cell``, so the
+    candidate volume is ~n_probe/n_cells of the corpus per query."""
+    corpus_cells = top_cells(
+        embeddings, centroids, 1, mode, id_col, vec_col
+    ).withColumnRenamed("id", "neighbor_id")
+    query_cells = top_cells(
+        queries, centroids, n_probe, mode, id_col, vec_col
+    ).withColumnRenamed("id", "query_id")
+    return (
+        corpus_cells.join(broadcast(query_cells), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+
+
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -424,7 +469,7 @@ def ivf_topk(
 
     ``assign_mode="float"`` (production): BLAS matmul assignment.
     ``assign_mode="md5int"``: all-integer quantized assignment
-    (:func:`_quantized_cells`) — with md5-rank-trained centroids the whole
+    (:func:`top_cells`) — with md5-rank-trained centroids the whole
     probe becomes engine-reproducible (the DuckDB oracle path)."""
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -436,40 +481,10 @@ def ivf_topk(
             vec_col=vec_col,
             rank_on="md5" if assign_mode == "md5int" else "xxhash64",
         )
-    if assign_mode == "md5int":
-        corpus_cells = _quantized_cells(
-            embeddings, centroids, 1, id_col, vec_col
-        ).withColumnRenamed("id", "neighbor_id")
-        query_cells = _quantized_cells(
-            queries, centroids, n_probe, id_col, vec_col
-        ).withColumnRenamed("id", "query_id")
-    elif assign_mode == "float":
-        corpus_cells = ivf_assign(
-            embeddings, centroids, id_col, vec_col
-        ).withColumnRenamed("id", "neighbor_id")
-        probe_cells = _top_cells_udf(centroids, n_probe)
-        query_cells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-        )
-    else:
-        raise ValueError(
-            f"assign_mode must be 'float' or 'md5int', got {assign_mode!r}"
-        )
-    cand_ids = (
-        corpus_cells.join(broadcast(query_cells), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cand = ivf_candidates(
+        embeddings, queries, centroids, n_probe, assign_mode, id_col, vec_col
     )
-    qv = broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    )
-    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    pairs = cand_ids.join(qv, "query_id").join(cv, "neighbor_id")
-    scored = pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return top_k(rerank_cosine(cand, embeddings, queries, id_col, vec_col), k)
 
 
 def materialize_ivf_index(
@@ -487,7 +502,7 @@ def materialize_ivf_index(
     per-query probe prunes to the probed cells at SCAN time: a literal
     ``cell IN (...)`` filter on the bucket column makes Spark read only
     the matching bucket files (``SelectedBucketsCount: m out of n`` in
-    the plan — asserted by scripts/plan_audit.py and
+    the plan — asserted by tests/test_plan_shape.py and
     tests/test_ivf_index.py). At 10⁹+ vectors this is the difference
     between scanning n_probe/n_cells of the corpus and scanning all of
     it per query batch; the build cost is one assignment pass + one
@@ -506,25 +521,24 @@ def materialize_ivf_index(
     name = f"sparktax_ivf_{tag}"
     done = _os.path.exists(_os.path.join(dirpath, "_SUCCESS"))
     if not (done and spark.catalog.tableExists(name)):
-        if assign_mode == "md5int":
-            cells = _quantized_cells(embeddings, centroids, 1, id_col, vec_col)
-            rows = cells.join(
-                embeddings.select(
-                    F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-                ),
-                "id",
-            )
-        elif assign_mode == "float":
+        if assign_mode == "float":
+            # not top_cells: this pass writes the vector payload alongside
+            # the cell, and going through top_cells would join the payload
+            # back — a corpus-sized join added to the index build
             top1 = _top_cells_udf(centroids, 1)
-            # one narrow pass: id, cell, payload — no join at build time
             rows = embeddings.select(
                 F.col(id_col).alias("id"),
                 F.element_at(top1(F.col(vec_col)), 1).alias("cell"),
                 F.col(vec_col).alias("vec"),
             )
         else:
-            raise ValueError(
-                f"assign_mode must be 'float' or 'md5int', got {assign_mode!r}"
+            rows = top_cells(
+                embeddings, centroids, 1, assign_mode, id_col, vec_col
+            ).join(
+                embeddings.select(
+                    F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+                ),
+                "id",
             )
         write_bucketed(
             rows, name, dirpath, "cell",
@@ -553,20 +567,9 @@ def ivf_topk_indexed(
     the per-query (cell → query) map then broadcasts against the pruned
     scan. A corpus vector lives in exactly one cell, so no distinct is
     needed on the candidate pairs."""
-    if assign_mode == "md5int":
-        qcells = _quantized_cells(
-            queries, centroids, n_probe, id_col, vec_col
-        ).withColumnRenamed("id", "query_id")
-    elif assign_mode == "float":
-        probe = _top_cells_udf(centroids, n_probe)
-        qcells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe(F.col(vec_col))).alias("cell"),
-        )
-    else:
-        raise ValueError(
-            f"assign_mode must be 'float' or 'md5int', got {assign_mode!r}"
-        )
+    qcells = top_cells(
+        queries, centroids, n_probe, assign_mode, id_col, vec_col
+    ).withColumnRenamed("id", "query_id")
     probed = sorted(
         r.cell for r in qcells.select("cell").distinct().collect()
     )
@@ -584,9 +587,7 @@ def ivf_topk_indexed(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     )
     pairs = cand.join(qv, "query_id")
-    scored = pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return top_k(pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"]), k)
 
 
 def embedding_near_duplicates(
@@ -624,25 +625,8 @@ def embedding_near_duplicates(
         )
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
-    bits = n_planes // n_bands
-    mask = (1 << bits) - 1
     sigs = hyperplane_signatures(e, dim, n_planes, seed, "_id", "_v", plane_gen)
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("sig", bits * i)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
+    banded = _sig_bands(sigs, n_planes, n_bands)
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), ["band", "key"])
@@ -738,10 +722,10 @@ def semantic_dedup(
     ``n_cells`` scales WITH the corpus (the paper uses 50k clusters for
     LAION-440M) to keep per-cell candidate volume bounded; the join
     shuffles each side once on ``cell``, and AQE splits any skewed cell.
-    Assignment is one narrow pass (BLAS matmul in ``assign_mode="float"``);
-    ``assign_mode="md5int"`` swaps in md5-rank-trained centroids +
-    all-integer quantized assignment (:func:`_quantized_cells`) so a DuckDB
-    oracle reproduces cells, cosines, and the kept set bit-for-bit."""
+    Assignment is one narrow pass (:func:`top_cells`; BLAS matmul in
+    ``assign_mode="float"``); ``assign_mode="md5int"`` swaps in
+    md5-rank-trained centroids + all-integer quantized assignment so a
+    DuckDB oracle reproduces cells, cosines, and the kept set bit-for-bit."""
     if centroids is None:
         centroids = train_ivf_centroids(
             embeddings,
@@ -752,14 +736,7 @@ def semantic_dedup(
             vec_col=vec_col,
             rank_on="md5" if assign_mode == "md5int" else "xxhash64",
         )
-    if assign_mode == "md5int":
-        cells = _quantized_cells(embeddings, centroids, 1, id_col, vec_col)
-    elif assign_mode == "float":
-        cells = ivf_assign(embeddings, centroids, id_col, vec_col)
-    else:
-        raise ValueError(
-            f"assign_mode must be 'float' or 'md5int', got {assign_mode!r}"
-        )
+    cells = top_cells(embeddings, centroids, 1, assign_mode, id_col, vec_col)
     e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
     withv = cells.join(e, "id")
     if keep == "first":

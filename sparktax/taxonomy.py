@@ -1,20 +1,12 @@
 """Taxonomy edges: closure, reduction round-trip partner, evaluation.
 
-Two lanes, same semantics:
-
-* driver lane (sets of (child, parent) tuples — taxonomies are ≤ hundreds
-  of edges, reference data/taxonomy/full.txt = 589);
-* DataFrame lane for API parity at scale: iterative self-join closure with
-  ``localCheckpoint`` (Catalyst can't plan loops), evaluation via
-  semi-join counts.
+Driver-side sets of (child, parent) tuples — taxonomies are ≤ hundreds of
+edges (reference data/taxonomy/full.txt = 589).
 
 Reference: libs/taxonomy/evaluation.py:4-55.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 # ------------------------------------------------------------------ driver
@@ -58,42 +50,3 @@ def evaluate_full(
     direct = evaluate(true_axioms, pred_axioms)
     closed = evaluate(transitive_closure(set(true_axioms)), transitive_closure(set(pred_axioms)))
     return direct, closed
-
-
-def roots_of(axioms: set[tuple]) -> set:
-    children = {c for c, _ in axioms}
-    parents = {p for _, p in axioms}
-    return parents - children
-
-
-# --------------------------------------------------------------- DataFrame
-def closure_df(edges: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Transitive closure of (child, parent) edges by iterated doubling:
-    O(log(depth)) joins, checkpointed each round."""
-    closure = edges.select("child", "parent").distinct().localCheckpoint()
-    frontier = closure
-    for _ in range(max_iter):
-        stepped = (
-            frontier.alias("f")
-            .join(closure.alias("e"), F.col("f.parent") == F.col("e.child"))
-            .select(F.col("f.child").alias("child"), F.col("e.parent").alias("parent"))
-            .join(closure, ["child", "parent"], "left_anti")
-            .distinct()
-            .localCheckpoint()
-        )
-        if stepped.limit(1).count() == 0:
-            break
-        closure = closure.union(stepped).localCheckpoint()
-        frontier = stepped
-    return closure
-
-
-def evaluate_df(true_edges: DataFrame, pred_edges: DataFrame) -> tuple[float, float, float]:
-    t = true_edges.select("child", "parent").distinct()
-    p = pred_edges.select("child", "parent").distinct()
-    tp = p.join(t, ["child", "parent"], "left_semi").count()
-    np_, nt = p.count(), t.count()
-    prec = tp / np_ if np_ else 0.0
-    rec = tp / nt if nt else 0.0
-    f1 = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
-    return prec, rec, f1

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparktax.hashing import md5_32, md5_60, md5_rank_expr, seeded_hash
 from sparktax.link.minhash import exact_jaccard, fuzzy_match_pairs, shingle
 
 # --------------------------------------------------------------------------
@@ -135,7 +136,6 @@ def dedup_near(
     text_col: str = "text",
     id_col: str = "doc_id",
     hasher: str = "xxhash64",
-    seed: int = 42,
 ) -> DataFrame:
     """Whole-corpus exact + near dedup: exact lane first (min id per
     normalized fingerprint), then drop every exact-survivor that
@@ -163,7 +163,6 @@ def dedup_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     hasher: str = "xxhash64",
-    seed: int = 42,
     near: bool = True,
 ) -> DataFrame:
     """Dedup ``new_batch`` against a PERSISTED index and append to it —
@@ -255,7 +254,7 @@ def dedup_incremental(
     # same rows re-aggregated as sorted hash arrays (array_sort at the
     # aggregation boundary — collect_set order is task-arrival-dependent)
     sh = shingle(ex.select(F.col(id_col).alias("id"), text_col), text_col, "id", n=n)
-    sigs = minhash_signatures(sh, k=k, seed=seed, hasher=hasher)
+    sigs = minhash_signatures(sh, k=k, hasher=hasher)
     sh_sets = sh.groupBy("id").agg(
         F.array_sort(F.collect_set(F.xxhash64("shingle"))).alias("sh")
     )
@@ -449,7 +448,7 @@ def winnow_fingerprints(
     pos_gram = documents.select(
         F.col(id_col).alias("doc_id"), F.posexplode(grams).alias("i", "gram")
     )
-    h = F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
+    h = md5_32(F.col("gram"))
     hashed = pos_gram.select("doc_id", "i", h.alias("h"))
     win = (
         Window.partitionBy("doc_id")
@@ -765,7 +764,6 @@ def pack_sequences(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_ranges: int | None = None,
-    materialize: bool = True,
     carry_cols: "list[str] | None" = None,
     n_tokens_col: str | None = None,
 ) -> DataFrame:
@@ -791,14 +789,12 @@ def pack_sequences(
     from :func:`sparktax.bpe.encode_bpe` — see
     :func:`prepare_training_corpus`'s ``bpe_merges``).
 
-    ``materialize`` (default True): the operator needs THREE passes over
-    ``(id, n_tokens)`` — min/max of the id domain, per-range totals, and
-    the final read under the window. Everything derives from that tiny
-    two-long projection, so it is ``localCheckpoint``-ed eagerly and the
-    (possibly expensive — a mix→shuffle chain, a tokenizer) upstream
-    plan executes exactly ONCE instead of three times. Set False only
-    when the input is already a cheap materialized scan and you'd
-    rather re-read it than spend 16 bytes/row of block-manager space.
+    The operator needs THREE passes over ``(id, n_tokens)`` — min/max of
+    the id domain, per-range totals, and the final read under the window.
+    Everything derives from that tiny two-long projection, so it is
+    ``localCheckpoint``-ed eagerly and the (possibly expensive — a
+    mix→shuffle chain, a tokenizer) upstream plan executes exactly ONCE
+    instead of three times.
 
     ``carry_cols``: extra input columns passed through to the output
     unchanged (rides the materialized base — NO re-execution of the
@@ -813,8 +809,7 @@ def pack_sequences(
         # array-filter lambda
         n = F.regexp_count(txt, F.lit(r"\S+")).cast("long")
     base = documents.select(F.col(id_col), *carry, n.alias("n_tokens"))
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    base = base.localCheckpoint(eager=True)
     lo, hi = base.agg(
         F.min(id_col).cast("long"), F.max(id_col).cast("long")
     ).first()
@@ -966,19 +961,7 @@ def mix_corpora(
     rows = [(d, *mix_weight_params(w)) for d, w in sorted(weights.items())]
     wdf = spark.createDataFrame(rows, "_dom string, _base long, _thresh long")
     dbase, dthresh = mix_weight_params(default_weight)
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col(id_col).cast("string"), F.lit(str(seed))
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = md5_rank_expr(F.col(id_col), str(seed))
     joined = documents.join(
         F.broadcast(wdf), documents[domain_col] == wdf["_dom"], "left"
     )
@@ -1026,21 +1009,11 @@ def training_order(
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     keys = [id_col, *(extra_key_cols or [])]
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[F.col(k).cast("string") for k in keys],
-                    F.lit(str(seed)),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = md5_60(
+        F.concat_ws(
+            ":", *[F.col(k).cast("string") for k in keys], F.lit(str(seed))
+        )
+    )
     tagged = documents.withColumn("_u", u).withColumn(
         "_shard", (F.col("_u") % n_shards).cast("long")
     )
@@ -1087,19 +1060,7 @@ def split_corpus(
         raise ValueError(f"fractions must sum to 1, got {total}")
     if any(f < 0 for f in fractions.values()):
         raise ValueError("fractions must be >= 0")
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col(id_col).cast("string"), F.lit(str(seed))
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = md5_rank_expr(F.col(id_col), str(seed))
     expr, acc = None, 0.0
     names = sorted(fractions)
     for name in names[:-1]:
@@ -1355,15 +1316,6 @@ def dedup_spans(
     ``doc_id`` < 2⁴³ (the composite first-occurrence key) — chunk longer
     docs first (:func:`chunk_documents`). ``hasher="md5"`` uses the
     md5-prefix hash DuckDB replays bit-for-bit."""
-    if hasher == "md5":
-        def whash(s):
-            return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    elif hasher == "xxhash64":
-        def whash(s):
-            return F.xxhash64(s)
-    else:
-        raise ValueError(f"hasher must be 'xxhash64' or 'md5', got {hasher!r}")
-
     toks = F.filter(
         tokens_expr(F.coalesce(F.col(text_col), F.lit(""))), lambda t: t != ""
     )
@@ -1384,7 +1336,7 @@ def dedup_spans(
     wins = documents.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(wtexts).alias("pos", "_wt"),
-    ).select("doc_id", "pos", whash(F.col("_wt")).alias("whash"))
+    ).select("doc_id", "pos", seeded_hash(F.col("_wt"), hasher).alias("whash"))
     key = F.col("doc_id") * (1 << 20) + F.col("pos")
     firsts = (
         wins.groupBy("whash")
@@ -1448,13 +1400,9 @@ def dedup_spans(
 
 
 def _gram_bucket(g, buckets: int, hasher: str):
-    if hasher == "md5":
-        return (
-            F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long") % buckets
-        )
-    if hasher == "xxhash64":
-        return F.pmod(F.xxhash64(g), F.lit(buckets))
-    raise ValueError(f"hasher must be 'xxhash64' or 'md5', got {hasher!r}")
+    h = seeded_hash(g, hasher)
+    # md5_60 is non-negative, so plain ``%`` already is the residue
+    return h % buckets if hasher == "md5" else F.pmod(h, F.lit(buckets))
 
 
 def logreg_weights(X, y, epochs: int = 200, lr: float = 0.5, l2: float = 1e-3):
@@ -1502,23 +1450,10 @@ def train_quality_classifier(
     and scoring DuckDB-replayable bit-for-bit."""
     import numpy as np
 
-    def rank_expr(idc):
-        if hasher == "md5":
-            return F.conv(
-                F.substring(
-                    F.md5(F.concat(idc.cast("string"), F.lit(f":{seed}"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-        return F.xxhash64(idc.cast("string"), F.lit(seed))
-
     def featurize(df, label):
         ids = (
             df.select(F.col(id_col).alias("_id"))
-            .withColumn("_rk", rank_expr(F.col("_id")))
+            .withColumn("_rk", seeded_hash(F.col("_id").cast("string"), hasher, seed))
             .orderBy("_rk", "_id")
             .limit(sample)
             .select("_id")
@@ -1724,23 +1659,10 @@ def cluster_documents(
 
     spark = documents.sparkSession
 
-    def rank_expr(idc):
-        if hasher == "md5":
-            return F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", idc.cast("string"), F.lit(seed))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-        return F.xxhash64(idc.cast("string"), F.lit(seed))
-
     if centroids is None:
         ids = (
             documents.select(F.col(id_col).alias("_id"))
-            .withColumn("_rk", rank_expr(F.col("_id")))
+            .withColumn("_rk", seeded_hash(F.col("_id").cast("string"), hasher, seed))
             .orderBy("_rk", "_id")
             .limit(sample)
             .select("_id")

@@ -80,7 +80,7 @@ def test_lsh_topk_recall(spark, emb):
 
 
 def test_ivf_topk_recall_and_exactness_at_full_probe(spark, emb):
-    from sparktax.simsearch import ivf_assign, ivf_topk, train_ivf_centroids
+    from sparktax.simsearch import ivf_topk, top_cells, train_ivf_centroids
 
     queries = emb.orderBy("vec_id").limit(10)
     exact = cosine_topk(emb, queries, k=3).toPandas()
@@ -88,8 +88,8 @@ def test_ivf_topk_recall_and_exactness_at_full_probe(spark, emb):
 
     cents = train_ivf_centroids(emb, n_cells=8, sample=512, seed=3)
     # every vector lands in exactly one cell
-    cells = ivf_assign(emb, cents).toPandas()
-    assert len(cells) == emb.count()
+    cells = top_cells(emb, cents, 1, "float").toPandas()
+    assert len(cells) == emb.count() == cells.id.nunique()
     assert cells.cell.between(0, len(cents) - 1).all()
     assert cells.cell.nunique() > 1  # clustering actually split the corpus
 
