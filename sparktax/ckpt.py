@@ -10,9 +10,14 @@ Iceberg snapshot on clusters with the runtime jar) together with
   a stage is resumed from disk iff its fingerprint matches, so editing
   params invalidates exactly the affected suffix of the DAG;
 * ``rows``, ``n_partitions``, ``bytes``, ``wall_sec``;
-* ``partitions`` — per-partition row counts (the lineage record: which
-  partition produced what, enabling partial-retry audits);
+* ``partitions`` — rows per write task, keyed by the ``part-NNNNN`` number
+  of its non-empty files (the lineage record: which task produced what,
+  enabling partial-retry audits);
 * ``upstream`` — parent stage names.
+
+Bookkeeping runs no Spark job: counts come from the parquet footers and
+the re-read passes the written schema. A rewrite deletes the old manifest
+first and lands the new one atomically, so a failed write never resumes.
 
 Driver-side loop state (queues, thresholds) snapshots as JSON via
 ``save_state``/``load_state`` — together these make multi-stage runs
@@ -25,10 +30,11 @@ import hashlib
 import json
 import os
 import time
+from collections import Counter
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _fingerprint(stage: str, params: dict | None, upstream_fps: list[str]) -> str:
@@ -38,6 +44,12 @@ def _fingerprint(stage: str, params: dict | None, upstream_fps: list[str]) -> st
         default=str,
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
+
+
+def _write_json_atomic(path: str, obj: Any, **kw) -> None:
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f, **kw)
+    os.replace(path + ".tmp", path)
 
 
 class StageCheckpointer:
@@ -91,47 +103,37 @@ class StageCheckpointer:
             return self.spark.read.parquet(data_dir)
 
         df = df_or_fn() if callable(df_or_fn) else df_or_fn
+        if man is not None:
+            os.remove(self._manifest_path(name))
         t0 = time.perf_counter()
         df.write.mode("overwrite").parquet(data_dir)
         wall = time.perf_counter() - t0
 
-        stored = self.spark.read.parquet(data_dir)
-        per_part = (
-            stored.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .toPandas()
-            .sort_values("pid")
-        )
-        nbytes = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(data_dir)
-            for f in fs
-        )
+        files = os.listdir(data_dir)
+        per_task: Counter[int] = Counter()
+        for f in files:  # part-NNNNN-<uuid>-cNNN.<codec>.parquet; NNNNN = write task
+            if f.startswith("part-"):
+                n = pq.read_metadata(os.path.join(data_dir, f)).num_rows
+                per_task[int(f.split("-")[1])] += n
+        parts = {t: n for t, n in sorted(per_task.items()) if n}
         manifest = {
             "stage": name,
             "fingerprint": fp,
             "params": params or {},
             "upstream": upstream,
-            "rows": int(per_part["rows"].sum()),
-            "n_partitions": int(len(per_part)),
-            "bytes": int(nbytes),
+            "rows": sum(parts.values()),
+            "n_partitions": len(parts),
+            "bytes": sum(os.path.getsize(os.path.join(data_dir, f)) for f in files),
             "wall_sec": round(wall, 3),
-            "partitions": {
-                int(r.pid): int(r.rows) for r in per_part.itertuples(index=False)
-            },
+            "partitions": parts,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(self._manifest_path(name), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        return stored
+        _write_json_atomic(self._manifest_path(name), manifest, indent=1, sort_keys=True)
+        return self.spark.read.schema(df.schema).parquet(data_dir)
 
     # ------------------------------------------------------------- state
     def save_state(self, name: str, state: Any) -> None:
-        path = os.path.join(self.base, f"_state_{name}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, default=list)
-        os.replace(tmp, path)
+        _write_json_atomic(os.path.join(self.base, f"_state_{name}.json"), state, default=list)
 
     def load_state(self, name: str, default: Any = None) -> Any:
         try:

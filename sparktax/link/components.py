@@ -7,12 +7,14 @@ critical for canonicalization chains (a~b, b~c, c~d, …).
 
 Each round shuffles once per star step (groupBy on one endpoint) and
 ``localCheckpoint``s to truncate lineage — Catalyst cannot plan loops, so
-the iteration lives here (SURVEY.md §4 custom-work item 2).
+the iteration lives here (SURVEY.md §4 custom-work item 2). The convergence
+signature is observed in each checkpoint job, and the node set comes from the
+checkpointed base, so the caller's edges are read once and no job is extra.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -67,10 +69,11 @@ def connected_components(
     """→ (node, component) where component = min node id in the component.
 
     Nodes appearing only as isolated (self-edge or absent) map to
-    themselves. Convergence: the edge multiset signature
-    (count + xxhash64 sum) is stable across a large+small round. Raises
-    ``RuntimeError`` if that fixpoint is not reached within ``max_iter``
-    rounds — a truncated loop would silently return split components.
+    themselves. Convergence: the edge-set signature (count + bit_xor of
+    xxhash64), observed in each round's checkpoint job, is stable across a
+    large+small round. Raises ``RuntimeError`` if that fixpoint is not
+    reached within ``max_iter`` rounds — a truncated loop would silently
+    return split components.
     """
     # Spark 4.1: localCheckpoint of a plan carrying filter-derived
     # constraints breaks attribute dedup on the subsequent self-union
@@ -86,35 +89,25 @@ def connected_components(
         spark.conf.set(_CONSTRAINT_CONF, prev)
 
 
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """``localCheckpoint`` + the live (u ≠ v, so no null endpoint) edges'
+    signature; bit_xor: order-insensitive and overflow-free (ANSI-safe)."""
+    obs = Observation()
+    h = F.when(F.col("u") != F.col("v"), F.xxhash64("u", "v"))
+    df = df.observe(
+        obs, F.count(h).alias("n"), F.coalesce(F.bit_xor(h), F.lit(0)).alias("h")
+    ).localCheckpoint()
+    return df, (obs.get["n"], obs.get["h"])
+
+
 def _cc_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+    # null endpoints and self-edges stay in the base: they name nodes
+    base, sig = _checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     )
-    # consumed exactly once (the final left join) — checkpointing it would
-    # add an eager materialization action for a plan that is one narrow
-    # scan + union + distinct deep
-    all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-
-    def signature(df: DataFrame) -> tuple[int, int]:
-        # bit_xor: order-insensitive and overflow-free (ANSI-safe)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return int(row["n"]), int(row["h"])
-
-    sig = signature(e)
+    e = base.filter(F.col("u") != F.col("v"))
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        new_sig = signature(e)
+        e, new_sig = _checkpoint(_small_star(_large_star(e)))
         if new_sig == sig:
             break
         sig = new_sig
@@ -126,6 +119,11 @@ def _cc_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     # at fixpoint every edge is (node → component-min)
     assignment = e.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("node"), "component"
+    )
+    all_nodes = (
+        base.select(F.col("u").alias("node"))
+        .union(base.select(F.col("v").alias("node")))
+        .distinct()
     )
     return (
         all_nodes.join(assignment, "node", "left")

@@ -43,6 +43,88 @@ def test_stage_manifest_and_resume(spark, tmp_path):
     assert calls["n"] == 2
 
 
+def test_failed_rewrite_invalidates_manifest(spark, tmp_path):
+    """A recompute that dies mid-write must not leave the old manifest
+    beside the overwritten data dir: the next run recomputes instead of
+    resuming from an empty (or truncated) stage."""
+    base = str(tmp_path / "ck")
+    calls = {"n": 0}
+
+    def make():
+        calls["n"] += 1
+        return spark.range(100)
+
+    StageCheckpointer(spark, base).stage("s", make, params={"v": 1})
+    boom = spark.range(100).select(
+        F.when(F.col("id") == 50, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        StageCheckpointer(spark, base).stage("s", boom, params={"v": 2})
+    df = StageCheckpointer(spark, base).stage("s", make, params={"v": 1})
+    assert calls["n"] == 2
+    assert df.count() == 100
+
+
+def test_stage_bookkeeping_runs_no_job(spark, tmp_path):
+    """A stage costs only its write job: counts come from the parquet
+    footers and the re-read skips schema inference. ``partitions`` is keyed
+    by write task."""
+    ck = StageCheckpointer(spark, str(tmp_path / "ck"))
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-cost", "ckpt-cost")
+    try:
+        ck.stage("r", spark.range(1000, numPartitions=4))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-cost")) == 1
+    man = ck.manifest("r")
+    assert {int(k): v for k, v in man["partitions"].items()} == {
+        0: 250, 1: 250, 2: 250, 3: 250,
+    }
+    assert man["rows"] == 1000 and man["n_partitions"] == 4
+
+    # an empty stage still writes a (row-less) part file; it is not counted
+    ck.stage("empty", spark.range(0))
+    man = ck.manifest("empty")
+    assert man["rows"] == 0 and man["n_partitions"] == 0
+    assert man["partitions"] == {}
+
+
+def test_stage_returns_written_schema(spark, tmp_path):
+    """The schema-given re-read equals what inference over the written
+    files gives (nullability, timestamps, nested and decimal types)."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), nullable=False),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("vec", T.ArrayType(T.FloatType())),
+            T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("price", T.DecimalType(12, 3)),
+        ]
+    )
+    import datetime as dt
+
+    rows = [
+        (1, dt.datetime(2026, 1, 2, 3, 4, 5), [0.5, 1.5], {"a": 1}, Decimal("1.250")),
+        (2, None, None, None, None),
+    ]
+    ck = StageCheckpointer(spark, str(tmp_path / "ck"))
+    df = spark.createDataFrame(rows, schema).withColumn("n", F.col("id") + 1)
+    got = ck.stage("typed", df)
+    data_dir = str(tmp_path / "ck" / "typed" / "data")
+    assert got.schema == spark.read.parquet(data_dir).schema
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(data_dir).collect())
+    )
+
+
 def test_fingerprint_invalidates_downstream(spark, tmp_path):
     base = str(tmp_path / "ck2")
     ck = StageCheckpointer(spark, base)

@@ -3,6 +3,8 @@ canonicalization — each checked against a local pandas/numpy oracle."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -163,6 +165,104 @@ def test_connected_components_raises_without_fixpoint(spark):
         connected_components(df, max_iter=1)
     got = connected_components(df).toPandas()
     assert len(got) == 201 and set(got.component) == {0}
+
+
+def _reference_cc(edges, max_iter: int = 25):
+    """The replaced ``_cc_loop``: a separate signature job per round and the
+    node set re-derived from ``edges`` (a second pass over its lineage)."""
+    from sparktax.link.components import _large_star, _small_star
+
+    spark = edges.sparkSession
+    conf = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(conf, "true")
+    spark.conf.set(conf, "false")
+    try:
+        e = (
+            edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        all_nodes = (
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+
+        def signature(df):
+            row = df.agg(
+                F.count("*").alias("n"),
+                F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+            ).first()
+            return int(row["n"]), int(row["h"])
+
+        sig = signature(e)
+        for _ in range(max_iter):
+            e = _small_star(_large_star(e)).localCheckpoint()
+            new_sig = signature(e)
+            if new_sig == sig:
+                break
+            sig = new_sig
+        else:
+            raise RuntimeError("reference did not converge")
+        assignment = e.groupBy("u").agg(F.min("v").alias("component")).select(
+            F.col("u").alias("node"), "component"
+        )
+        out = all_nodes.join(assignment, "node", "left").select(
+            "node", F.coalesce("component", "node").alias("component")
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    return out
+
+
+def _rows(df) -> Counter:
+    return Counter(map(tuple, df.select("node", "component").collect()))
+
+
+_RNG = np.random.RandomState(7)
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        *[
+            [tuple(map(int, p)) for p in _RNG.randint(0, n, size=(m, 2))]
+            for n, m in ((30, 20), (60, 80), (200, 150))
+        ],
+        [(1, 2), (1, 2), (2, 1), (3, 4), (3, 4), (4, 3)],  # duplicate edges
+        [(5, 5), (5, 6), (7, 7), (8, 8), (8, 9)],  # self-edges
+        [(1, 2), (None, 3), (4, None), (None, None), (2, 3)],  # null endpoints
+        [(0, i) for i in range(1, 12)],  # already-converged star
+        [],  # empty input
+    ],
+    ids=["random30", "random60", "random200", "dups", "self", "nulls", "star", "empty"],
+)
+def test_connected_components_matches_replaced_form(spark, edges):
+    """Differential pin: the observed-signature loop over a checkpointed
+    base returns exactly the replaced form's (node, component) rows."""
+    df = spark.createDataFrame(edges, "src long, dst long")
+    assert _rows(connected_components(df)) == _rows(_reference_cc(df))
+
+
+def test_connected_components_reads_edges_once(spark):
+    """The caller's edge lineage is evaluated once: the node set comes from
+    the checkpointed base, not from a second pass over ``edges``."""
+    n = 300
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        evals.add(1)
+        return x
+
+    df = spark.range(n).select(
+        bump(F.col("id") % 97).alias("src"), ((F.col("id") * 7) % 97).alias("dst")
+    )
+    got = connected_components(df).collect()
+    assert len(got) == 97
+    assert evals.value == n
 
 
 # ---------------------------------------------------------------- canonicalize
