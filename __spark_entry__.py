@@ -596,6 +596,116 @@ _DOCCLUS_BUCKETS = 2048
 _DOCCLUS_SEED = 42
 
 
+# The DuckDB half of the gram-bucket device (doc clusters, the quality
+# classifier, DSIR, perplexity). It replays the engine from SQL and
+# hashlib alone: nothing here imports sparktax's gram helpers.
+
+
+def _gram_bucket_cte(buckets: int) -> str:
+    """CTEs ``toks → grams → bucketed(doc_id, bucket)`` over a
+    ``documents`` relation: the engine's normalization, word 1–2-grams and
+    md5-60 bucketing into ``buckets``."""
+    norm = _NORM.format(c="coalesce(text, '')")
+    return f"""
+        toks AS (
+            SELECT doc_id,
+                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
+            FROM documents
+        ),
+        grams AS (
+            SELECT doc_id,
+                   unnest(t || list_transform(range(1, len(t)),
+                          i -> t[i] || ' ' || t[i + 1])) AS g
+            FROM toks
+        ),
+        bucketed AS (
+            SELECT doc_id, ({_hex_int("md5(g)")}) % {buckets} AS bucket
+            FROM grams
+        )
+    """
+
+
+def _oracle_sf_dir() -> str:
+    """Gate data the oracle builders read at build time (sf0.01 unless
+    set; ``scripts/check_oracle.py`` points it at its own sf_dir)."""
+    return os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+
+
+def _gate_rows(where: str, sql: str) -> list:
+    """Rows of ``sql`` over a ``documents`` view of the gate documents
+    that ``where`` keeps."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        con.sql(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{_oracle_sf_dir()}/documents.parquet') {where}"
+        )
+        return con.sql(sql).fetchall()
+
+
+def _bucket_count_vec(where: str, buckets: int):
+    """int64 gram count per bucket over the gate documents ``where`` keeps."""
+    import numpy as np
+
+    c = np.zeros(buckets, dtype=np.int64)
+    for b, n in _gate_rows(
+        where,
+        f"WITH {_gram_bucket_cte(buckets)} "
+        f"SELECT bucket, count(*) FROM bucketed GROUP BY 1",
+    ):
+        c[int(b)] = int(n)
+    return c
+
+
+def _sample_matrix_replica(where: str, buckets: int, seed: int):
+    """Bucket-count matrix of the hash-rank training sample of the gate
+    documents ``where`` keeps: the 4096 ids smallest by (md5-60 of
+    ``"id:seed"``, id) in hashlib, one row each in id order — a doc with no
+    grams keeps its zero row."""
+    import hashlib
+
+    import numpy as np
+
+    def rank(i):
+        return (
+            int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:15], 16),
+            i,
+        )
+
+    ids = [r[0] for r in _gate_rows(where, "SELECT doc_id FROM documents")]
+    row_of = {d: r for r, d in enumerate(sorted(sorted(ids, key=rank)[:4096]))}
+    X = np.zeros((len(row_of), buckets))
+    for d, b, n in _gate_rows(
+        where,
+        f"WITH {_gram_bucket_cte(buckets)} "
+        f"SELECT doc_id, bucket, count(*) FROM bucketed GROUP BY 1, 2",
+    ):
+        if d in row_of:
+            X[row_of[d], int(b)] = n
+    return X
+
+
+def _bucket_score_sql(table, score: str) -> str:
+    """Every document's ``n_grams`` plus ``score``, an expression over
+    ``s.s`` = Σ ``table[bucket]`` over the doc's grams: the int64 table as
+    VALUES, integer per-doc sums, a left join back to every doc."""
+    w_values = ", ".join(f"({i}, {int(v)})" for i, v in enumerate(table))
+    return f"""
+        WITH {_gram_bucket_cte(len(table))},
+        w(bucket, wt) AS (VALUES {w_values}),
+        scored AS (
+            SELECT doc_id, count(*) AS n_grams, sum(wt) AS s
+            FROM bucketed JOIN w USING (bucket)
+            GROUP BY doc_id
+        )
+        SELECT d.doc_id, coalesce(s.n_grams, 0) AS n_grams, {score}
+        FROM documents d LEFT JOIN scored s USING (doc_id)
+    """
+
+
 def q_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed-tf spherical k-means document clustering (the domain-
     discovery prep) in the md5 lane: sampling, bucketing, the shared
@@ -615,60 +725,12 @@ def _doc_clusters_sql() -> str:
     """DuckDB replica: hashlib md5-rank sampling + duckdb featurization +
     the shared ``_lloyd`` → quantized centroid VALUES → integer dot
     argmax with the (s DESC, cluster DESC) tie-break."""
-    import hashlib
-    import os
-
-    import duckdb
     import numpy as np
 
     from sparktax.simsearch import _lloyd
 
     K, B, seed = _DOCCLUS_K, _DOCCLUS_BUCKETS, _DOCCLUS_SEED
-    norm = _NORM.format(c="coalesce(text, '')")
-    u60 = _hex_int("md5(g)")
-    grams_cte = f"""
-        toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
-            FROM documents
-        ),
-        grams AS (
-            SELECT doc_id,
-                   unnest(t || list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i + 1])) AS g
-            FROM toks
-        ),
-        bucketed AS (SELECT doc_id, ({u60}) % {B} AS bucket FROM grams)
-    """
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    rows = con.sql(
-        f"WITH {grams_cte} SELECT doc_id, bucket, count(*) "
-        f"FROM bucketed GROUP BY 1, 2"
-    ).fetchall()
-    by_doc: dict = {}
-    for d, b, n in rows:
-        by_doc.setdefault(d, []).append((int(b), int(n)))
-
-    def rank(i):
-        return (
-            int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:15], 16),
-            i,
-        )
-
-    all_ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
-    sample_ids = sorted(sorted(all_ids), key=rank)[:4096]
-    X = np.zeros((len(sample_ids), B))
-    for r, i in enumerate(sorted(sample_ids)):
-        for b, c in by_doc.get(i, []):
-            X[r, b] = c
-    C = _lloyd(X, K, 10, seed)
+    C = _lloyd(_sample_matrix_replica("", B, seed), K, 10, seed)
     Cq = np.round(C * (1 << 20)).astype(np.int64)
     w_values = ", ".join(
         f"({b}, {j}, {int(Cq[j, b])})"
@@ -677,7 +739,7 @@ def _doc_clusters_sql() -> str:
         if Cq[j, b] != 0
     )
     return f"""
-        WITH {grams_cte},
+        WITH {_gram_bucket_cte(B)},
         counts AS (
             SELECT doc_id, bucket, count(*) AS c
             FROM bucketed GROUP BY 1, 2
@@ -723,56 +785,22 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classify_quality(docs, wq, bq, hasher="md5")
 
 
-def _qclf_replica_weights(sf_dir: str):
+def _qclf_replica_weights():
     """Independent hashlib/duckdb replay of the md5 training lane:
-    engine-parity tokens from DuckDB, hashlib md5 sampling rank and
-    bucketing, the shared numpy core (`logreg_weights`, the `_lloyd`
-    pattern), standardization fold reimplemented here."""
-    import hashlib
-
-    import duckdb
+    the replica sample matrices (hashlib sampling rank, DuckDB md5
+    bucketing), the shared numpy core (`logreg_weights`, the `_lloyd`
+    pattern), l1 normalization and standardization fold reimplemented
+    here."""
     import numpy as np
 
     from sparktax.textops import logreg_weights
 
-    norm = _NORM.format(c="coalesce(text, '')")
-    con = duckdb.connect()
-    rows = con.sql(
-        f"SELECT doc_id, lang, list_filter(string_split({norm}, ' '), "
-        f"t -> t <> '') AS t FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    B, seed = _QCLF_BUCKETS, _QCLF_SEED
-
-    def grams(toks):
-        return list(toks) + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-
-    def rank(i):
-        return (
-            int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:15], 16),
-            i,
-        )
-
-    toks_of = {d: (t or []) for d, _, t in rows}
-    lang_of = {d: lg for d, lg, _ in rows}
-
-    def featurize(ids):
-        ids = sorted(ids, key=rank)[:4096]
-        X = np.zeros((len(ids), B))
-        for r, i in enumerate(sorted(ids)):
-            for g in grams(toks_of[i]):
-                X[r, bucket(g)] += 1
-            tot = X[r].sum()
-            if tot > 0:
-                X[r] /= tot
-        return X
-
-    Xp = featurize([d for d in toks_of if lang_of[d] == "en"])
-    Xn = featurize([d for d in toks_of if lang_of[d] != "en"])
+    Xp, Xn = (
+        _sample_matrix_replica(where, _QCLF_BUCKETS, _QCLF_SEED)
+        for where in ("WHERE lang = 'en'", "WHERE lang <> 'en'")
+    )
     X = np.concatenate([Xp, Xn])
+    X /= np.maximum(X.sum(axis=1, keepdims=True), 1.0)
     y = np.concatenate([np.ones(len(Xp)), np.zeros(len(Xn))])
     mu, sd = X.mean(axis=0), X.std(axis=0) + 1e-9
     w, b = logreg_weights((X - mu) / sd, y)
@@ -787,46 +815,11 @@ def _qclf_replica_weights(sf_dir: str):
 def _qclf_sql() -> str:
     """DuckDB replica of the md5 classify lane: replica-trained weights
     as VALUES, the u60 md5 bucket device, integer per-doc sums."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    wq, bq = _qclf_replica_weights()
+    logit = f"(coalesce(s.s, 0) + {bq} * coalesce(s.n_grams, 0))"
+    return _bucket_score_sql(
+        wq, f"{logit}::BIGINT AS logit_q, {logit} > 0 AS keep"
     )
-    wq, bq = _qclf_replica_weights(sf_dir)
-    norm = _NORM.format(c="coalesce(text, '')")
-    u60 = _hex_int("md5(g)")
-    w_values = ", ".join(
-        f"({i}, {int(wq[i])})" for i in range(len(wq))
-    )
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
-            FROM documents
-        ),
-        grams AS (
-            SELECT doc_id,
-                   unnest(t || list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i + 1])) AS g
-            FROM toks
-        ),
-        bucketed AS (
-            SELECT doc_id, ({u60}) % {len(wq)} AS bucket FROM grams
-        ),
-        w(bucket, wq) AS (VALUES {w_values}),
-        scored AS (
-            SELECT doc_id, count(*) AS n_grams, sum(wq) AS s
-            FROM bucketed JOIN w USING (bucket)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(s.n_grams, 0) AS n_grams,
-               (coalesce(s.s, 0) + {bq} * coalesce(s.n_grams, 0))::BIGINT
-                   AS logit_q,
-               (coalesce(s.s, 0) + {bq} * coalesce(s.n_grams, 0)) > 0
-                   AS keep
-        FROM documents d LEFT JOIN scored s USING (doc_id)
-    """
 
 
 _BPE_MERGES = 24
@@ -927,7 +920,6 @@ def _maybe_bpe_oracle() -> dict[str, str]:
     """Like _maybe_ivf_oracle: the builder reads the gate parquet, so only
     the expected missing-data failures degrade these two to rows-only."""
     import hashlib
-    import os
 
     try:
         import duckdb
@@ -936,10 +928,7 @@ def _maybe_bpe_oracle() -> dict[str, str]:
     except ImportError:
         return {}
     try:
-        sf_dir = os.environ.get(
-            "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-        )
-        merges, docs = _bpe_replica(sf_dir, _BPE_MERGES)
+        merges, docs = _bpe_replica(_oracle_sf_dir(), _BPE_MERGES)
         qclf_sql = _qclf_sql()
         doc_clusters_sql = _doc_clusters_sql()
     except missing as e:
@@ -987,63 +976,15 @@ def _dsir_sql(buckets: int = 4096) -> str:
     vectors from the gate parquet with the same normalization/grams/md5
     bucketing, run the SAME ``dsir_bucket_weights`` numpy quantizer, embed
     the int64 weights as VALUES, and replay the integer per-doc sum."""
-    import os
-
-    import duckdb
-    import numpy as np
-
     from sparktax.textops import dsir_bucket_weights
 
-    norm = _NORM.format(c="text")
-    u60 = _hex_int("md5(g)")
-    grams_cte = f"""
-        toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
-            FROM documents
-        ),
-        grams AS (
-            SELECT doc_id,
-                   unnest(t || list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i + 1])) AS g
-            FROM toks
-        ),
-        bucketed AS (SELECT doc_id, ({u60}) % {buckets} AS bucket FROM grams)
-    """
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    wq = dsir_bucket_weights(
+        _bucket_count_vec("WHERE lang = 'en'", buckets),
+        _bucket_count_vec("", buckets),
     )
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW all_docs AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
+    return _bucket_score_sql(
+        wq, "round(coalesce(s.s, 0) / 1048576.0, 6) AS logratio"
     )
-
-    def count_vec(where: str) -> np.ndarray:
-        rows = con.sql(
-            f"WITH documents AS (SELECT * FROM all_docs {where}), {grams_cte}"
-            f" SELECT bucket, count(*) FROM bucketed GROUP BY 1"
-        ).fetchall()
-        c = np.zeros(buckets, dtype=np.int64)
-        for b, n in rows:
-            c[int(b)] = int(n)
-        return c
-
-    wq = dsir_bucket_weights(count_vec("WHERE lang = 'en'"), count_vec(""))
-    w_values = ", ".join(f"({i}, {int(wq[i])})" for i in range(buckets))
-    return f"""
-        WITH {grams_cte},
-        w(bucket, wq) AS (VALUES {w_values}),
-        scored AS (
-            SELECT doc_id, count(*) AS n_grams, sum(wq) AS s
-            FROM bucketed JOIN w USING (bucket)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(s.n_grams, 0) AS n_grams,
-               round(coalesce(s.s, 0) / 1048576.0, 6) AS logratio
-        FROM documents d LEFT JOIN scored s USING (doc_id)
-    """
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1067,15 +1008,7 @@ def _dsir_select_sql() -> str:
     EQUIVALENT to the simple global ranking (qv DESC, doc_id ASC) ≤
     n_keep — fine for the oracle at sf0.01, a single-partition sort the
     engine deliberately avoids at scale."""
-    import duckdb
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    n = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchone()[0]
+    n = _gate_rows("", "SELECT count(*) FROM documents")[0][0]
     n_keep = int(n * 0.7)  # same float op as the engine's python
     return f"""
         WITH scored AS ({_dsir_sql()}),
@@ -1106,59 +1039,12 @@ def _perplexity_sql(buckets: int = 4096) -> str:
     bucket counts from the gate parquet with the same grams/bucketing,
     run the SAME ``lm_bucket_logprobs`` quantizer, replay the integer
     per-doc sum."""
-    import os
-
-    import duckdb
-    import numpy as np
-
     from sparktax.textops import lm_bucket_logprobs
 
-    norm = _NORM.format(c="coalesce(text, '')")
-    u60 = _hex_int("md5(g)")
-    grams_cte = f"""
-        toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
-            FROM documents
-        ),
-        grams AS (
-            SELECT doc_id,
-                   unnest(t || list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i + 1])) AS g
-            FROM toks
-        ),
-        bucketed AS (SELECT doc_id, ({u60}) % {buckets} AS bucket FROM grams)
-    """
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    lp = lm_bucket_logprobs(_bucket_count_vec("WHERE lang = 'en'", buckets))
+    return _bucket_score_sql(
+        lp, "round(-coalesce(s.s, 0) / 1048576.0, 6) AS total_nll"
     )
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW all_docs AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    rows = con.sql(
-        f"WITH documents AS (SELECT * FROM all_docs WHERE lang = 'en'), "
-        f"{grams_cte} SELECT bucket, count(*) FROM bucketed GROUP BY 1"
-    ).fetchall()
-    c = np.zeros(buckets, dtype=np.int64)
-    for b, n in rows:
-        c[int(b)] = int(n)
-    lp = lm_bucket_logprobs(c)
-    w_values = ", ".join(f"({i}, {int(lp[i])})" for i in range(buckets))
-    return f"""
-        WITH {grams_cte},
-        w(bucket, lq) AS (VALUES {w_values}),
-        scored AS (
-            SELECT doc_id, count(*) AS n_grams, sum(lq) AS s
-            FROM bucketed JOIN w USING (bucket)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(s.n_grams, 0) AS n_grams,
-               round(-coalesce(s.s, 0) / 1048576.0, 6) AS total_nll
-        FROM documents d LEFT JOIN scored s USING (doc_id)
-    """
 
 
 _ORDER_SEED = 7
@@ -1979,16 +1865,13 @@ def _md5int_centroid_values(n_cells: int, seed: int) -> str:
     ``sparktax.hashing.md5_rank_expr``), run the SAME numpy ``_lloyd``,
     quantize to ``round(c·2²⁰)`` ints."""
     import hashlib
-    import os
 
     import duckdb
     import numpy as np
 
     from sparktax.simsearch import _lloyd
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM "
         f"read_parquet('{sf_dir}/embeddings.parquet')"
@@ -2066,7 +1949,7 @@ def _ivf_sql(
     quantize to ``round(c·2²⁰)`` ints, and embed them as literal VALUES.
     Assignment is then all-integer in both engines; rerank is the proven
     rounded-cosine pattern. The gate runs at sf0.01 (driver contract);
-    ``SPARK_GRAFT_ORACLE_SF_DIR`` overrides for local checks at other
+    :func:`_oracle_sf_dir` names the data for local checks at other
     scales."""
     w_values = _md5int_centroid_values(n_cells, seed)
     return f"""
@@ -2126,14 +2009,13 @@ def _pq_codebook_values(
     them as a VALUES list ``(sub, subpos, code, cw)``. Returns the
     VALUES string and sub_dim."""
     import hashlib
-    import os
 
     import duckdb
     import numpy as np
 
     from sparktax.pq import _lloyd_l2
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM "
         f"read_parquet('{sf_dir}/embeddings.parquet')"
@@ -2234,14 +2116,13 @@ def _ivfpq_sql(
     a shortlist of ``rerank``, and the 6dp-rounded cosine reranks —
     every stage deterministic in both engines."""
     import hashlib
-    import os
 
     import duckdb
     import numpy as np
 
     from sparktax.simsearch import _lloyd
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM "
         f"read_parquet('{sf_dir}/embeddings.parquet')"

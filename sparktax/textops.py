@@ -1188,6 +1188,110 @@ def _word_grams(text_col: str):
     return F.concat(unigrams, bigrams)
 
 
+# the gram-bucket device: every DSIR / perplexity / quality-classifier /
+# doc-cluster step reads hashed word 1–2-grams through these four helpers
+_SAMPLE = 4096  # docs per hash-rank training sample (driver-safe bound)
+_KMEANS_ITERS = 10
+_LOGREG_EPOCHS = 200
+
+
+def _bucketed_grams(
+    df: DataFrame, text_col: str, buckets: int, hasher: str,
+    id_col: str | None = None, outer: bool = False,
+) -> DataFrame:
+    """One ``(doc_id, bucket)`` row per word 1–2-gram of ``text_col``
+    (just ``bucket`` without ``id_col``), hashed into ``buckets`` with the
+    md5-60 or xxhash64 lane. ``outer`` keeps a doc with no grams as one
+    null-bucket row in either lane: ``explode`` drops an empty array, and
+    a training sample must keep that doc's zero row."""
+    keys = ["doc_id"] if id_col else []
+    explode = F.explode_outer if outer else F.explode
+    h = seeded_hash(F.col("_g"), hasher)
+    # md5_60 is non-negative, so plain ``%`` already is the residue
+    bucket = h % buckets if hasher == "md5" else F.pmod(h, F.lit(buckets))
+    if outer:  # xxhash64(null) is its seed, not null: null the bucket itself
+        bucket = F.when(F.col("_g").isNotNull(), bucket)
+    return df.select(
+        *(F.col(id_col).alias(k) for k in keys),
+        explode(_word_grams(text_col)).alias("_g"),
+    ).select(*keys, bucket.alias("bucket"))
+
+
+def _bucket_counts(df: DataFrame, text_col: str, buckets: int, hasher: str):
+    """Corpus-wide int64 gram count per bucket: one map-side partial
+    aggregate whose exchange and driver collect carry ≤ ``buckets`` rows."""
+    import numpy as np
+
+    rows = (
+        _bucketed_grams(df, text_col, buckets, hasher)
+        .groupBy("bucket")
+        .count()
+        .collect()
+    )
+    c = np.zeros(buckets, dtype=np.int64)
+    for r in rows:
+        c[int(r["bucket"])] = int(r["count"])
+    return c
+
+
+def _score_buckets(
+    documents: DataFrame, table, name: str, text_col: str, id_col: str,
+    hasher: str,
+) -> DataFrame:
+    """``(doc_id, n_grams, _s)`` for EVERY doc, ``_s`` = Σ ``table[bucket]``
+    over its grams: a narrow explode → broadcast join against the
+    ``len(table)``-row int64 table (column ``name``) → map-side partial
+    sums, one row per doc through the exchange, left-joined back so a
+    gramless doc comes out with null ``n_grams``/``_s``."""
+    wdf = documents.sparkSession.createDataFrame(
+        [(i, int(v)) for i, v in enumerate(table)], f"bucket long, {name} long"
+    )
+    scored = (
+        _bucketed_grams(documents, text_col, len(table), hasher, id_col)
+        .join(F.broadcast(wdf), "bucket")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_grams"), F.sum(name).alias("_s"))
+    )
+    return documents.select(F.col(id_col).alias("doc_id")).join(
+        scored, "doc_id", "left"
+    )
+
+
+def _sample_matrix(
+    df: DataFrame, text_col: str, id_col: str, buckets: int, hasher: str,
+    seed: int,
+):
+    """Dense bucket-count matrix of a BOUNDED hash-rank sample of
+    ``_SAMPLE`` docs (driver-safe at any corpus size), one row per sampled
+    doc in id order, zero rows included. The sample is featurized
+    DISTRIBUTED with the same gram/bucket expressions scoring uses, so
+    train and score buckets agree for either hasher."""
+    import numpy as np
+
+    ids = (
+        df.select(F.col(id_col).alias("_id"))
+        .withColumn("_rk", seeded_hash(F.col("_id").cast("string"), hasher, seed))
+        .orderBy("_rk", "_id")
+        .limit(_SAMPLE)
+        .select("_id")
+    )
+    sampled = df.select(
+        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+    ).join(ids, "_id", "left_semi")
+    rows = (
+        _bucketed_grams(sampled, "_t", buckets, hasher, "_id", outer=True)
+        .groupBy("doc_id", "bucket")
+        .count()
+        .collect()
+    )
+    row_of = {d: i for i, d in enumerate(sorted({r["doc_id"] for r in rows}))}
+    X = np.zeros((len(row_of), buckets))
+    for r in rows:
+        if r["bucket"] is not None:
+            X[row_of[r["doc_id"]], int(r["bucket"])] = r["count"]
+    return X
+
+
 def dsir_bucket_weights(ct, cr):
     """Quantized DSIR bucket log-ratios, shared by the Spark lane and the
     DuckDB oracle builder: w_b = log((ct_b+1)/(T+B)) − log((cr_b+1)/(R+B))
@@ -1228,24 +1332,6 @@ def importance_weights(
     to one row per doc. No shuffle ever carries gram-level rows across
     stages. ``hasher="md5"`` swaps xxhash64 bucketing for the md5-prefix
     device DuckDB replays bit-for-bit (the oracle lane)."""
-    import numpy as np
-
-    def bucket(g):
-        return _gram_bucket(g, buckets, hasher)
-
-    def counts(df):
-        rows = (
-            df.select(F.explode(_word_grams(text_col)).alias("_g"))
-            .select(bucket(F.col("_g")).alias("bucket"))
-            .groupBy("bucket")
-            .count()
-            .collect()
-        )
-        c = np.zeros(buckets, dtype=np.int64)
-        for r in rows:
-            c[int(r["bucket"])] = int(r["count"])
-        return c
-
     # the two count jobs are independent — overlap them (guide §2.6) so the
     # second backfills executors freed by the first's tail; the session's
     # FAIR scheduler keeps neither starving the other. Exact counts, so
@@ -1253,32 +1339,17 @@ def importance_weights(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        ct_f, cr_f = pool.submit(counts, target), pool.submit(counts, raw)
+        ct_f, cr_f = [
+            pool.submit(_bucket_counts, df, text_col, buckets, hasher)
+            for df in (target, raw)
+        ]
         wq = dsir_bucket_weights(ct_f.result(), cr_f.result())
-    spark = raw.sparkSession
-    wdf = spark.createDataFrame(
-        [(i, int(wq[i])) for i in range(buckets)], "bucket long, wq long"
-    )
-    scored = (
-        raw.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_word_grams(text_col)).alias("_g"),
-        )
-        .select("doc_id", bucket(F.col("_g")).alias("bucket"))
-        .join(F.broadcast(wdf), "bucket")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_grams"), F.sum("wq").alias("_s"))
-    )
-    return (
-        raw.select(F.col(id_col).alias("doc_id"))
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.round(
-                F.coalesce(F.col("_s"), F.lit(0)) / F.lit(float(1 << 20)), 6
-            ).alias("logratio"),
-        )
+    return _score_buckets(raw, wq, "wq", text_col, id_col, hasher).select(
+        "doc_id",
+        F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+        F.round(
+            F.coalesce(F.col("_s"), F.lit(0)) / F.lit(float(1 << 20)), 6
+        ).alias("logratio"),
     )
 
 
@@ -1399,13 +1470,9 @@ def dedup_spans(
     )
 
 
-def _gram_bucket(g, buckets: int, hasher: str):
-    h = seeded_hash(g, hasher)
-    # md5_60 is non-negative, so plain ``%`` already is the residue
-    return h % buckets if hasher == "md5" else F.pmod(h, F.lit(buckets))
-
-
-def logreg_weights(X, y, epochs: int = 200, lr: float = 0.5, l2: float = 1e-3):
+def logreg_weights(
+    X, y, epochs: int = _LOGREG_EPOCHS, lr: float = 0.5, l2: float = 1e-3
+):
     """Plain-numpy logistic regression on l1-normalized bucket counts —
     the deterministic training core shared by the Spark lane and the
     DuckDB oracle builder (the `_lloyd` pattern: same floats in, same
@@ -1430,10 +1497,8 @@ def train_quality_classifier(
     text_col: str = "text",
     id_col: str = "doc_id",
     buckets: int = 8192,
-    sample: int = 4096,
     seed: int = 42,
     hasher: str = "xxhash64",
-    epochs: int = 200,
 ):
     """fastText-style linear quality classifier (Joulin et al. 2016,
     arXiv:1607.01759 — the CCNet/LLaMA-pipeline quality-filter shape):
@@ -1443,54 +1508,24 @@ def train_quality_classifier(
     sums (order-free, engine-exact).
 
     The 100 TB shape (the IVF-centroid pattern): training reads a BOUNDED
-    hash-rank sample of ``sample`` docs per class — driver-safe at any
-    corpus size — but the sampled docs are featurized DISTRIBUTED with the
-    same gram/bucket expressions scoring uses, so train and score buckets
-    agree for either hasher. ``hasher="md5"`` makes sampling, bucketing
-    and scoring DuckDB-replayable bit-for-bit."""
+    hash-rank sample per class (:func:`_sample_matrix`), featurized
+    distributed with the scoring expressions. ``hasher="md5"`` makes
+    sampling, bucketing and scoring DuckDB-replayable bit-for-bit."""
     import numpy as np
 
-    def featurize(df, label):
-        ids = (
-            df.select(F.col(id_col).alias("_id"))
-            .withColumn("_rk", seeded_hash(F.col("_id").cast("string"), hasher, seed))
-            .orderBy("_rk", "_id")
-            .limit(sample)
-            .select("_id")
-        )
-        sampled = df.select(
-            F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-        ).join(ids, "_id", "left_semi")
-        rows = (
-            sampled.select("_id", F.explode(_word_grams("_t")).alias("_g"))
-            .select("_id", _gram_bucket(F.col("_g"), buckets, hasher).alias("b"))
-            .groupBy("_id", "b")
-            .count()
-            .collect()
-        )
-        by_doc: dict = {}
-        for r in rows:
-            by_doc.setdefault(r["_id"], []).append((int(r["b"]), int(r["count"])))
-        X = np.zeros((len(by_doc), buckets))
-        for i, k in enumerate(sorted(by_doc)):
-            for b, c in by_doc[k]:
-                X[i, b] = c
-            tot = X[i].sum()
-            if tot > 0:
-                X[i] /= tot
-        y = np.full(len(by_doc), float(label))
-        return X, y
-
-    Xp, yp = featurize(pos, 1)
-    Xn, yn = featurize(neg, 0)
+    Xp, Xn = (
+        _sample_matrix(df, text_col, id_col, buckets, hasher, seed)
+        for df in (pos, neg)
+    )
     X = np.concatenate([Xp, Xn])
-    y = np.concatenate([yp, yn])
+    X /= np.maximum(X.sum(axis=1, keepdims=True), 1.0)  # l1; zero rows stay 0
+    y = np.concatenate([np.ones(len(Xp)), np.zeros(len(Xn))])
     # standardize for conditioning (l1-normalized counts are ~1/doc_len —
     # far too small for a fixed lr), then FOLD the affine transform back
     # into the weights so scoring stays a plain integer dot product:
     # w·((x−μ)/σ) + b  ≡  (w/σ)·x + (b − Σ wμ/σ)
     mu, sd = X.mean(axis=0), X.std(axis=0) + 1e-9
-    w, b = logreg_weights((X - mu) / sd, y, epochs=epochs)
+    w, b = logreg_weights((X - mu) / sd, y)
     w_eff = w / sd
     b_eff = b - float((w * (mu / sd)).sum())
     return (
@@ -1516,37 +1551,14 @@ def classify_quality(
     Scale shape: identical to :func:`importance_weights` — narrow explode,
     broadcast weight join, map-side partial sums, one row per doc through
     the exchange."""
-    buckets = len(w_q)
-    spark = documents.sparkSession
-    wdf = spark.createDataFrame(
-        [(i, int(w_q[i])) for i in range(buckets)], "bucket long, wq long"
+    logit = F.coalesce(F.col("_s"), F.lit(0)) + F.lit(int(b_q)) * F.coalesce(
+        "n_grams", F.lit(0)
     )
-    scored = (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_word_grams(text_col)).alias("_g"),
-        )
-        .select("doc_id", _gram_bucket(F.col("_g"), buckets, hasher).alias("bucket"))
-        .join(F.broadcast(wdf), "bucket")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_grams"), F.sum("wq").alias("_s"))
-    )
-    return (
-        documents.select(F.col(id_col).alias("doc_id"))
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            (
-                F.coalesce(F.col("_s"), F.lit(0))
-                + F.lit(int(b_q)) * F.coalesce("n_grams", F.lit(0))
-            ).alias("logit_q"),
-            (
-                F.coalesce(F.col("_s"), F.lit(0))
-                + F.lit(int(b_q)) * F.coalesce("n_grams", F.lit(0))
-                > 0
-            ).alias("keep"),
-        )
+    return _score_buckets(documents, w_q, "wq", text_col, id_col, hasher).select(
+        "doc_id",
+        F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+        logit.alias("logit_q"),
+        (logit > 0).alias("keep"),
     )
 
 
@@ -1583,46 +1595,13 @@ def perplexity_score(
     Scale shape = :func:`importance_weights`: one bounded bucket-count
     aggregate over the model corpus (exchange carries ≤ ``buckets``
     rows), a broadcast log-prob table, map-side partial integer sums."""
-    import numpy as np
-
-    def counts(df):
-        rows = (
-            df.select(F.explode(_word_grams(text_col)).alias("_g"))
-            .select(_gram_bucket(F.col("_g"), buckets, hasher).alias("bucket"))
-            .groupBy("bucket")
-            .count()
-            .collect()
-        )
-        c = np.zeros(buckets, dtype=np.int64)
-        for r in rows:
-            c[int(r["bucket"])] = int(r["count"])
-        return c
-
-    lp = lm_bucket_logprobs(counts(model_corpus))
-    spark = documents.sparkSession
-    wdf = spark.createDataFrame(
-        [(i, int(lp[i])) for i in range(buckets)], "bucket long, lq long"
-    )
-    scored = (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_word_grams(text_col)).alias("_g"),
-        )
-        .select("doc_id", _gram_bucket(F.col("_g"), buckets, hasher).alias("bucket"))
-        .join(F.broadcast(wdf), "bucket")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_grams"), F.sum("lq").alias("_s"))
-    )
-    return (
-        documents.select(F.col(id_col).alias("doc_id"))
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.round(
-                -F.coalesce(F.col("_s"), F.lit(0)) / F.lit(float(1 << 20)), 6
-            ).alias("total_nll"),
-        )
+    lp = lm_bucket_logprobs(_bucket_counts(model_corpus, text_col, buckets, hasher))
+    return _score_buckets(documents, lp, "lq", text_col, id_col, hasher).select(
+        "doc_id",
+        F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+        F.round(
+            -F.coalesce(F.col("_s"), F.lit(0)) / F.lit(float(1 << 20)), 6
+        ).alias("total_nll"),
     )
 
 
@@ -1630,13 +1609,10 @@ def cluster_documents(
     documents: DataFrame,
     k: int = 16,
     buckets: int = 8192,
-    sample: int = 4096,
-    iters: int = 10,
     seed: int = 42,
     text_col: str = "text",
     id_col: str = "doc_id",
     hasher: str = "xxhash64",
-    centroids=None,
 ) -> DataFrame:
     """Unsupervised domain/topic clustering over hashed-tf vectors — the
     domain-discovery step cluster-based mixture reweighting builds on
@@ -1646,8 +1622,8 @@ def cluster_documents(
     frequencies; returns ``(doc_id, cluster)``.
 
     The 100 TB shape (the IVF pattern transplanted to text): centroids
-    train on a BOUNDED hash-rank sample featurized DISTRIBUTED (bucket
-    counts, exchange ≤ sample·doc_len rows); assignment is a narrow
+    train on a BOUNDED hash-rank sample featurized DISTRIBUTED
+    (:func:`_sample_matrix`); assignment is a narrow
     explode → broadcast (bucket, cluster, w) join → per-doc argmax — raw
     integer counts dot quantized centroids, which equals the cosine
     argmax because each doc's norm is constant across clusters. In
@@ -1657,50 +1633,19 @@ def cluster_documents(
 
     from sparktax.simsearch import _lloyd
 
-    spark = documents.sparkSession
-
-    if centroids is None:
-        ids = (
-            documents.select(F.col(id_col).alias("_id"))
-            .withColumn("_rk", seeded_hash(F.col("_id").cast("string"), hasher, seed))
-            .orderBy("_rk", "_id")
-            .limit(sample)
-            .select("_id")
-        )
-        sampled = documents.select(
-            F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-        ).join(ids, "_id", "left_semi")
-        rows = (
-            sampled.select("_id", F.explode(_word_grams("_t")).alias("_g"))
-            .select("_id", _gram_bucket(F.col("_g"), buckets, hasher).alias("b"))
-            .groupBy("_id", "b")
-            .count()
-            .collect()
-        )
-        by_doc: dict = {}
-        for r in rows:
-            by_doc.setdefault(r["_id"], []).append(
-                (int(r["b"]), int(r["count"]))
-            )
-        X = np.zeros((len(by_doc), buckets))
-        for i, key in enumerate(sorted(by_doc)):
-            for b, c in by_doc[key]:
-                X[i, b] = c
-        centroids = _lloyd(X, k, iters, seed)
-    Cq = np.round(np.asarray(centroids) * (1 << 20)).astype(np.int64)
+    X = _sample_matrix(documents, text_col, id_col, buckets, hasher, seed)
+    Cq = np.round(_lloyd(X, k, _KMEANS_ITERS, seed) * (1 << 20)).astype(np.int64)
     wrows = [
         (b, j, int(Cq[j, b]))
         for j in range(Cq.shape[0])
         for b in range(Cq.shape[1])
         if Cq[j, b] != 0
     ]
-    wdf = spark.createDataFrame(wrows, "bucket long, cluster int, w long")
+    wdf = documents.sparkSession.createDataFrame(
+        wrows, "bucket long, cluster int, w long"
+    )
     counts = (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_word_grams(text_col)).alias("_g"),
-        )
-        .select("doc_id", _gram_bucket(F.col("_g"), buckets, hasher).alias("bucket"))
+        _bucketed_grams(documents, text_col, buckets, hasher, id_col)
         .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("c"))
     )

@@ -18,11 +18,62 @@ def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
 
 
-def _py_norm(s: str) -> str:
+def _grams(text) -> list[str]:
+    """Python replay of textops._word_grams: word 1–2-grams of the
+    normalized text (Java's ``\\w`` is ASCII-only, hence re.ASCII)."""
     import re
 
-    s = re.sub(r"[^\w\s]", " ", s.lower())
-    return re.sub(r"\s+", " ", s).strip()
+    t = re.sub(r"[^\w\s]", " ", (text or "").lower(), flags=re.ASCII)
+    toks = t.split()
+    return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+
+
+def _md5_60(s: str) -> int:
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _bucket_of(spark, hasher: str, texts, B: int):
+    """gram → bucket for every gram of ``texts``: hashlib md5-60 in the md5
+    lane; in the xxhash64 lane a Spark ``pmod(xxhash64(g), B)`` lookup over
+    the distinct grams (the intrinsic has no python twin)."""
+    if hasher == "md5":
+        return lambda g: _md5_60(g) % B
+    gs = sorted({g for t in texts for g in _grams(t)})
+    lookup = spark.createDataFrame([(g,) for g in gs], "g string").select(
+        "g", F.pmod(F.xxhash64("g"), F.lit(B)).alias("b")
+    )
+    return dict(lookup.collect()).__getitem__
+
+
+def _qclf_replica(pos: dict, neg: dict, B: int, seed: int, bucket=None):
+    """Independent replay of train_quality_classifier: hashlib md5 sample
+    rank, ``bucket`` (default md5-60 % B) bucketing, l1-normalized per-doc
+    counts (a sampled doc with no grams is a zero row), the shared numpy
+    trainer, the standardization fold. ``pos``/``neg`` map doc_id → text.
+    The xxhash64 lane ranks its sample differently, so the replay covers
+    it only where every doc is sampled (≤ 4096 per class)."""
+    bucket = bucket or (lambda g: _md5_60(g) % B)
+
+    def featurize(texts):
+        ids = sorted(sorted(texts, key=lambda i: (_md5_60(f"{i}:{seed}"), i))[:4096])
+        X = np.zeros((len(ids), B))
+        for r, i in enumerate(ids):
+            for g in _grams(texts[i]):
+                X[r, bucket(g)] += 1
+            tot = X[r].sum()
+            if tot > 0:
+                X[r] /= tot
+        return X
+
+    Xp, Xn = featurize(pos), featurize(neg)
+    X = np.concatenate([Xp, Xn])
+    y = np.concatenate([np.ones(len(Xp)), np.zeros(len(Xn))])
+    mu, sd = X.mean(axis=0), X.std(axis=0) + 1e-9
+    w, b = textops.logreg_weights((X - mu) / sd, y)
+    w_eff, b_eff = w / sd, b - float((w * (mu / sd)).sum())
+    return np.round(w_eff * (1 << 20)).astype(np.int64), int(round(b_eff * (1 << 20)))
 
 
 def test_exact_duplicates(spark):
@@ -251,13 +302,12 @@ def test_repetition_signals(spark):
         == (0, 0.0, 0.0)
 
 
-def test_importance_weights_vs_python_replica(spark):
-    """DSIR md5 lane equals an independent hashlib/numpy replica (same
-    normalization, grams, bucketing, shared weight quantizer), and docs
-    sharing target vocabulary outscore off-target docs."""
-    import hashlib
-    import re
-
+@pytest.mark.parametrize("hasher", ["md5", "xxhash64"])
+def test_importance_weights_vs_python_replica(spark, hasher):
+    """DSIR equals an independent numpy replica (same normalization, grams,
+    bucketing, shared weight quantizer) in both hash lanes — xxhash64 is
+    the one the headline times — and docs sharing target vocabulary
+    outscore off-target docs."""
     rows = [
         (0, "the model trains on clean english text data"),
         (1, "clean english text improves the model quality"),
@@ -271,31 +321,24 @@ def test_importance_weights_vs_python_replica(spark):
     target = docs.filter(F.col("doc_id").isin(0, 1))
     B = 512
     got = (
-        textops.importance_weights(docs, target, buckets=B, hasher="md5")
+        textops.importance_weights(docs, target, buckets=B, hasher=hasher)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
-
-    def grams(text):
-        t = re.sub(r"\s+", " ", re.sub(r"[^\w\s]", " ", (text or "").lower())).strip()
-        toks = [w for w in t.split(" ") if w]
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
+    bucket = _bucket_of(spark, hasher, [t for _, t in rows], B)
 
     def counts(ids):
         c = np.zeros(B, dtype=np.int64)
         for i, text in rows:
             if i in ids:
-                for g in grams(text):
+                for g in _grams(text):
                     c[bucket(g)] += 1
         return c
 
     wq = textops.dsir_bucket_weights(counts({0, 1}), counts({r[0] for r in rows}))
     for i, text in rows:
-        gs = grams(text)
+        gs = _grams(text)
         s = int(sum(wq[bucket(g)] for g in gs))
         assert got.n_grams[i] == len(gs)
         assert got.logratio[i] == round(s / (1 << 20), 6)
@@ -371,9 +414,6 @@ def test_quality_classifier_vs_python_replica(spark):
     """md5-lane classifier: engine logit_q equals an independent
     hashlib/numpy replay (sampling rank, bucketing, shared numpy trainer,
     integer scoring), and the trained model separates the planted task."""
-    import hashlib
-    import re
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pos = docs.filter(F.col("lang") == "en")
     neg = docs.filter(F.col("lang") != "en")
@@ -388,49 +428,21 @@ def test_quality_classifier_vs_python_replica(spark):
     )
 
     # --- independent replay: features, sampling, training, scoring ---
-    def grams(text):
-        t = re.sub(
-            r"\s+", " ", re.sub(r"[^\w\s]", " ", (text or "").lower(), flags=re.ASCII)
-        ).strip()
-        toks = [w for w in t.split(" ") if w]
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-
     pdf = docs.select("doc_id", "text", "lang").toPandas()
     texts = dict(zip(pdf.doc_id, pdf.text))
     langs = dict(zip(pdf.doc_id, pdf.lang))
-
-    def rank(i):
-        return (int(hashlib.md5(f"{i}:{SEED}".encode()).hexdigest()[:15], 16), i)
-
-    def featurize(ids):
-        ids = sorted(ids, key=rank)[:4096]
-        X = np.zeros((len(ids), B))
-        for r, i in enumerate(sorted(ids)):
-            for g in grams(texts[i]):
-                X[r, bucket(g)] += 1
-            tot = X[r].sum()
-            if tot > 0:
-                X[r] /= tot
-        return X
-
-    Xp = featurize([i for i in texts if langs[i] == "en"])
-    Xn = featurize([i for i in texts if langs[i] != "en"])
-    X = np.concatenate([Xp, Xn])
-    y = np.concatenate([np.ones(len(Xp)), np.zeros(len(Xn))])
-    mu, sd = X.mean(axis=0), X.std(axis=0) + 1e-9
-    w, b = textops.logreg_weights((X - mu) / sd, y)
-    w_eff, b_eff = w / sd, b - float((w * (mu / sd)).sum())
-    wq2 = np.round(w_eff * (1 << 20)).astype(np.int64)
-    bq2 = int(round(b_eff * (1 << 20)))
+    wq2, bq2 = _qclf_replica(
+        {i: t for i, t in texts.items() if langs[i] == "en"},
+        {i: t for i, t in texts.items() if langs[i] != "en"},
+        B,
+        SEED,
+    )
     np.testing.assert_array_equal(wq, wq2)
     assert bq == bq2
 
     for i, text in texts.items():
-        gs = grams(text)
-        s = int(sum(wq2[bucket(g)] for g in gs)) + bq2 * len(gs)
+        gs = _grams(text)
+        s = int(sum(wq2[_md5_60(g) % B] for g in gs)) + bq2 * len(gs)
         assert got.loc[i].logit_q == s
         assert got.loc[i].keep == (s > 0)
     # the planted task separates: >=85% of en kept, >=85% of non-en dropped
@@ -441,12 +453,34 @@ def test_quality_classifier_vs_python_replica(spark):
     assert sum(not keep[i] for i in non) / len(non) >= 0.85
 
 
-def test_perplexity_vs_python_replica(spark):
-    """LM cross-entropy equals an independent hashlib replica, and
-    off-model text scores higher mean NLL than in-model text."""
-    import hashlib
-    import re
+@pytest.mark.parametrize("hasher", ["md5", "xxhash64"])
+def test_quality_classifier_keeps_gramless_sampled_docs(spark, hasher):
+    """A sampled doc with no word grams ("!!!", null text) is a zero row of
+    the training matrix, as in the replica (and the DuckDB oracle): the
+    weights match it exactly in both lanes. ``explode`` would drop such a
+    doc's row, and an un-nulled ``xxhash64(null)`` bucket would give it a
+    one-hot row at ``42 % B``."""
+    pos = {0: "clean english text data", 1: "the model reads english",
+           2: "!!!", 3: None}
+    neg = {4: "le modele lit le texte", 5: "du corpus francais"}
+    docs = spark.createDataFrame(
+        [(i, t, "en" if i in pos else "fr") for i, t in {**pos, **neg}.items()],
+        "doc_id long, text string, lang string",
+    )
+    wq, bq = textops.train_quality_classifier(
+        docs.filter(F.col("lang") == "en"), docs.filter(F.col("lang") != "en"),
+        buckets=64, seed=42, hasher=hasher,
+    )
+    bucket = _bucket_of(spark, hasher, [*pos.values(), *neg.values()], 64)
+    wq2, bq2 = _qclf_replica(pos, neg, 64, 42, bucket)
+    np.testing.assert_array_equal(wq, wq2)
+    assert bq == bq2
 
+
+@pytest.mark.parametrize("hasher", ["md5", "xxhash64"])
+def test_perplexity_vs_python_replica(spark, hasher):
+    """LM cross-entropy equals an independent numpy replica in both hash
+    lanes, and off-model text scores higher mean NLL than in-model text."""
     rows = [
         (0, "the model reads clean english text daily"),
         (1, "clean english text is what the model reads"),
@@ -458,29 +492,22 @@ def test_perplexity_vs_python_replica(spark):
     model = docs.filter(F.col("doc_id").isin(0, 1))
     B = 256
     got = (
-        textops.perplexity_score(docs, model, buckets=B, hasher="md5")
+        textops.perplexity_score(docs, model, buckets=B, hasher=hasher)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
-
-    def grams(text):
-        t = re.sub(r"\s+", " ", re.sub(r"[^\w\s]", " ", (text or "").lower())).strip()
-        toks = [w for w in t.split(" ") if w]
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
+    bucket = _bucket_of(spark, hasher, [t for _, t in rows], B)
 
     c = np.zeros(B, dtype=np.int64)
     for i, t in rows:
         if i in (0, 1):
-            for g in grams(t):
+            for g in _grams(t):
                 c[bucket(g)] += 1
     lp = textops.lm_bucket_logprobs(c)
     mean_nll = {}
     for i, t in rows:
-        gs = grams(t)
+        gs = _grams(t)
         s = int(sum(lp[bucket(g)] for g in gs))
         assert got.n_grams[i] == len(gs)
         assert got.total_nll[i] == round(-s / (1 << 20), 6)
@@ -494,9 +521,6 @@ def test_cluster_documents_vs_python_replica(spark):
     """Hashed-tf k-means: engine assignment equals an independent hashlib
     replica (shared _lloyd core, independent featurize + argmax), and a
     planted 3-topic corpus clusters with perfect purity."""
-    import hashlib
-    import re
-
     topics = {
         0: "stock market trading shares price index fund bond yield",
         1: "neural network training gradient model layer weight loss",
@@ -518,22 +542,14 @@ def test_cluster_documents_vs_python_replica(spark):
         .set_index("doc_id")
     )
 
-    def grams(text):
-        t = re.sub(r"\s+", " ", re.sub(r"[^\w\s]", " ", (text or "").lower())).strip()
-        toks = [w for w in t.split(" ") if w]
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
     def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-
-    def rank(i):
-        return (int(hashlib.md5(f"{i}:{SEED}".encode()).hexdigest()[:15], 16), i)
+        return _md5_60(g) % B
 
     texts = dict(rows)
-    sample_ids = sorted(sorted(texts), key=rank)[:4096]
+    sample_ids = sorted(texts, key=lambda i: (_md5_60(f"{i}:{SEED}"), i))[:4096]
     X = np.zeros((len(sample_ids), B))
     for r, i in enumerate(sorted(sample_ids)):
-        for g in grams(texts[i]):
+        for g in _grams(texts[i]):
             X[r, bucket(g)] += 1
     from sparktax.simsearch import _lloyd
 
@@ -541,7 +557,7 @@ def test_cluster_documents_vs_python_replica(spark):
     Cq = np.round(C * (1 << 20)).astype(np.int64)
     for i, text in texts.items():
         c = np.zeros(B, dtype=np.int64)
-        for g in grams(text):
+        for g in _grams(text):
             c[bucket(g)] += 1
         dots = Cq @ c
         if (dots > 0).any():
