@@ -17,7 +17,15 @@ containing a ``/`` is treated as a filesystem path → parquet.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import shutil
+import time
+
 from pyspark.sql import DataFrame, SparkSession
+
+from sparktax.ckpt import _write_json_atomic, task_rows
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
@@ -123,23 +131,21 @@ def materialize_edge_buckets(
     reuse to the edges lineage: if the stored ``_sparktax_fp.json``
     differs, the copies are rewritten instead of silently serving stale
     buckets to every downstream 2-hop join."""
-    import hashlib
-
     tag = hashlib.md5(dirpath.encode("utf8")).hexdigest()[:10]
-    fp_path = _os.path.join(dirpath, "_sparktax_fp.json")
+    fp_path = os.path.join(dirpath, "_sparktax_fp.json")
     fp_ok = True
     if fingerprint is not None:
         try:
             with open(fp_path) as f:
-                fp_ok = _json.load(f).get("fingerprint") == fingerprint
+                fp_ok = json.load(f).get("fingerprint") == fingerprint
         except (OSError, ValueError):
             fp_ok = False
     out = []
     wrote = False
     for key in ("h", "t"):
         name = f"sparktax_edges_by_{key}_{tag}"
-        path = _os.path.join(dirpath, f"by_{key}")
-        done = _os.path.exists(_os.path.join(path, "_SUCCESS"))
+        path = os.path.join(dirpath, f"by_{key}")
+        done = os.path.exists(os.path.join(path, "_SUCCESS"))
         if not (fp_ok and done and spark.catalog.tableExists(name)):
             write_bucketed(
                 edges, name, path, key, n_buckets=n_buckets, sort_by=key
@@ -147,9 +153,9 @@ def materialize_edge_buckets(
             wrote = True
         out.append(read_bucketed(spark, name))
     if fingerprint is not None and (wrote or not fp_ok):
-        _os.makedirs(dirpath, exist_ok=True)
+        os.makedirs(dirpath, exist_ok=True)
         with open(fp_path, "w") as f:
-            _json.dump({"fingerprint": fingerprint}, f)
+            json.dump({"fingerprint": fingerprint}, f)
     return out[0], out[1]
 
 
@@ -166,13 +172,9 @@ def materialize_edge_buckets(
 #                           half-written table (what Iceberg's metadata
 #                           pointer swap gives you).
 
-import json as _json
-import os as _os
-import time as _time
-
 
 def _version_dir(table_dir: str, version: int) -> str:
-    return _os.path.join(table_dir, f"v{version:05d}")
+    return os.path.join(table_dir, f"v{version:05d}")
 
 
 def write_snapshot(
@@ -182,11 +184,13 @@ def write_snapshot(
     params: dict | None = None,
 ) -> int:
     """Commit ``df`` as the next snapshot of ``table_dir``; returns the new
-    version. Old versions stay readable (time travel) until vacuumed."""
-    _os.makedirs(table_dir, exist_ok=True)
+    version. Old versions stay readable (time travel) until vacuumed. The
+    logged ``rows`` come from the parquet footers, so a commit costs only
+    its write job."""
+    os.makedirs(table_dir, exist_ok=True)
     existing = [
         int(d[1:])
-        for d in _os.listdir(table_dir)
+        for d in os.listdir(table_dir)
         if d.startswith("v") and d[1:].isdigit()
     ]
     version = max(existing, default=0) + 1
@@ -196,11 +200,10 @@ def write_snapshot(
         w = w.partitionBy(*partition_by)
     w.parquet(vdir)
 
-    spark = df.sparkSession
-    rows = spark.read.parquet(vdir).count()
+    rows = sum(task_rows(vdir).values())
     nbytes = sum(
-        _os.path.getsize(_os.path.join(r, f))
-        for r, _dirs, fs in _os.walk(vdir)
+        os.path.getsize(os.path.join(r, f))
+        for r, _dirs, fs in os.walk(vdir)
         for f in fs
     )
     entry = {
@@ -210,24 +213,21 @@ def write_snapshot(
         "bytes": int(nbytes),
         "partition_by": list(partition_by),
         "params": params or {},
-        "written_at": _time.strftime("%Y-%m-%dT%H:%M:%SZ", _time.gmtime()),
+        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(_os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
-        f.write(_json.dumps(entry, sort_keys=True) + "\n")
+    with open(os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
+        f.write(json.dumps(entry, sort_keys=True) + "\n")
     _set_current(table_dir, version)
     return version
 
 
 def _set_current(table_dir: str, version: int) -> None:
-    tmp = _os.path.join(table_dir, "_current.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    _os.replace(tmp, _os.path.join(table_dir, "_current"))  # atomic commit
+    _write_json_atomic(os.path.join(table_dir, "_current"), version)  # atomic commit
 
 
 def current_version(table_dir: str) -> int | None:
     try:
-        with open(_os.path.join(table_dir, "_current")) as f:
+        with open(os.path.join(table_dir, "_current")) as f:
             return int(f.read().strip())
     except FileNotFoundError:
         return None
@@ -241,18 +241,18 @@ def read_snapshot(
     if v is None:
         raise FileNotFoundError(f"{table_dir} has no committed snapshot")
     vdir = _version_dir(table_dir, v)
-    if not _os.path.isdir(vdir):
+    if not os.path.isdir(vdir):
         raise FileNotFoundError(f"{table_dir} has no snapshot v{v}")
     return spark.read.parquet(vdir)
 
 
 def snapshot_history(table_dir: str) -> list[dict]:
     """The commit log, oldest first (rollbacks appear as 'rollback' ops)."""
-    path = _os.path.join(table_dir, "_snapshots.jsonl")
-    if not _os.path.exists(path):
+    path = os.path.join(table_dir, "_snapshots.jsonl")
+    if not os.path.exists(path):
         return []
     with open(path) as f:
-        return [_json.loads(line) for line in f if line.strip()]
+        return [json.loads(line) for line in f if line.strip()]
 
 
 def _read_set(table_dir: str, version: int) -> list[int]:
@@ -297,7 +297,7 @@ def read_snapshot_union(
     paths = [
         _version_dir(table_dir, i)
         for i in _read_set(table_dir, v)
-        if _os.path.isdir(_version_dir(table_dir, i))
+        if os.path.isdir(_version_dir(table_dir, i))
     ]
     if not paths:
         return None
@@ -361,15 +361,13 @@ def vacuum_snapshots(table_dir: str) -> list[int]:
     reads never touch them; what is given up is time travel / rollback to
     those versions (the trade Iceberg's ``expire_snapshots`` makes).
     Returns the versions removed."""
-    import shutil as _shutil
-
     v = current_version(table_dir)
     if v is None:
         return []
     keep = set(_read_set(table_dir, v))
     existing = sorted(
         int(d[1:])
-        for d in _os.listdir(table_dir)
+        for d in os.listdir(table_dir)
         if d.startswith("v") and d[1:].isdigit()
     )
     removed = []
@@ -377,18 +375,18 @@ def vacuum_snapshots(table_dir: str) -> list[int]:
         if i in keep:
             continue
         vdir = _version_dir(table_dir, i)
-        if _os.path.isdir(vdir):
-            _shutil.rmtree(vdir)
+        if os.path.isdir(vdir):
+            shutil.rmtree(vdir)
             removed.append(i)
     if removed:
-        with open(_os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
+        with open(os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
             f.write(
-                _json.dumps(
+                json.dumps(
                     {
                         "op": "vacuum",
                         "removed": removed,
-                        "written_at": _time.strftime(
-                            "%Y-%m-%dT%H:%M:%SZ", _time.gmtime()
+                        "written_at": time.strftime(
+                            "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                         ),
                     },
                     sort_keys=True,
@@ -400,16 +398,16 @@ def vacuum_snapshots(table_dir: str) -> list[int]:
 
 def rollback_snapshot(table_dir: str, version: int) -> None:
     """Point the table back at an earlier version (the data never moved)."""
-    if not _os.path.isdir(_version_dir(table_dir, version)):
+    if not os.path.isdir(_version_dir(table_dir, version)):
         raise FileNotFoundError(f"{table_dir} has no snapshot v{version}")
-    with open(_os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
+    with open(os.path.join(table_dir, "_snapshots.jsonl"), "a") as f:
         f.write(
-            _json.dumps(
+            json.dumps(
                 {
                     "op": "rollback",
                     "version": version,
-                    "written_at": _time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", _time.gmtime()
+                    "written_at": time.strftime(
+                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                     ),
                 },
                 sort_keys=True,

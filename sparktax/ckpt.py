@@ -52,6 +52,19 @@ def _write_json_atomic(path: str, obj: Any, **kw) -> None:
     os.replace(path + ".tmp", path)
 
 
+def task_rows(data_dir: str) -> dict[int, int]:
+    """Rows per write task from the parquet footers under ``data_dir``,
+    partition subdirectories included; tasks that wrote no rows are left
+    out. Reads no data and runs no Spark job."""
+    per_task: Counter[int] = Counter()
+    for root, _dirs, files in os.walk(data_dir):
+        for f in files:  # part-NNNNN-<uuid>-cNNN.<codec>.parquet; NNNNN = write task
+            if f.startswith("part-"):
+                n = pq.read_metadata(os.path.join(root, f)).num_rows
+                per_task[int(f.split("-")[1])] += n
+    return {t: n for t, n in sorted(per_task.items()) if n}
+
+
 class StageCheckpointer:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -110,12 +123,7 @@ class StageCheckpointer:
         wall = time.perf_counter() - t0
 
         files = os.listdir(data_dir)
-        per_task: Counter[int] = Counter()
-        for f in files:  # part-NNNNN-<uuid>-cNNN.<codec>.parquet; NNNNN = write task
-            if f.startswith("part-"):
-                n = pq.read_metadata(os.path.join(data_dir, f)).num_rows
-                per_task[int(f.split("-")[1])] += n
-        parts = {t: n for t, n in sorted(per_task.items()) if n}
+        parts = task_rows(data_dir)
         manifest = {
             "stage": name,
             "fingerprint": fp,

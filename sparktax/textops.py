@@ -243,7 +243,7 @@ def dedup_incremental(
             F.lit(None).cast("array<long>").alias("sh"),
         )
         v = write_snapshot(store, index_dir, params={"near": False})
-        kept = spark.read.parquet(_version_dir(index_dir, v))
+        kept = spark.read.schema(store.schema).parquet(_version_dir(index_dir, v))
         return new_batch.join(
             kept.select(F.col("doc_id").alias(id_col)), id_col, "semi"
         )
@@ -263,11 +263,12 @@ def dedup_incremental(
     )
 
     # ---- commit the batch's exact-survivors (kept AND near-dropped),
-    # then read the committed parquet back: ONE materialization of the
-    # signature stage feeds every join below
+    # then read the committed parquet back with the written schema (no
+    # inference job): ONE materialization of the signature stage feeds
+    # every join below
     store = enriched.select(F.col(id_col).alias("doc_id"), "fp", "sig", "sh")
     v = write_snapshot(store, index_dir, params={"near": True, "threshold": threshold})
-    stored = spark.read.parquet(_version_dir(index_dir, v))
+    stored = spark.read.schema(store.schema).parquet(_version_dir(index_dir, v))
 
     def _verify(cand: DataFrame, a: str, b: str, sh_b: DataFrame) -> DataFrame:
         """Exact Jaccard over stored shingle-hash arrays for candidate

@@ -30,6 +30,27 @@ def _ids(df):
     return sorted(r.id for r in df.select("id").collect())
 
 
+@pytest.mark.parametrize("kind", ["plain", "partitioned", "empty"])
+def test_commit_runs_one_job_and_logs_footer_rows(spark, tmp_path, kind):
+    """A commit costs only its write job: the logged ``rows`` comes from
+    the parquet footers (partition subdirectories included), not from a
+    re-read with schema inference plus a count."""
+    df = spark.range(1000, numPartitions=4).select("id", (F.col("id") % 3).alias("k"))
+    if kind == "empty":
+        df = df.filter(F.col("id") < 0)
+    idx = str(tmp_path / "t")
+    group = f"snapshot-cost-{kind}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        write_snapshot(df, idx, partition_by=("k",) if kind == "partitioned" else ())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert snapshot_history(idx)[-1]["rows"] == df.count()
+
+
 def test_compact_preserves_union_and_shortcuts_reads(spark, tmp_path):
     idx = str(tmp_path / "t")
     for lo in (0, 10, 20):
