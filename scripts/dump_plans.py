@@ -4,8 +4,13 @@ Usage: python scripts/dump_plans.py <suffix> [query ...]
 
 With no query names, dumps every bench HEADLINE query (using the bench
 OVERRIDES so the captured plan is the plan the bench actually times).
-Planning only — nothing is executed, so this is safe to run while other
-work is in flight. The dumps are for ad-hoc before/after diffs and are not
+Expression ids (``#<id>``), ``plan_id=<n>`` tags and RDD ids
+(``RDD[<n>]``) are always replaced by fixed text, so ``diff -r`` of the
+``plans/`` dirs of two checkouts dumped with the same suffix is the
+plan-identity check between them. Mostly planning: a few query functions
+run jobs of their own (centroid training, ``dedup_incremental``'s
+snapshot commits), and their dumps also hold temp paths that differ
+between runs. The dumps are for ad-hoc before/after diffs and are not
 committed; ``tests/test_plan_shape.py`` holds the asserted plan shapes.
 """
 
@@ -13,6 +18,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -21,6 +27,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 import __spark_entry__ as E  # noqa: E402
 from sparktax.session import get_spark  # noqa: E402
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with its per-session ids replaced: ``#123L`` -> ``#NL``,
+    ``plan_id=45`` -> ``plan_id=N``, ``RDD[289]`` -> ``RDD[N]``."""
+    for pat, rep in (
+        (r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"), (r"RDD\[\d+\]", "RDD[N]")
+    ):
+        plan = re.sub(pat, rep, plan)
+    return plan
 
 
 def main() -> None:
@@ -44,7 +60,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(normalize(buf.getvalue()))
         print(f"wrote {path}")
     spark.stop()
 

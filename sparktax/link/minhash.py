@@ -9,16 +9,18 @@ Pipeline (the SparkER / MinHashLSH pattern):
                      ``xxhash64(shingle)``; one ``groupBy(id)`` computing k
                      ``min`` aggregates in a single shuffle (map-side
                      partial aggregation keeps it cheap).
-3. ``lsh_candidate_pairs`` — split the signature into b bands of r rows,
-                     hash each band, self-join on (band, hash). Only
-                     bucket-mates become candidates; the self-join is an
-                     equi-join Catalyst can shuffle-hash, and AQE splits
-                     skewed buckets.
+3. ``lsh_candidate_pairs`` — ``band_buckets`` splits the signature into b
+                     bands of r rows and hashes each into a (band, bucket)
+                     key; ``bucket_pairs``, the one bucket-mate self-join,
+                     pairs ids sharing a key (an equi-join Catalyst can
+                     shuffle-hash; AQE splits skewed buckets).
 4. ``exact_jaccard`` — verify candidates with the exact n-gram Jaccard via
                      a shingle join (no false positives leave the stage).
 
-Used for fuzzy entity linking (canonicalization) *and* for near-duplicate
-document detection (sparktax.textops).
+Used for fuzzy entity linking (canonicalization) *and* by every
+near-duplicate operator: n-gram Jaccard blocks on the shingle itself;
+SimHash and sign-LSH embeddings cut packed-bit signatures into bands with
+``sig_bands`` (:mod:`sparktax.textops`, :mod:`sparktax.simsearch`).
 """
 
 from __future__ import annotations
@@ -113,9 +115,9 @@ def band_buckets(
     table. Bucket keys are xxhash64 of the band slice (8-byte shuffle
     keys) by default; ``hasher="md5"`` uses the raw comma-joined slice
     string — bigger keys, but engine-portable (the oracle path); any
-    other ``hasher`` raises. Shared by the self-join candidate generator
-    below and the incremental-dedup index (new-batch buckets equi-join
-    STORED buckets)."""
+    other ``hasher`` raises. Shared by :func:`lsh_candidate_pairs` and the
+    incremental-dedup index (new-batch buckets equi-join STORED
+    buckets)."""
     check_hasher(hasher)
     r_expr = (F.size("sig") / F.lit(bands)).cast("int")
 
@@ -144,25 +146,53 @@ def band_buckets(
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def sig_bands(sigs: DataFrame, n_bits: int, n_bands: int) -> DataFrame:
+    """(id, band, key) — the packed-bit band cut: each ``n_bits``-bit
+    signature ``sig`` (a long) is cut into ``n_bands`` slices of
+    ``n_bits // n_bands`` bits. Two signatures within ``n_bands − 1``
+    differing bits share at least one slice (pigeonhole), so blocking on
+    (band, key) finds every such pair."""
+    bits = n_bits // n_bands
+    mask = (1 << bits) - 1
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.shiftrightunsigned("sig", bits * i)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("key"),
+                    )
+                    for i in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("id", "bk.band", "bk.key")
+
+
+def bucket_pairs(keys: DataFrame, on: list[str]) -> DataFrame:
+    """(a, b), a < b, distinct — every pair of ``id``s that share a
+    blocking key ``on`` (the bucket-mate self-join of every blocking
+    lane: (band, bucket), a shingle, or a (band, key) bit slice)."""
+    return (
+        keys.alias("x")
+        .join(keys.alias("y"), on)
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16, hasher: str = "xxhash64") -> DataFrame:
     """(a, b) candidate pairs, a < b, deduplicated across bands.
 
     Rows-per-band r = k / bands; similarity threshold ≈ (1/b)^(1/r).
     """
-    buckets = band_buckets(sigs, bands=bands, hasher=hasher)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
+    return bucket_pairs(
+        band_buckets(sigs, bands=bands, hasher=hasher), ["band", "bucket"]
     )
-    return pairs
 
 
 def exact_jaccard(

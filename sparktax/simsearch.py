@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
 from sparktax.hashing import seeded_hash
+from sparktax.link.minhash import bucket_pairs, sig_bands
 
 
 def _dot(a, b):
@@ -245,7 +246,7 @@ def lsh_topk(
         sigs = hyperplane_signatures(
             df, dim, n_planes, seed, id_col, vec_col, plane_gen
         )
-        return _sig_bands(sigs, n_planes, n_bands)
+        return sig_bands(sigs, n_planes, n_bands)
 
     cand = (
         banded(embeddings).alias("c")
@@ -255,30 +256,6 @@ def lsh_topk(
         .distinct()
     )
     return top_k(rerank_cosine(cand, embeddings, queries, id_col, vec_col), k)
-
-
-def _sig_bands(sigs: DataFrame, n_planes: int, n_bands: int) -> DataFrame:
-    """(id, band, key) — each packed sign signature cut into ``n_bands``
-    slices of ``n_planes // n_bands`` bits; vectors sharing any
-    (band, key) become candidates."""
-    bits = n_planes // n_bands
-    mask = (1 << bits) - 1
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("sig", bits * i)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
 
 
 def _lloyd(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
@@ -411,8 +388,15 @@ def top_cells(
         raise ValueError(f"mode must be 'float' or 'md5int', got {mode!r}")
     cells = _top_cells_udf(centroids, n)(F.col(vec_col))
     # top-1 stays a projection: unlike a generator, Catalyst prunes it when
-    # the cell is unused (semantic_dedup's kept-id output), skipping the UDF
-    cell = F.element_at(cells, 1) if n == 1 else F.explode(cells)
+    # the cell is unused (semantic_dedup's kept-id output), skipping the UDF.
+    # It is also non-nullable (the UDF always returns >= 1 cell): a join on
+    # a nullable cell infers isnotnull(cell), and that filter, pushed below
+    # the projection, runs the UDF over every vector a second time
+    cell = (
+        F.coalesce(F.element_at(cells, 1), F.lit(-1))
+        if n == 1
+        else F.explode(cells)
+    )
     return df.select(F.col(id_col).alias("id"), cell.alias("cell"))
 
 
@@ -626,14 +610,7 @@ def embedding_near_duplicates(
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
     sigs = hyperplane_signatures(e, dim, n_planes, seed, "_id", "_v", plane_gen)
-    banded = _sig_bands(sigs, n_planes, n_bands)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
+    cand = bucket_pairs(sig_bands(sigs, n_planes, n_bands), ["band", "key"])
     va = e.select(F.col("_id").alias("a"), F.col("_v").alias("_va"))
     vb = e.select(F.col("_id").alias("b"), F.col("_v").alias("_vb"))
     pairs = cand.join(va, "a").join(vb, "b")

@@ -14,7 +14,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparktax.hashing import md5_32, md5_60, md5_rank_expr, seeded_hash
-from sparktax.link.minhash import exact_jaccard, fuzzy_match_pairs, shingle
+from sparktax.link.minhash import (
+    bucket_pairs,
+    exact_jaccard,
+    fuzzy_match_pairs,
+    shingle,
+    sig_bands,
+)
 
 # --------------------------------------------------------------------------
 # normalization + fingerprints
@@ -54,17 +60,22 @@ def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def dedup_exact(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep one representative (min doc_id) per identical normalized text."""
-    fp = fingerprint(documents, text_col)
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    keep = (
-        documents.join(fp, "doc_id")
+def _exact_survivors(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """The exact lane: the rows of ``documents`` plus their ``fp`` (md5 of
+    the normalized text, as :func:`fingerprint`), one row per ``fp`` —
+    the min ``id_col``. A projection plus one window; no join."""
+    w = Window.partitionBy("fp").orderBy(id_col)
+    return (
+        documents.withColumn("fp", F.md5(normalized_text(F.col(text_col))))
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
-        .drop("_rk", "fp")
+        .drop("_rk")
     )
-    return keep
+
+
+def dedup_exact(documents: DataFrame, text_col: str = "text") -> DataFrame:
+    """Keep one representative (min doc_id) per identical normalized text."""
+    return _exact_survivors(documents, text_col, "doc_id").drop("fp")
 
 
 def ngram_jaccard_pairs(
@@ -83,13 +94,7 @@ def ngram_jaccard_pairs(
     path below is the probabilistic scale path.
     """
     sh = shingle(documents.select(F.col(id_col).alias("id"), text_col), text_col, "id", n=n)
-    pairs = (
-        sh.alias("x")
-        .join(sh.alias("y"), "shingle")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
+    pairs = bucket_pairs(sh, ["shingle"])
     # every candidate shares >=1 shingle by construction, so the
     # zero-intersection left-join lane of exact_jaccard can never fire —
     # the inner form is identical and one pair-set join cheaper
@@ -144,7 +149,7 @@ def dedup_near(
     than connected components) is what makes the operation INCREMENTAL:
     a doc's fate depends only on docs before it, never on later arrivals,
     so :func:`dedup_incremental` reproduces it batch by batch."""
-    ex = dedup_exact(documents, text_col)
+    ex = _exact_survivors(documents, text_col, id_col).drop("fp")
     pairs = minhash_near_duplicates(
         ex, threshold=threshold, n=n, k=k, bands=bands,
         text_col=text_col, id_col=id_col, hasher=hasher,
@@ -207,7 +212,6 @@ def dedup_incremental(
         band_buckets,
         lsh_candidate_pairs,
         minhash_signatures,
-        shingle,
     )
 
     spark = new_batch.sparkSession
@@ -222,16 +226,7 @@ def dedup_incremental(
     new_batch = new_batch.dropDuplicates([id_col])
 
     # ---- exact lane: min id per fp within the batch, then fp anti-join
-    fp = new_batch.select(
-        F.col(id_col), F.md5(normalized_text(F.col(text_col))).alias("fp")
-    )
-    w = Window.partitionBy("fp").orderBy(id_col)
-    ex = (
-        new_batch.join(fp, id_col)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    ex = _exact_survivors(new_batch, text_col, id_col)
     if index is not None:
         ex = ex.join(index.select("fp").distinct(), "fp", "left_anti")
 
@@ -335,8 +330,8 @@ def simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
     row before the shuffle. Empty/whitespace-only docs hash to 0.
 
     Bit 63 is packed via a −2⁶³ offset (never summing past long range);
-    near-dups differ in few bits — pair them with 16-bit-band blocking in
-    :func:`simhash_near_duplicates`.
+    near-dups differ in few bits — :func:`simhash_near_duplicates` pairs
+    them with the shared band cut and bucket-mate self-join.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
     # split() emits "" tokens at text boundaries; instead of an interpreted
@@ -379,41 +374,25 @@ def simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_near_duplicates(
     documents: DataFrame, max_hamming: int = 3, text_col: str = "text"
 ) -> DataFrame:
-    """(a, b, hamming) — pairs within ``max_hamming`` bits, found by
-    16-bit-band exact-match blocking (pigeonhole: ≤3 differing bits ⇒ ≥1 of
-    4 bands identical) then verified."""
-    sh = simhash(documents, text_col)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band", "key"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("a"),
-            F.col("y.doc_id").alias("b"),
-            F.bit_count(
-                F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
+    """(a, b, hamming) — pairs within ``max_hamming`` bits. Blocking cuts
+    each SimHash into 4 16-bit bands (:func:`~sparktax.link.minhash.sig_bands`)
+    and pairs bucket-mates (:func:`~sparktax.link.minhash.bucket_pairs`);
+    the two hashes then join back for ``bit_count(a xor b)``. Exact for
+    ``max_hamming`` ≤ 3 (pigeonhole: ≤3 differing bits ⇒ ≥1 of 4 bands
+    identical); above that, pairs differing in every band are missed."""
+    sh = simhash(documents, text_col).select(
+        F.col("doc_id").alias("id"), F.col("simhash").alias("sig")
     )
-    return cand.filter(F.col("hamming") <= max_hamming)
+    cand = bucket_pairs(sig_bands(sh, 64, 4), ["band", "key"])
+    ha = sh.select(F.col("id").alias("a"), F.col("sig").alias("_ha"))
+    hb = sh.select(F.col("id").alias("b"), F.col("sig").alias("_hb"))
+    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
+    return (
+        cand.join(ha, "a")
+        .join(hb, "b")
+        .select("a", "b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def winnow_fingerprints(

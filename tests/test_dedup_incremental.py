@@ -134,3 +134,17 @@ def test_rollback_makes_batch_invisible(spark, batches, tmp_path):
     # re-ingesting batch 2 after rollback reproduces its original result
     surv2 = textops.dedup_incremental(b2, idx, **PARAMS)
     assert {r.doc_id for r in surv2.select("doc_id").collect()} == ids2
+
+
+def test_dedup_near_honours_id_col(spark, batches):
+    """``dedup_near(id_col=...)`` runs its exact lane on ``id_col`` too: a
+    frame keyed by another column name keeps the same survivors."""
+    corpus = _corpus(batches)
+    want = sorted(
+        r.doc_id for r in textops.dedup_near(corpus, **PARAMS).select("doc_id").collect()
+    )
+    renamed = corpus.withColumnRenamed("doc_id", "key")
+    surv = textops.dedup_near(renamed, id_col="key", **PARAMS)
+    assert surv.columns == ["key", "text"]
+    assert sorted(r.key for r in surv.select("key").collect()) == want
+    assert 910001 not in want and 910002 not in want  # both lanes fired

@@ -218,6 +218,19 @@ CHECKS: dict[str, list[tuple[str, Callable[[str], bool]]]] = {
         ("quantized assignment + pair cosine partial-aggregate map-side",
          lambda p: p.count("HashAggregate") >= 2),
     ],
+    # the float top_cells lanes: the BLAS cell UDF runs once per top_cells
+    # call; a nullable top-1 cell would make the cell join infer an
+    # isnotnull(cell) filter below the projection, a second UDF pass
+    "semantic_dedup_bench": [
+        ("one ArrowEvalPython per side of the cell self-join, none under "
+         "an inferred isnotnull(cell) filter",
+         lambda p: p.count("ArrowEvalPython") == 2),
+    ],
+    "ivf_full_probe": [
+        ("one ArrowEvalPython per top_cells call (corpus top-1, query "
+         "probes), none under an inferred isnotnull(cell) filter",
+         lambda p: p.count("ArrowEvalPython") == 2),
+    ],
     "dsir_weights": [
         ("8k-row weight table broadcast against the exploded grams (the "
          "corpus side never shuffles by gram)",
@@ -287,7 +300,10 @@ CHECKS: dict[str, list[tuple[str, Callable[[str], bool]]]] = {
 # tiny result; executed so the final adaptive plan (with codegen) is read
 EXECUTE = {"agg_pricing"}
 # checked lanes that are not gate queries
-LANES = {"dsir_weights_bench": OVERRIDES["dsir_weights"]}
+LANES = {
+    "dsir_weights_bench": OVERRIDES["dsir_weights"],
+    "semantic_dedup_bench": OVERRIDES["semantic_dedup"],
+}
 CASES = [(q, i) for q, checks in CHECKS.items() for i in range(len(checks))]
 
 

@@ -187,6 +187,23 @@ def test_simhash_hamming(spark):
     assert (1, 2) in set(zip(pairs.a, pairs.b))
 
 
+def test_simhash_near_duplicates_matches_all_pairs(spark, docs):
+    """4×16-bit band blocking is exact up to 3 differing bits (pigeonhole):
+    the blocked pairs equal the all-pairs Hamming ≤ 3 set."""
+    sh = textops.simhash(docs).toPandas()
+    ids, hs = sh.doc_id.tolist(), [int(h) & ((1 << 64) - 1) for h in sh.simhash]
+    want = {
+        (min(ids[i], ids[j]), max(ids[i], ids[j]))
+        for i in range(len(ids))
+        for j in range(i + 1, len(ids))
+        if bin(hs[i] ^ hs[j]).count("1") <= 3
+    }
+    got = textops.simhash_near_duplicates(docs, max_hamming=3).toPandas()
+    assert len(got) == len(want) == 23
+    assert set(zip(got.a, got.b)) == want
+    assert all(got.hamming <= 3)
+
+
 def test_decontaminate_planted(spark):
     probe_sent = "the quick brown fox jumps over the lazy benchmark dog"
     pdf = pd.DataFrame(
