@@ -11,6 +11,7 @@ aligned pairwise; scores are rounded so value hashes match across engines.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -23,6 +24,35 @@ sys.path.insert(0, _REPO)
 _SHIPPED: set[int] = set()
 
 
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp directory, removed when this process exits. The query
+    frames read what is written there lazily, so it cannot be removed
+    when the function that made it returns."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+@functools.cache
+def _pkg_zip() -> str:
+    """The sparktax sources as one zip, built once per process."""
+    import zipfile
+
+    zp = os.path.join(_temp_dir("sparktax_pkg_"), "sparktax_pkg.zip")
+    with zipfile.ZipFile(zp, "w") as z:
+        pkg = os.path.join(_REPO, "sparktax")
+        for root, _dirs, files in os.walk(pkg):
+            for fname in files:
+                if fname.endswith(".py"):
+                    full = os.path.join(root, fname)
+                    z.write(full, os.path.relpath(full, _REPO))
+    return zp
+
+
 def _ensure_pkg(spark: "SparkSession") -> None:
     """Ship the sparktax package to executor Python workers.
 
@@ -33,19 +63,7 @@ def _ensure_pkg(spark: "SparkSession") -> None:
     key = id(spark.sparkContext)
     if key in _SHIPPED:
         return
-    import tempfile
-    import zipfile
-
-    zp = os.path.join(tempfile.gettempdir(), f"sparktax_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zp):
-        with zipfile.ZipFile(zp, "w") as z:
-            pkg = os.path.join(_REPO, "sparktax")
-            for root, _dirs, files in os.walk(pkg):
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        z.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zp)
+    spark.sparkContext.addPyFile(_pkg_zip())
     _SHIPPED.add(key)
 
 from pyspark.sql import DataFrame, SparkSession
@@ -308,12 +326,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     union of survivors must equal whole-corpus exact dedup (oracle:
     min-id per normalized fingerprint). The near lane's batch-equals-
     whole-corpus proof lives in tests/test_dedup_incremental.py."""
-    import tempfile
-
     from sparktax.textops import dedup_incremental, fingerprint
 
     docs = _t(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="sparktax_incdex_")
+    idx = _temp_dir("sparktax_incdex_")
     s1 = dedup_incremental(docs.filter(F.col("doc_id") < 250), idx, near=False)
     s2 = dedup_incremental(docs.filter(F.col("doc_id") >= 250), idx, near=False)
     surv = s1.select("doc_id").unionByName(s2.select("doc_id"))
@@ -660,23 +676,29 @@ def _bucket_count_vec(where: str, buckets: int):
     return c
 
 
-def _sample_matrix_replica(where: str, buckets: int, seed: int):
-    """Bucket-count matrix of the hash-rank training sample of the gate
-    documents ``where`` keeps: the 4096 ids smallest by (md5-60 of
-    ``"id:seed"``, id) in hashlib, one row each in id order — a doc with no
-    grams keeps its zero row."""
+def _md5_rank_sample(rows: list, seed: int, n: int = 4096) -> list:
+    """The ``n`` rows (id first) smallest by (md5-60 of ``"id:seed"``, id),
+    in that order — hashlib's twin of the Spark-side md5-rank training
+    sample (``sparktax.hashing.md5_rank_expr``)."""
     import hashlib
 
-    import numpy as np
-
-    def rank(i):
+    def rank(r):
         return (
-            int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:15], 16),
-            i,
+            int(hashlib.md5(f"{r[0]}:{seed}".encode()).hexdigest()[:15], 16),
+            r[0],
         )
 
-    ids = [r[0] for r in _gate_rows(where, "SELECT doc_id FROM documents")]
-    row_of = {d: r for r, d in enumerate(sorted(sorted(ids, key=rank)[:4096]))}
+    return sorted(rows, key=rank)[:n]
+
+
+def _sample_matrix_replica(where: str, buckets: int, seed: int):
+    """Bucket-count matrix of the hash-rank training sample of the gate
+    documents ``where`` keeps (:func:`_md5_rank_sample`), one row each in
+    id order — a doc with no grams keeps its zero row."""
+    import numpy as np
+
+    ids = _gate_rows(where, "SELECT doc_id FROM documents")
+    row_of = {r[0]: i for i, r in enumerate(sorted(_md5_rank_sample(ids, seed)))}
     X = np.zeros((len(row_of), buckets))
     for d, b, n in _gate_rows(
         where,
@@ -1334,8 +1356,6 @@ def q_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, so the scan reads only matching buckets
     (``SelectedBucketsCount`` — plan-audited). Same centroids + quantized
     assignment ⇒ bit-identical results ⇒ the same DuckDB oracle."""
-    import tempfile
-
     from sparktax.simsearch import (
         ivf_topk_indexed,
         materialize_ivf_index,
@@ -1345,7 +1365,7 @@ def q_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     C = train_ivf_centroids(emb, 16, rank_on="md5")
     idx = materialize_ivf_index(
-        spark, emb, tempfile.mkdtemp(prefix="sparktax_ivfidx_"), C,
+        spark, emb, _temp_dir("sparktax_ivfidx_"), C,
         assign_mode="md5int",
     )
     queries = emb.orderBy("vec_id").limit(5)
@@ -1425,8 +1445,6 @@ def q_openke_filtered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lightweight + exclude_entities). The fixture is derived
     deterministically from the supplier table, so the oracle recomputes
     the expected surviving triples straight from SQL."""
-    import tempfile
-
     from sparktax.graph.io import read_openke_dir
 
     supp = (
@@ -1435,10 +1453,7 @@ def q_openke_filtered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("s_suppkey")
         .collect()
     )
-    d = os.path.join(
-        tempfile.gettempdir(), f"sparktax_openke_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    os.makedirs(d, exist_ok=True)
+    d = _temp_dir("sparktax_openke_")
     ents = [("owl:Thing", 0), ("dbo:Junk:Wikidata", 90)]
     ents += [(f"dbo:N{i}", 1 + i) for i in range(25)]
     ents += [(f"dbr:S{r.s_suppkey}", 100 + r.s_suppkey) for r in supp]
@@ -1717,6 +1732,18 @@ _COSINE_TOPK_SQL = """
 """
 
 
+# quantized vector elements, the DuckDB twin of the ``round(x·2²⁰)`` side
+# of sparktax.simsearch._quantized_dots; every md5int vector oracle
+# starts from it
+_QV_CTE = """
+        qv AS (
+            SELECT vec_id AS id, i - 1 AS pos,
+                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
+            FROM embeddings,
+                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
+        )"""
+
+
 def _lsh_sig_cte(n_planes: int = 16, n_bands: int = 4, seed: int = 42) -> str:
     """Shared CTE chain replicating sparktax.simsearch.hyperplane_signatures
     with ``plane_gen="md5int"``: integer weights in [-1000, 1000] from the
@@ -1737,12 +1764,7 @@ def _lsh_sig_cte(n_planes: int = 16, n_bands: int = 4, seed: int = 42) -> str:
                   AS pos) q
         ),
         w AS (SELECT plane, pos, ({hex15}) % 2001 - 1000 AS w FROM grid),
-        qv AS (
-            SELECT vec_id AS id, i - 1 AS pos,
-                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
-            FROM embeddings,
-                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-        ),
+        {_QV_CTE},
         dots AS (
             SELECT id, plane, sum(q * w) AS s
             FROM qv JOIN w USING (pos) GROUP BY 1, 2
@@ -1858,56 +1880,42 @@ _MEDIA_GOLD_SQL = """
 """
 
 
-def _md5int_centroid_values(n_cells: int, seed: int) -> str:
-    """``(cell, pos, w)`` VALUES rows for the md5int centroid oracles:
-    read the gate parquet directly (outside Spark), sort by the hashlib
-    md5 rank (bit-identical to the Spark-side
-    ``sparktax.hashing.md5_rank_expr``), run the SAME numpy ``_lloyd``,
-    quantize to ``round(c·2²⁰)`` ints."""
-    import hashlib
-
+def _gate_vec_sample(seed: int):
+    """The md5-rank training sample of the gate embeddings, read outside
+    Spark (:func:`_md5_rank_sample`), as a row-ordered float matrix — the
+    rows the md5-rank trainers see."""
     import duckdb
     import numpy as np
 
-    from sparktax.simsearch import _lloyd
-
-    sf_dir = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
+        f"read_parquet('{_oracle_sf_dir()}/embeddings.parquet')"
     ).fetchall()
-    rows.sort(
-        key=lambda r: (
-            int(hashlib.md5(f"{r[0]}:{seed}".encode()).hexdigest()[:15], 16),
-            r[0],
-        )
-    )
-    X = np.array([r[1] for r in rows[:4096]], dtype=float)
-    C = _lloyd(X, n_cells, 10, seed)
-    Cq = np.round(C * (1 << 20)).astype(np.int64)
+    return np.array([r[1] for r in _md5_rank_sample(rows, seed)], dtype=float)
+
+
+def _int_values(A) -> str:
+    """VALUES rows ``(i, j, …, round(a·2²⁰))``, one per entry of ``A``,
+    its indices first: the integer weights of the md5int oracles."""
+    import numpy as np
+
+    Q = np.round(A * (1 << 20)).astype(np.int64)
     return ", ".join(
-        f"({i}, {j}, {int(Cq[i, j])})"
-        for i in range(Cq.shape[0])
-        for j in range(Cq.shape[1])
+        f"({', '.join(map(str, ix))}, {int(v)})" for ix, v in np.ndenumerate(Q)
     )
 
 
-def _semantic_dedup_sql(
-    threshold: float = 0.2, n_cells: int = 8, seed: int = 42
-) -> str:
-    """DuckDB replica of md5int SemDeDup: same quantized cell assignment
-    as the IVF oracle (rk=1 cell per vector), within-cell pairs a<b scored
-    by the 6dp-rounded cosine, b dropped when any smaller-id same-cell
-    vector scores ≥ threshold — kept (vec_id, cell) bit-identical."""
-    w_values = _md5int_centroid_values(n_cells, seed)
+def _cells_cte(n_cells: int, seed: int) -> str:
+    """``ranked`` (id, cell, rk) over ``qv``: every vector's cells by the
+    all-integer dot with the md5int centroids, ties toward the higher
+    cell. The centroids are recomputed HERE, outside Spark: the hashlib
+    md5-rank sample of the gate parquet through the SAME numpy ``_lloyd``,
+    quantized to ``round(c·2²⁰)`` ints as literal VALUES."""
+    from sparktax.simsearch import _lloyd
+
+    w_values = _int_values(_lloyd(_gate_vec_sample(seed), n_cells, 10, seed))
     return f"""
-        WITH w(cell, pos, w) AS (VALUES {w_values}),
-        qv AS (
-            SELECT vec_id AS id, i - 1 AS pos,
-                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
-            FROM embeddings,
-                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-        ),
+        w(cell, pos, w) AS (VALUES {w_values}),
         dots AS (
             SELECT id, cell, sum(q * w) AS s
             FROM qv JOIN w USING (pos) GROUP BY 1, 2
@@ -1917,7 +1925,19 @@ def _semantic_dedup_sql(
                    row_number() OVER (PARTITION BY id
                        ORDER BY s DESC, cell DESC) AS rk
             FROM dots
-        ),
+        )
+    """
+
+
+def _semantic_dedup_sql(
+    threshold: float = 0.2, n_cells: int = 8, seed: int = 42
+) -> str:
+    """DuckDB replica of md5int SemDeDup: same quantized cell assignment
+    as the IVF oracle (rk=1 cell per vector), within-cell pairs a<b scored
+    by the 6dp-rounded cosine, b dropped when any smaller-id same-cell
+    vector scores ≥ threshold — kept (vec_id, cell) bit-identical."""
+    return f"""
+        WITH {_QV_CTE}, {_cells_cte(n_cells, seed)},
         cells AS (SELECT id, cell FROM ranked WHERE rk = 1),
         pairs AS (
             SELECT x.id AS a, y.id AS b
@@ -1939,40 +1959,10 @@ def _semantic_dedup_sql(
     """
 
 
-def _ivf_sql(
-    k: int = 4, n_cells: int = 16, n_probe: int = 4, seed: int = 42
-) -> str:
-    """DuckDB replica of the md5int IVF probe. The centroids are
-    recomputed HERE, outside Spark: read the gate's parquet directly, sort
-    by the hashlib md5 rank (bit-identical to the Spark-side
-    ``sparktax.hashing.md5_rank_expr``), run the SAME numpy ``_lloyd``,
-    quantize to ``round(c·2²⁰)`` ints, and embed them as literal VALUES.
-    Assignment is then all-integer in both engines; rerank is the proven
-    rounded-cosine pattern. The gate runs at sf0.01 (driver contract);
-    :func:`_oracle_sf_dir` names the data for local checks at other
-    scales."""
-    w_values = _md5int_centroid_values(n_cells, seed)
-    return f"""
-        WITH w(cell, pos, w) AS (VALUES {w_values}),
-        qv AS (
-            SELECT vec_id AS id, i - 1 AS pos,
-                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
-            FROM embeddings,
-                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-        ),
-        dots AS (
-            SELECT id, cell, sum(q * w) AS s
-            FROM qv JOIN w USING (pos) GROUP BY 1, 2
-        ),
-        ranked AS (
-            SELECT id, cell,
-                   row_number() OVER (PARTITION BY id
-                       ORDER BY s DESC, cell DESC) AS rk
-            FROM dots
-        ),
+# the md5int IVF probe's candidate pairs over ``ranked`` and ``q5``
+_PROBE_CTE = """
         corpus_cells AS (SELECT id AS neighbor_id, cell FROM ranked
                          WHERE rk = 1),
-        q5 AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
         probe AS (
             SELECT id AS query_id, cell FROM ranked
             WHERE rk <= {n_probe} AND id IN (SELECT vec_id FROM q5)
@@ -1981,7 +1971,21 @@ def _ivf_sql(
             SELECT DISTINCT p.query_id, c.neighbor_id
             FROM probe p JOIN corpus_cells c USING (cell)
             WHERE p.query_id <> c.neighbor_id
-        ),
+        )"""
+
+
+def _ivf_sql(
+    k: int = 4, n_cells: int = 16, n_probe: int = 4, seed: int = 42
+) -> str:
+    """DuckDB replica of the md5int IVF probe: the :func:`_cells_cte`
+    assignment (all-integer in both engines), then the proven
+    rounded-cosine rerank. The gate runs at sf0.01 (driver contract);
+    :func:`_oracle_sf_dir` names the data for local checks at other
+    scales."""
+    return f"""
+        WITH {_QV_CTE}, {_cells_cte(n_cells, seed)},
+        q5 AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
+        {_PROBE_CTE.format(n_probe=n_probe)},
         scored AS (
             SELECT cand.query_id, cand.neighbor_id,
                    round(list_cosine_similarity(
@@ -2002,31 +2006,15 @@ def _ivf_sql(
 def _pq_codebook_values(
     m_sub: int = 8, n_codes: int = 16, seed: int = 42
 ) -> tuple[str, int]:
-    """Codebooks for the PQ oracles, recomputed OUTSIDE Spark: read the
-    gate parquet, sort by the hashlib md5 rank (bit-identical to the
-    ``sparktax.hashing.md5_rank_expr`` sample order), run the SAME numpy
-    L2 Lloyd per subspace (seed+m), quantize to ``round(c·2²⁰)`` ints, and emit
-    them as a VALUES list ``(sub, subpos, code, cw)``. Returns the
-    VALUES string and sub_dim."""
-    import hashlib
-
-    import duckdb
+    """Codebooks for the PQ oracles, recomputed OUTSIDE Spark: the
+    hashlib md5-rank sample of the gate parquet through the SAME numpy L2
+    Lloyd per subspace (seed+m), as ``(sub, code, subpos, cw)`` VALUES of
+    ``round(c·2²⁰)`` ints. Returns the VALUES string and sub_dim."""
     import numpy as np
 
     from sparktax.pq import _lloyd_l2
 
-    sf_dir = _oracle_sf_dir()
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    rows.sort(
-        key=lambda r: (
-            int(hashlib.md5(f"{r[0]}:{seed}".encode()).hexdigest()[:15], 16),
-            r[0],
-        )
-    )
-    X = np.array([r[1] for r in rows[:4096]], dtype=float)
+    X = _gate_vec_sample(seed)
     sub_dim = X.shape[1] // m_sub
     cb = np.stack(
         [
@@ -2034,28 +2022,18 @@ def _pq_codebook_values(
             for m in range(m_sub)
         ]
     )
-    Cq = np.round(cb * (1 << 20)).astype(np.int64)
-    values = ", ".join(
-        f"({m}, {p}, {c}, {int(Cq[m, c, p])})"
-        for m in range(m_sub)
-        for c in range(n_codes)
-        for p in range(sub_dim)
-    )
-    return values, sub_dim
+    return _int_values(cb), sub_dim
 
 
 def _pq_common_ctes(cb_values: str, sub_dim: int) -> str:
-    """The CTE block shared by both PQ oracles: quantized vector
-    elements keyed by (sub, subpos), integer encode distances → codes,
-    the 5-query set, and the integer ADC lookup table."""
+    """The CTE block shared by both PQ oracles, over ``qv``: quantized
+    vector elements keyed by (sub, subpos), integer encode distances →
+    codes, the 5-query set, and the integer ADC lookup table."""
     return f"""
-        cb(sub, subpos, code, cw) AS (VALUES {cb_values}),
+        cb(sub, code, subpos, cw) AS (VALUES {cb_values}),
         pqv AS (
-            SELECT vec_id AS id, ((i - 1) // {sub_dim}) AS sub,
-                   ((i - 1) % {sub_dim}) AS subpos,
-                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
-            FROM embeddings,
-                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
+            SELECT id, pos // {sub_dim} AS sub, pos % {sub_dim} AS subpos, q
+            FROM qv
         ),
         dist AS (
             SELECT id, sub, code, sum((q - cw) * (q - cw)) AS d
@@ -2086,7 +2064,7 @@ def _pq_sql(k: int = 4, m_sub: int = 8, n_codes: int = 16, seed: int = 42) -> st
     bit-identical."""
     cb_values, sub_dim = _pq_codebook_values(m_sub, n_codes, seed)
     return f"""
-        WITH {_pq_common_ctes(cb_values, sub_dim)},
+        WITH {_QV_CTE}, {_pq_common_ctes(cb_values, sub_dim)},
         scored AS (
             SELECT l.query_id, c.id AS neighbor_id, sum(l.w) AS score
             FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
@@ -2115,63 +2093,11 @@ def _ivfpq_sql(
     centroids, integer assignment) prunes candidates, integer ADC ranks
     a shortlist of ``rerank``, and the 6dp-rounded cosine reranks —
     every stage deterministic in both engines."""
-    import hashlib
-
-    import duckdb
-    import numpy as np
-
-    from sparktax.simsearch import _lloyd
-
-    sf_dir = _oracle_sf_dir()
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    rows.sort(
-        key=lambda r: (
-            int(hashlib.md5(f"{r[0]}:{seed}".encode()).hexdigest()[:15], 16),
-            r[0],
-        )
-    )
-    X = np.array([r[1] for r in rows[:4096]], dtype=float)
-    C = _lloyd(X, n_cells, 10, seed)
-    Cq = np.round(C * (1 << 20)).astype(np.int64)
-    w_values = ", ".join(
-        f"({i}, {j}, {int(Cq[i, j])})"
-        for i in range(Cq.shape[0])
-        for j in range(Cq.shape[1])
-    )
     cb_values, sub_dim = _pq_codebook_values(m_sub, n_codes, seed)
     return f"""
-        WITH w(cell, pos, w) AS (VALUES {w_values}),
-        qv AS (
-            SELECT vec_id AS id, i - 1 AS pos,
-                   round(embedding[i]::DOUBLE * 1048576)::BIGINT AS q
-            FROM embeddings,
-                 LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-        ),
-        dots AS (
-            SELECT id, cell, sum(q * w) AS s
-            FROM qv JOIN w USING (pos) GROUP BY 1, 2
-        ),
-        ranked AS (
-            SELECT id, cell,
-                   row_number() OVER (PARTITION BY id
-                       ORDER BY s DESC, cell DESC) AS rk
-            FROM dots
-        ),
-        corpus_cells AS (SELECT id AS neighbor_id, cell FROM ranked
-                         WHERE rk = 1),
+        WITH {_QV_CTE}, {_cells_cte(n_cells, seed)},
         {_pq_common_ctes(cb_values, sub_dim)},
-        probe AS (
-            SELECT id AS query_id, cell FROM ranked
-            WHERE rk <= {n_probe} AND id IN (SELECT vec_id FROM q5)
-        ),
-        cand AS (
-            SELECT DISTINCT p.query_id, c.neighbor_id
-            FROM probe p JOIN corpus_cells c USING (cell)
-            WHERE p.query_id <> c.neighbor_id
-        ),
+        {_PROBE_CTE.format(n_probe=n_probe)},
         adc AS (
             SELECT cand.query_id, cand.neighbor_id, sum(l.w) AS s
             FROM cand

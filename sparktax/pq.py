@@ -19,12 +19,13 @@ vectors touched until an optional exact rerank of the few survivors.
 
 Spark shapes (all JVM-side joins/aggregates, no cross join anywhere):
 
-- codebook training: driver-side numpy Lloyd on a seeded hash-ranked
-  BOUNDED sample (the proven ``simsearch.train_ivf_centroids`` pattern);
-  codebooks are tiny literals shipped to executors.
+- codebook training: driver-side numpy Lloyd on the same seeded
+  hash-ranked BOUNDED sample as the IVF centroids
+  (``simsearch._trainer_sample``); codebooks are tiny and travel in the
+  encode UDF's closure or as a broadcast weight table.
 - encoding: one narrow pass — Arrow-batched BLAS argmin per subspace
-  (``mode="float"``), or the all-integer posexplode + broadcast-join +
-  codegen-hash-aggregate shape (``mode="md5int"``) that makes the codes
+  (``mode="float"``), or ``simsearch._quantized_dots`` (``mode="md5int"``):
+  the all-integer dots every md5int lane shares, which make the codes
   bit-identical in any engine (the DuckDB oracle lane; CLAUDE.md round-4
   device: ``round(x·2²⁰)`` integer quantization is immune to float
   summation order).
@@ -32,12 +33,14 @@ Spark shapes (all JVM-side joins/aggregates, no cross join anywhere):
   on (sub, code) → partial-aggregated sum per (query, doc). The corpus
   side carries ONLY (id, code) pairs through the scan — at 10⁹ docs the
   scan reads the ~100 GB code table, never the 3 TB vectors.
-- IVF composition (:func:`ivfpq_topk`): the coarse-cell equi-join
-  (``simsearch.ivf_candidates``) prunes candidates to ``n_probe/n_cells``
-  of the corpus BEFORE any ADC scoring. Non-residual variant (codes quantize the raw
-  vector, not the cell residual): FAISS's ``by_residual=False`` — chosen
-  so the same code table serves every cell and the oracle stays
-  integer-exact; documented deviation from the TPAMI default.
+- IVF composition (:func:`ivfpq_topk`): the cell probe of
+  ``simsearch.ivf_candidates`` (the same assignment, ``top_cells``, and
+  the same cell equi-join as ``ivf_topk``; only the id pairs are kept)
+  prunes candidates to ``n_probe/n_cells`` of the corpus BEFORE any ADC
+  scoring. Non-residual variant (codes quantize the raw vector, not the
+  cell residual): FAISS's ``by_residual=False`` — chosen so the same code
+  table serves every cell and the oracle stays integer-exact; documented
+  deviation from the TPAMI default.
 
 Exactness guarantee used by the tests: with ``n_probe=n_cells`` and
 ``rerank`` ≥ the candidate count, :func:`ivfpq_topk` degrades to the
@@ -52,8 +55,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
-from sparktax.hashing import seeded_hash
 from sparktax.simsearch import (
+    _quantize,
+    _quantized_dots,
+    _trainer_sample,
     ivf_candidates,
     rerank_cosine,
     top_k,
@@ -103,19 +108,15 @@ def train_pq_codebooks(
     rank_on: str = "xxhash64",
 ) -> np.ndarray:
     """Per-subspace PQ codebooks, trained driver-side on a seeded
-    hash-ordered bounded sample. Returns a ``(m_sub, n_codes, sub_dim)``
-    array — tiny by construction (m_sub·n_codes·sub_dim = dim·n_codes
-    floats), shipped to executors as literals.
+    hash-ordered bounded sample (the IVF trainer's). Returns a
+    ``(m_sub, n_codes, sub_dim)`` array — tiny by construction
+    (m_sub·n_codes·sub_dim = dim·n_codes floats).
 
     Subspace ``m`` trains with ``seed + m`` so codebooks differ across
     subspaces even on degenerate data. ``rank_on="md5"`` orders the
     sample by the engine-portable md5 rank (hashlib-replicable), making
     the codebooks reproducible outside Spark — the oracle lane."""
-    key = seeded_hash(F.col(id_col), rank_on, seed, name="rank_on")
-    pdf = (
-        embeddings.orderBy(key, F.col(id_col)).limit(sample).select(vec_col).toPandas()
-    )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(float)
+    X = _trainer_sample(embeddings, sample, seed, id_col, vec_col, rank_on)
     dim = X.shape[1]
     if dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
@@ -128,52 +129,26 @@ def train_pq_codebooks(
     )
 
 
-def _codebook_weights_df(spark, codebooks: np.ndarray) -> DataFrame:
-    """(sub, subpos, code, w) — integer-quantized codebook entries
-    (``round(c·2²⁰)``), the broadcastable flat form both integer lanes
-    (encode distances, ADC LUT) join against."""
-    Cq = np.round(codebooks * (1 << 20)).astype(np.int64)
-    m_sub, n_codes, sub_dim = Cq.shape
-    rows = [
-        (m, p, c, int(Cq[m, c, p]))
-        for m in range(m_sub)
-        for c in range(n_codes)
-        for p in range(sub_dim)
-    ]
-    return spark.createDataFrame(rows, "sub int, subpos int, code int, w long")
-
-
-def _exploded_quantized(df: DataFrame, id_col: str, vec_col: str, sub_dim: int):
-    """(id, sub, subpos, q) — posexplode the vector and quantize each
-    element to ``round(x·2²⁰)`` (JVM round = half-away-from-zero, the
-    same rule DuckDB applies)."""
-    return df.select(
-        F.col(id_col).alias("id"), F.posexplode(F.col(vec_col)).alias("pos", "_x")
-    ).select(
-        "id",
-        (F.col("pos") / sub_dim).cast("int").alias("sub"),
-        (F.col("pos") % sub_dim).alias("subpos"),
-        F.round(F.col("_x").cast("double") * (1 << 20), 0).cast("long").alias("q"),
-    )
-
-
 def _encode_int(
     df: DataFrame, codebooks: np.ndarray, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, codes array<int>) by ALL-INTEGER squared L2 distance: both
     the vector elements and the codebook entries quantize to
-    ``round(·2²⁰)`` longs, so ``Σ(q−w)²`` is order-immune and
-    bit-identical in any engine. Ties break toward the LOWER code index
-    (matching ``_lloyd_l2``'s np.argmin and the DuckDB twin). Shape:
-    posexplode + broadcast codebook join + codegen hash aggregate — one
-    corpus pass, map-side partial agg, no cross join."""
-    m_sub, _, sub_dim = codebooks.shape
-    wdf = _codebook_weights_df(df.sparkSession, codebooks)
-    quant = _exploded_quantized(df, id_col, vec_col, sub_dim)
-    dist = (
-        quant.join(broadcast(wdf), ["sub", "subpos"])
-        .groupBy("id", "sub", "code")
-        .agg(F.sum((F.col("q") - F.col("w")) * (F.col("q") - F.col("w"))).alias("d"))
+    ``round(·2²⁰)`` longs. Per (id, sub), ``Σ(q−w)² = Σq² + ‖w‖² − 2q·w``
+    and ``Σq²`` is constant, so ranking ``‖w‖² − 2s`` over the shared
+    :func:`~sparktax.simsearch._quantized_dots` picks the same code —
+    order-immune and bit-identical in any engine. Ties break toward the
+    LOWER code index (matching ``_lloyd_l2``'s np.argmin and the DuckDB
+    twin)."""
+    Cq = _quantize(codebooks)
+    n_codes = Cq.shape[1]
+    norms = F.array(
+        *[F.lit(int(v)).cast("long") for v in (Cq**2).sum(axis=2).ravel()]
+    )
+    dist = _quantized_dots(df, Cq, id_col, vec_col).withColumn(
+        "d",
+        F.element_at(norms, F.col("sub") * n_codes + F.col("code") + 1)
+        - 2 * F.col("s"),
     )
     w = Window.partitionBy("id", "sub").orderBy(F.asc("d"), F.asc("code"))
     best = dist.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1)
@@ -243,15 +218,11 @@ def _adc_lut(
     w = q_sub · c_{sub,code}. m_sub·n_codes rows per query — broadcast
     side by construction. Integer mode sums quantized products (exact in
     any engine); float mode the same join shape in doubles."""
-    m_sub, _, sub_dim = codebooks.shape
     if mode == "md5int":
-        wdf = _codebook_weights_df(queries.sparkSession, codebooks)
-        quant = _exploded_quantized(queries, id_col, vec_col, sub_dim)
-        return (
-            quant.join(broadcast(wdf), ["sub", "subpos"])
-            .groupBy(F.col("id").alias("query_id"), "sub", "code")
-            .agg(F.sum(F.col("q") * F.col("w")).alias("w"))
-        )
+        return _quantized_dots(
+            queries, _quantize(codebooks), id_col, vec_col
+        ).select(F.col("id").alias("query_id"), "sub", "code", F.col("s").alias("w"))
+    m_sub, _, sub_dim = codebooks.shape
     Cq = codebooks.astype(float)
     spark = queries.sparkSession
     rows = [
@@ -398,7 +369,7 @@ def ivfpq_topk(
         )
     cand = ivf_candidates(
         embeddings, queries, centroids, n_probe, mode, id_col, vec_col
-    )
+    ).select("query_id", "neighbor_id")
     codes = pq_encode(embeddings, codebooks, id_col, vec_col, mode)
     lut = _adc_lut(queries, codebooks, id_col, vec_col, mode)
     # ADC over candidates only: explode the candidate docs' codes (×m_sub)

@@ -11,10 +11,13 @@
   pairs and SemDeDup over the same blocking devices.
 
 Every ANN path (here and in :mod:`sparktax.pq`) is one chain: assign
-(:func:`top_cells`) → candidates (:func:`ivf_candidates` or sign-LSH bands)
-→ exact rerank (:func:`rerank_cosine`) → per-query :func:`top_k`. No cross
-join ever materializes. ``mode``/``assign_mode="md5int"`` swaps the float
-assignment for an all-integer one DuckDB replays bit-for-bit.
+(:func:`top_cells`, which carries the vector next to its cells) → pairs
+that share a probed cell (:func:`ivf_candidates`) or a sign-LSH band →
+exact :func:`pair_cosine` → per-query :func:`top_k`. No cross join ever
+materializes. ``mode``/``assign_mode="md5int"`` swaps the float
+assignment for an all-integer one DuckDB replays bit-for-bit; every
+integer lane (IVF cells, LSH planes, PQ encode and ADC) is one
+:func:`_quantized_dots`.
 
 Scores are rounded to 6 decimals so results hash identically across
 engines (float-sum order differences live below that).
@@ -132,14 +135,62 @@ def rerank_cosine(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, neighbor_id, score) — exact rounded cosine of each
-    candidate pair. Query vectors broadcast; candidate vectors are fetched
-    by id equi-join, so only candidates touch the raw corpus vectors."""
+    candidate id pair. Query vectors broadcast; candidate vectors are
+    fetched by id equi-join. For candidate sets that carry no vectors:
+    sign-LSH bands and the PQ shortlist (cell probes carry theirs from
+    :func:`top_cells`)."""
     qv = broadcast(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     )
     cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     pairs = cand.join(qv, "query_id").join(cv, "neighbor_id")
     return pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"])
+
+
+def _quantize(a: np.ndarray) -> np.ndarray:
+    """``round(a·2²⁰)`` as int64 — the one weight quantizer of the integer
+    lanes (IVF centroids, PQ codebooks, the gram-bucket weights in
+    :mod:`sparktax.textops`). ×2²⁰ is a pure exponent shift, exact in
+    float64."""
+    return np.round(a * (1 << 20)).astype(np.int64)
+
+
+def _quantized_dots(
+    df: DataFrame, W: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, sub, code, s) — ALL-INTEGER dot of each vector's ``sub``-th
+    slice with integer weight row ``W[sub, code]``, for an int64 ``W`` of
+    shape ``(m_sub, n_codes, sub_dim)`` (one subspace for IVF cells and
+    LSH planes, ``m_sub`` for PQ). Vector elements quantize to
+    ``round(x·2²⁰)`` (JVM round — the same half-away-from-zero DuckDB
+    uses), so ``s`` is immune to summation order and bit-identical in any
+    engine. Unit-scale vectors and weights give q, |w| ≲ 2²¹, so a slice
+    sum stays far below long overflow (ANSI-safe). JVM-side: posexplode +
+    broadcast weight join + codegen hash aggregate, map-side partial
+    sums."""
+    m_sub, n_codes, sub_dim = W.shape
+    wdf = df.sparkSession.createDataFrame(
+        [
+            (m, p, c, int(W[m, c, p]))
+            for m in range(m_sub)
+            for c in range(n_codes)
+            for p in range(sub_dim)
+        ],
+        "sub int, subpos int, code int, w long",
+    )
+    quant = df.select(
+        F.col(id_col).alias("id"), F.posexplode(F.col(vec_col)).alias("pos", "_x")
+    ).select(
+        "id",
+        (F.col("pos") / sub_dim).cast("int").alias("sub"),
+        (F.col("pos") % sub_dim).alias("subpos"),
+        F.round(F.col("_x").cast("double") * (1 << 20), 0).cast("long").alias("q"),
+    )
+    return (
+        quant.join(broadcast(wdf), ["sub", "subpos"])
+        .groupBy("id", "sub", "code")
+        .agg(F.sum(F.col("q") * F.col("w")).alias("s"))
+    )
 
 
 def hyperplane_signatures(
@@ -164,49 +215,31 @@ def hyperplane_signatures(
     from ``md5(f"{seed}:{plane}:{pos}")``, vectors quantize to
     ``round(x · 2²⁰)``, and the dot product is ALL-INTEGER — bit-identical
     in any engine regardless of float summation order, so DuckDB can
-    replicate the signatures exactly. Runs fully JVM-side (posexplode +
-    broadcast weight join + codegen hash aggregate, one row per vector
-    through the exchange — the SimHash shape)."""
+    replicate the signatures exactly. Runs fully JVM-side: the planes are
+    one subspace of :func:`_quantized_dots`, then one row per vector
+    through the exchange (the SimHash shape)."""
     assert 0 < n_planes <= 63, "signature must fit a signed long"
     if plane_gen == "md5int":
         import hashlib
 
-        spark = embeddings.sparkSession
-        wrows = [
-            (
-                j,
-                i,
-                int(hashlib.md5(f"{seed}:{i}:{j}".encode()).hexdigest()[:15], 16)
-                % 2001
-                - 1000,
-            )
-            for i in range(n_planes)
-            for j in range(dim)
-        ]
-        wdf = spark.createDataFrame(wrows, "pos int, plane int, w long")
+        W = np.array(
+            [
+                [
+                    int(hashlib.md5(f"{seed}:{i}:{j}".encode()).hexdigest()[:15], 16)
+                    % 2001
+                    - 1000
+                    for j in range(dim)
+                ]
+                for i in range(n_planes)
+            ],
+            dtype=np.int64,
+        )
         pows = F.array(*[F.lit(1 << i).cast("long") for i in range(n_planes)])
-        quant = (
-            embeddings.select(
-                F.col(id_col).alias("id"),
-                F.posexplode(F.col(vec_col)).alias("pos", "_x"),
-            )
-            # ×2²⁰ is a pure exponent shift (exact in float64), so both
-            # engines round the same value; q ≲ 2²², q·w ≲ 2³², Σ over
-            # dim·planes ≲ 2⁴⁵ — never near long overflow (ANSI-safe)
-            .withColumn(
-                "q",
-                F.round(F.col("_x").cast("double") * (1 << 20), 0).cast("long"),
-            )
-        )
-        dots = (
-            quant.join(broadcast(wdf), "pos")
-            .groupBy("id", "plane")
-            .agg(F.sum(F.col("q") * F.col("w")).alias("s"))
-        )
+        dots = _quantized_dots(embeddings, W[None], id_col, vec_col)
         return dots.groupBy("id").agg(
             F.sum(
                 F.when(
-                    F.col("s") >= 0, F.element_at(pows, F.col("plane") + 1)
+                    F.col("s") >= 0, F.element_at(pows, F.col("code") + 1)
                 ).otherwise(F.lit(0).cast("long"))
             ).alias("sig")
         )
@@ -278,6 +311,28 @@ def _lloyd(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
     return C
 
 
+def _trainer_sample(
+    embeddings: DataFrame,
+    sample: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    rank_on: str,
+) -> np.ndarray:
+    """The ``sample`` vectors first by (seeded hash of id, id), as a
+    row-ORDERED float matrix: the bounded training sample of the IVF and
+    PQ trainers. ``rank_on="md5"`` makes the order hashlib-replicable, so
+    the trained centroids/codebooks are reproducible outside Spark."""
+    key = seeded_hash(F.col(id_col), rank_on, seed, name="rank_on")
+    pdf = (
+        embeddings.orderBy(key, F.col(id_col))
+        .limit(sample)
+        .select(vec_col)
+        .toPandas()
+    )
+    return np.stack(pdf[vec_col].to_numpy()).astype(float)
+
+
 def train_ivf_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -290,19 +345,11 @@ def train_ivf_centroids(
 ) -> np.ndarray:
     """Spherical k-means centroids for IVF, trained driver-side (numpy
     Lloyd iterations; the container has no MLlib-free alternative worth a
-    shuffle) on a seeded hash-ordered sample. Returns a unit-norm
-    (n_cells, dim) matrix — small by construction, shipped to executors as
-    literal expressions. ``rank_on="md5"`` orders the sample by the
-    engine-portable md5 rank (hashlib-replicable), making the trained
-    centroids reproducible outside Spark."""
-    key = seeded_hash(F.col(id_col), rank_on, seed, name="rank_on")
-    pdf = (
-        embeddings.orderBy(key, F.col(id_col))
-        .limit(sample)
-        .select(vec_col)
-        .toPandas()
-    )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(float)
+    shuffle) on a seeded hash-ordered sample (:func:`_trainer_sample`).
+    Returns a unit-norm (n_cells, dim) matrix — small by construction; it
+    travels to executors in the float assignment UDF's closure, or as the
+    broadcast weight table of the integer one."""
+    X = _trainer_sample(embeddings, sample, seed, id_col, vec_col, rank_on)
     return _lloyd(X, n_cells, iters, seed)
 
 
@@ -335,37 +382,16 @@ def _quantized_cells(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, cell) — the ``n`` top cells per vector by ALL-INTEGER dot
-    product: centroid weights quantize to ``round(c·2²⁰)`` (numpy, shared
-    with the oracle builder) and vectors to ``round(x·2²⁰)`` (JVM round —
-    the same half-away-from-zero DuckDB uses), so the assignment is
-    bit-identical in any engine. Ties break toward the higher cell index,
-    matching :func:`_top_cells_udf`. JVM-side: posexplode + broadcast
-    weight join + codegen hash aggregate (the SimHash/LSH-md5int shape)."""
-    Cq = np.round(centroids * (1 << 20)).astype(np.int64)
-    spark = embeddings.sparkSession
-    wrows = [
-        (j, i, int(Cq[i, j]))
-        for i in range(Cq.shape[0])
-        for j in range(Cq.shape[1])
-    ]
-    wdf = spark.createDataFrame(wrows, "pos int, cell int, w long")
-    quant = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_x"),
-    ).withColumn(
-        "q", F.round(F.col("_x").cast("double") * (1 << 20), 0).cast("long")
-    )
-    dots = (
-        quant.join(broadcast(wdf), "pos")
-        .groupBy("id", "cell")
-        .agg(F.sum(F.col("q") * F.col("w")).alias("s"))
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("s"), F.desc("cell"))
+    """(id, cell) — the ``n`` top cells per vector by the all-integer
+    :func:`_quantized_dots` against ``round(c·2²⁰)`` centroids (one
+    subspace), so the assignment is bit-identical in any engine. Ties
+    break toward the higher cell index, matching :func:`_top_cells_udf`."""
+    dots = _quantized_dots(embeddings, _quantize(centroids)[None], id_col, vec_col)
+    w = Window.partitionBy("id").orderBy(F.desc("s"), F.desc("code"))
     return (
         dots.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n)
-        .select("id", "cell")
+        .select("id", F.col("code").alias("cell"))
     )
 
 
@@ -377,13 +403,20 @@ def top_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cell) — each vector's ``n`` highest-dot centroid cells, one
-    row per cell. ``mode="float"``: one narrow Arrow-batched matmul pass
-    (:func:`_top_cells_udf`) + explode. ``mode="md5int"``: the all-integer
-    assignment (:func:`_quantized_cells`) DuckDB replays bit-for-bit. Both
-    break ties toward the higher cell index."""
+    """(id, cell, vec) — each vector's ``n`` highest-dot centroid cells,
+    one row per cell, with the vector carried alongside so no consumer
+    joins it back. ``mode="float"``: one narrow Arrow-batched matmul pass
+    (:func:`_top_cells_udf`) + explode, the vector in the same projection
+    — Catalyst prunes it wherever it is unused. ``mode="md5int"``: the
+    all-integer assignment (:func:`_quantized_cells`) DuckDB replays
+    bit-for-bit, with the vector joined back once here (an inner join is
+    not pruned when the vector goes unused). Both break ties toward the
+    higher cell index."""
     if mode == "md5int":
-        return _quantized_cells(df, centroids, n, id_col, vec_col)
+        return _quantized_cells(df, centroids, n, id_col, vec_col).join(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+            "id",
+        )
     if mode != "float":
         raise ValueError(f"mode must be 'float' or 'md5int', got {mode!r}")
     cells = _top_cells_udf(centroids, n)(F.col(vec_col))
@@ -397,7 +430,30 @@ def top_cells(
         if n == 1
         else F.explode(cells)
     )
-    return df.select(F.col(id_col).alias("id"), cell.alias("cell"))
+    return df.select(
+        F.col(id_col).alias("id"), cell.alias("cell"), F.col(vec_col).alias("vec")
+    )
+
+
+def _cell_pairs(corpus: DataFrame, query_cells: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, _qv, _cv) — the cell probe: corpus rows
+    (id, cell, vec) equi-join the broadcast probed cells (id, cell, vec)
+    of the queries on ``cell``, self-pairs dropped. A corpus vector sits
+    in one cell and a query's probed cells are distinct, so every pair
+    occurs once — no distinct."""
+    q = query_cells.select(
+        F.col("id").alias("query_id"), "cell", F.col("vec").alias("_qv")
+    )
+    return (
+        corpus.join(broadcast(q), "cell")
+        .filter(F.col("query_id") != F.col("id"))
+        .select(
+            "query_id",
+            F.col("id").alias("neighbor_id"),
+            "_qv",
+            F.col("vec").alias("_cv"),
+        )
+    )
 
 
 def ivf_candidates(
@@ -409,21 +465,14 @@ def ivf_candidates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(query_id, neighbor_id) — every other corpus vector whose cell is
-    among the query's ``n_probe`` closest cells: the corpus (id, cell)
-    pairs equi-join a broadcast query-probe table on ``cell``, so the
-    candidate volume is ~n_probe/n_cells of the corpus per query."""
-    corpus_cells = top_cells(
-        embeddings, centroids, 1, mode, id_col, vec_col
-    ).withColumnRenamed("id", "neighbor_id")
-    query_cells = top_cells(
-        queries, centroids, n_probe, mode, id_col, vec_col
-    ).withColumnRenamed("id", "query_id")
-    return (
-        corpus_cells.join(broadcast(query_cells), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    """(query_id, neighbor_id, _qv, _cv) — every other corpus vector whose
+    top-1 cell is among the query's ``n_probe`` closest cells, both
+    vectors carried for the rerank (:func:`_cell_pairs` over
+    :func:`top_cells`). The candidate volume is ~n_probe/n_cells of the
+    corpus per query; consumers that need only the ids select them."""
+    return _cell_pairs(
+        top_cells(embeddings, centroids, 1, mode, id_col, vec_col),
+        top_cells(queries, centroids, n_probe, mode, id_col, vec_col),
     )
 
 
@@ -465,10 +514,10 @@ def ivf_topk(
             vec_col=vec_col,
             rank_on="md5" if assign_mode == "md5int" else "xxhash64",
         )
-    cand = ivf_candidates(
+    pairs = ivf_candidates(
         embeddings, queries, centroids, n_probe, assign_mode, id_col, vec_col
     )
-    return top_k(rerank_cosine(cand, embeddings, queries, id_col, vec_col), k)
+    return top_k(pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"]), k)
 
 
 def materialize_ivf_index(
@@ -505,25 +554,7 @@ def materialize_ivf_index(
     name = f"sparktax_ivf_{tag}"
     done = _os.path.exists(_os.path.join(dirpath, "_SUCCESS"))
     if not (done and spark.catalog.tableExists(name)):
-        if assign_mode == "float":
-            # not top_cells: this pass writes the vector payload alongside
-            # the cell, and going through top_cells would join the payload
-            # back — a corpus-sized join added to the index build
-            top1 = _top_cells_udf(centroids, 1)
-            rows = embeddings.select(
-                F.col(id_col).alias("id"),
-                F.element_at(top1(F.col(vec_col)), 1).alias("cell"),
-                F.col(vec_col).alias("vec"),
-            )
-        else:
-            rows = top_cells(
-                embeddings, centroids, 1, assign_mode, id_col, vec_col
-            ).join(
-                embeddings.select(
-                    F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-                ),
-                "id",
-            )
+        rows = top_cells(embeddings, centroids, 1, assign_mode, id_col, vec_col)
         write_bucketed(
             rows, name, dirpath, "cell",
             n_buckets=n_buckets or n_cells, sort_by="id",
@@ -548,29 +579,13 @@ def ivf_topk_indexed(
 
     The probed-cell set is collected driver-side (≤ n_cells integers) and
     pushed as a LITERAL ``isin`` so the pruning happens at planning time;
-    the per-query (cell → query) map then broadcasts against the pruned
-    scan. A corpus vector lives in exactly one cell, so no distinct is
-    needed on the candidate pairs."""
-    qcells = top_cells(
-        queries, centroids, n_probe, assign_mode, id_col, vec_col
-    ).withColumnRenamed("id", "query_id")
+    the same cell probe as :func:`ivf_candidates` (:func:`_cell_pairs`)
+    then broadcasts the query cells against the pruned scan."""
+    qcells = top_cells(queries, centroids, n_probe, assign_mode, id_col, vec_col)
     probed = sorted(
         r.cell for r in qcells.select("cell").distinct().collect()
     )
-    cand = (
-        index.filter(F.col("cell").isin(probed))
-        .join(broadcast(qcells), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.col("vec").alias("_cv"),
-        )
-    )
-    qv = broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    )
-    pairs = cand.join(qv, "query_id")
+    pairs = _cell_pairs(index.filter(F.col("cell").isin(probed)), qcells)
     return top_k(pair_cosine(pairs, "_qv", "_cv", ["query_id", "neighbor_id"]), k)
 
 
@@ -714,8 +729,7 @@ def semantic_dedup(
             rank_on="md5" if assign_mode == "md5int" else "xxhash64",
         )
     cells = top_cells(embeddings, centroids, 1, assign_mode, id_col, vec_col)
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
-    withv = cells.join(e, "id")
+    withv = cells.withColumnRenamed("vec", "_v")
     if keep == "first":
         # smaller id suppresses: incremental-friendly (see above)
         ranked = withv.withColumn("_ord", F.col("id"))

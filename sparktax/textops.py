@@ -1280,13 +1280,15 @@ def dsir_bucket_weights(ct, cr):
     engine-exact (the sign-LSH/IVF integer device)."""
     import numpy as np
 
+    from sparktax.simsearch import _quantize
+
     ct = np.asarray(ct, dtype=np.float64)
     cr = np.asarray(cr, dtype=np.float64)
     B = len(ct)
     w = (np.log(ct + 1.0) - np.log(ct.sum() + B)) - (
         np.log(cr + 1.0) - np.log(cr.sum() + B)
     )
-    return np.round(w * (1 << 20)).astype(np.int64)
+    return _quantize(w)
 
 
 def importance_weights(
@@ -1493,6 +1495,8 @@ def train_quality_classifier(
     sampling, bucketing and scoring DuckDB-replayable bit-for-bit."""
     import numpy as np
 
+    from sparktax.simsearch import _quantize
+
     Xp, Xn = (
         _sample_matrix(df, text_col, id_col, buckets, hasher, seed)
         for df in (pos, neg)
@@ -1508,10 +1512,7 @@ def train_quality_classifier(
     w, b = logreg_weights((X - mu) / sd, y)
     w_eff = w / sd
     b_eff = b - float((w * (mu / sd)).sum())
-    return (
-        np.round(w_eff * (1 << 20)).astype(np.int64),
-        int(round(b_eff * (1 << 20))),
-    )
+    return _quantize(w_eff), int(_quantize(b_eff))
 
 
 def classify_quality(
@@ -1549,9 +1550,11 @@ def lm_bucket_logprobs(counts):
     int64 (negative) so per-doc totals are summation-order-free."""
     import numpy as np
 
+    from sparktax.simsearch import _quantize
+
     c = np.asarray(counts, dtype=np.float64)
     logp = np.log(c + 1.0) - np.log(c.sum() + len(c))
-    return np.round(logp * (1 << 20)).astype(np.int64)
+    return _quantize(logp)
 
 
 def perplexity_score(
@@ -1611,10 +1614,10 @@ def cluster_documents(
     assignment replay bit-for-bit in DuckDB."""
     import numpy as np
 
-    from sparktax.simsearch import _lloyd
+    from sparktax.simsearch import _lloyd, _quantize
 
     X = _sample_matrix(documents, text_col, id_col, buckets, hasher, seed)
-    Cq = np.round(_lloyd(X, k, _KMEANS_ITERS, seed) * (1 << 20)).astype(np.int64)
+    Cq = _quantize(_lloyd(X, k, _KMEANS_ITERS, seed))
     wrows = [
         (b, j, int(Cq[j, b]))
         for j in range(Cq.shape[0])

@@ -72,3 +72,27 @@ def test_index_reuse_and_full_probe_exactness(spark, emb, setup):
     full = ivf_topk_indexed(idx, queries, C, k=3, n_probe=8)
     brute = cosine_topk(emb, queries, k=3)
     assert _rows(full) == _rows(brute)
+
+
+def test_float_index_build_is_one_scan_no_join(spark, emb, tmp_path, monkeypatch):
+    """The float build writes the cells and the vector payload from one
+    projection over one scan: no join brings the vectors back."""
+    import sparktax.catalog as catalog
+
+    written = []
+    real = catalog.write_bucketed
+
+    def spy(rows, *args, **kwargs):
+        written.append(rows)
+        real(rows, *args, **kwargs)
+
+    monkeypatch.setattr(catalog, "write_bucketed", spy)
+    C = train_ivf_centroids(emb, 8, seed=7)
+    # an uncached read: the plan shows its file scans
+    fresh = spark.read.parquet(f"{SF}/embeddings.parquet")
+    materialize_ivf_index(spark, fresh, str(tmp_path / "lists"), C)
+    (rows,) = written
+    assert rows.columns == ["id", "cell", "vec"]
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan ") == 1, plan
+    assert "Join" not in plan, plan

@@ -106,6 +106,29 @@ def test_ivf_topk_recall_and_exactness_at_full_probe(spark, emb):
     assert len(a & e) / len(e) >= 0.75
 
 
+@pytest.mark.parametrize("mode", ["float", "md5int"])
+def test_ivf_candidates_pairs_are_unique(spark, emb, mode):
+    """A corpus vector has one top-1 cell and a query's n_probe cells are
+    distinct, so the cell probe yields every (query, neighbor) pair at
+    most once without a distinct — at n_probe < n_cells in both
+    assignment modes."""
+    from sparktax.simsearch import ivf_candidates, train_ivf_centroids
+
+    queries = emb.orderBy("vec_id").limit(10)
+    cents = train_ivf_centroids(
+        emb, n_cells=8, sample=512, seed=3,
+        rank_on="md5" if mode == "md5int" else "xxhash64",
+    )
+    pairs = [
+        (r.query_id, r.neighbor_id)
+        for r in ivf_candidates(emb, queries, cents, 3, mode)
+        .select("query_id", "neighbor_id")
+        .collect()
+    ]
+    assert pairs and all(q != n for q, n in pairs)
+    assert len(pairs) == len(set(pairs))
+
+
 def test_centroids_vs_numpy(spark, emb):
     got = centroid_per_label(emb).toPandas()
     pdf = emb.toPandas()
