@@ -537,22 +537,14 @@ def _dedup_spans_sql(w: int = 8) -> str:
     oracles, the u60 md5-prefix window hash, min(doc_id·2²⁰+pos) first
     keys, gaps-and-islands interval merge, and a lambda rebuild of the
     kept token stream."""
-    norm = _NORM.format(c="coalesce(text, '')")
     u60 = _hex_int("md5(g)")
     return f"""
         WITH toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
+            SELECT doc_id AS id, {_toks_sql("coalesce(text, '')")} AS t
             FROM documents
         ),
-        wtext AS (
-            SELECT doc_id, i AS pos,
-                   array_to_string(list_slice(t, i + 1, i + {w}), ' ') AS g
-            FROM toks,
-                 LATERAL (SELECT unnest(
-                     range(0, greatest(len(t) - {w} + 1, 0))) AS i)
-        ),
-        wins AS (SELECT doc_id, pos, ({u60}) AS whash FROM wtext),
+        wtext AS ({_word_windows_sql("toks", w)}),
+        wins AS (SELECT id AS doc_id, pos, ({u60}) AS whash FROM wtext),
         firsts AS (
             SELECT whash, min(doc_id * 1048576 + pos) AS fk
             FROM wins GROUP BY whash HAVING count(*) > 1
@@ -587,9 +579,9 @@ def _dedup_spans_sql(w: int = 8) -> str:
             FROM merged GROUP BY doc_id
         ),
         pre AS (
-            SELECT t.doc_id, len(t.t) AS n_tokens, t.t AS t,
+            SELECT t.id AS doc_id, len(t.t) AS n_tokens, t.t AS t,
                    coalesce(s.sp, CAST([] AS BIGINT[])) AS sp
-            FROM toks t LEFT JOIN spans s USING (doc_id)
+            FROM toks t LEFT JOIN spans s ON s.doc_id = t.id
         ),
         kept AS (
             SELECT doc_id, n_tokens, t,
@@ -621,11 +613,9 @@ def _gram_bucket_cte(buckets: int) -> str:
     """CTEs ``toks → grams → bucketed(doc_id, bucket)`` over a
     ``documents`` relation: the engine's normalization, word 1–2-grams and
     md5-60 bucketing into ``buckets``."""
-    norm = _NORM.format(c="coalesce(text, '')")
     return f"""
         toks AS (
-            SELECT doc_id,
-                   list_filter(string_split({norm}, ' '), t -> t <> '') AS t
+            SELECT doc_id, {_toks_sql("coalesce(text, '')")} AS t
             FROM documents
         ),
         grams AS (
@@ -878,11 +868,10 @@ def _bpe_replica(sf_dir: str, n_merges: int):
 
     import duckdb
 
-    norm = _NORM.format(c="coalesce(text, '')")
+    toks = _toks_sql("coalesce(text, '')")
     con = duckdb.connect()
     doc_rows = con.sql(
-        f"SELECT doc_id, list_filter(string_split({norm}, ' '), "
-        f"t -> t <> '') AS t FROM "
+        f"SELECT doc_id, {toks} AS t FROM "
         f"read_parquet('{sf_dir}/documents.parquet')"
     ).fetchall()
     wc: Counter = Counter(w for _, t in doc_rows for w in (t or []))
@@ -1712,6 +1701,39 @@ _NORM = (
     "'\\s+', ' ', 'g'))"
 )
 
+
+# The DuckDB half of the token stream (the engine's textops.tokens,
+# word_ngrams and minhash.char_grams), replayed with list ops.
+
+
+def _toks_sql(c: str) -> str:
+    """The normalized token list of ``c``: no empty token."""
+    return f"list_filter(string_split({_NORM.format(c=c)}, ' '), t -> t <> '')"
+
+
+def _word_windows_sql(src: str, n: int) -> str:
+    """SELECT of ``(id, pos, g)``: every ``n``-token window ``g`` of the
+    token list ``t`` of each ``src(id, t)`` row, ``pos`` its 0-based start;
+    a list shorter than ``n`` has none."""
+    return f"""
+        SELECT id, i AS pos,
+               array_to_string(list_slice(t, i + 1, i + {n}), ' ') AS g
+        FROM {src},
+             LATERAL (SELECT unnest(range(0, greatest(len(t) - {n} + 1, 0))) AS i)
+    """
+
+
+def _char_shingles_sql(n: int) -> str:
+    """SELECT of the distinct ``(id, shingle)`` char ``n``-grams of each
+    ``d(doc_id, t)`` row; a text shorter than ``n`` is its own shingle."""
+    return f"""
+        SELECT DISTINCT doc_id AS id, substr(t, i, {n}) AS shingle
+        FROM d, LATERAL (SELECT unnest(range(1,
+             greatest(length(t) - {n - 1}, 1) + 1)) AS i)
+        WHERE length(substr(t, i, {n})) > 0
+    """
+
+
 # Shared by "cosine_topk" (brute force) and "ivf_full_probe" (IVF with every
 # cell probed — exact by construction, so the same oracle applies).
 _COSINE_TOPK_SQL = """
@@ -1733,7 +1755,7 @@ _COSINE_TOPK_SQL = """
 
 
 # quantized vector elements, the DuckDB twin of the ``round(x·2²⁰)`` side
-# of sparktax.simsearch._quantized_dots; every md5int vector oracle
+# of sparktax.simsearch._slice_dots; every md5int vector oracle
 # starts from it
 _QV_CTE = """
         qv AS (
@@ -2192,12 +2214,7 @@ def _minhash_sql(
     return f"""
         WITH d AS (SELECT doc_id, lower(text) AS t FROM documents
                    WHERE doc_id < {max_id}),
-        sh AS (
-            SELECT DISTINCT doc_id AS id, substr(t, i, {n}) AS shingle
-            FROM d, LATERAL (SELECT unnest(range(1,
-                 greatest(length(t) - {n - 1}, 1) + 1)) AS i)
-            WHERE length(substr(t, i, {n})) > 0
-        ),
+        sh AS ({_char_shingles_sql(n)}),
         hx AS (SELECT id, shingle, ({hex15}) % {p} AS x FROM sh),
         sig AS (SELECT id, {mins} FROM hx GROUP BY id),
         buckets AS ({band_rows}),
@@ -2229,7 +2246,7 @@ def _lang_sql() -> str:
     from sparktax.textops import LANG_MARKERS
 
     langs = sorted(LANG_MARKERS)
-    toks = f"string_split({_NORM.format(c='text')}, ' ')"
+    toks = _toks_sql("text")
     scores = ", ".join(
         f"len(list_intersect({toks}, {LANG_MARKERS[lang]!r})) AS {lang}"
         for lang in langs
@@ -2295,6 +2312,7 @@ def oracle_sql() -> dict[str, str]:
 
     all_stop = sorted({w for ws in LANG_MARKERS.values() for w in ws})
     norm = _NORM.format(c="text")
+    toks = _toks_sql("text")
     return {
         "extract_triples": """
             SELECT CAST(l_orderkey AS VARCHAR) AS conv_id,
@@ -2408,15 +2426,10 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents)
             WHERE rn = 1
         """,
-        "ngram_jaccard": """
+        "ngram_jaccard": f"""
             WITH d AS (SELECT doc_id, lower(text) AS t FROM documents
                        WHERE doc_id < 200),
-            sh AS (
-                SELECT DISTINCT doc_id AS id, substr(t, i, 3) AS shingle
-                FROM d, LATERAL (SELECT unnest(range(1,
-                     greatest(length(t) - 2, 1) + 1)) AS i)
-                WHERE length(substr(t, i, 3)) > 0
-            ),
+            sh AS ({_char_shingles_sql(3)}),
             sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
             inter AS (
                 SELECT x.id AS a, y.id AS b, count(*) AS ni
@@ -2457,36 +2470,19 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dedup_spans": _dedup_spans_sql(),
         "decontaminate": f"""
-            WITH d AS (
-                SELECT doc_id,
-                       list_filter(string_split({norm}, ' '), x -> x <> '')
-                           AS toks
-                FROM documents
-            ),
+            WITH d AS (SELECT doc_id AS id, {toks} AS t FROM documents),
             dg AS (
-                SELECT DISTINCT doc_id,
-                       array_to_string(toks[i : i + 4], ' ') AS shingle
-                FROM d, LATERAL (SELECT unnest(range(1,
-                     greatest(len(toks) - 4, 1) + 1)) AS i)
-                WHERE len(toks[i : i + 4]) >= 5
+                SELECT DISTINCT id AS doc_id, g AS shingle
+                FROM ({_word_windows_sql("d", 5)})
             ),
             p AS (
-                SELECT doc_id AS probe_id,
-                       substring(text, 1, 120) AS text
+                SELECT doc_id AS id, substring(text, 1, 120) AS text
                 FROM documents WHERE doc_id % 100 = 7
             ),
-            pt AS (
-                SELECT probe_id,
-                       list_filter(string_split({norm}, ' '), x -> x <> '')
-                           AS toks
-                FROM p
-            ),
+            pt AS (SELECT id, {toks} AS t FROM p),
             pg AS (
-                SELECT DISTINCT probe_id,
-                       array_to_string(toks[i : i + 4], ' ') AS shingle
-                FROM pt, LATERAL (SELECT unnest(range(1,
-                     greatest(len(toks) - 4, 1) + 1)) AS i)
-                WHERE len(toks[i : i + 4]) >= 5
+                SELECT DISTINCT id AS probe_id, g AS shingle
+                FROM ({_word_windows_sql("pt", 5)})
             )
             SELECT dg.doc_id, pg.probe_id, count(*) AS n_matches
             FROM dg JOIN pg USING (shingle)
@@ -2537,8 +2533,8 @@ def oracle_sql() -> dict[str, str]:
         "split_corpus": _split_corpus_sql(),
         "token_counts": f"""
             SELECT doc_id,
-                   len(list_filter(string_split(coalesce(text, ''),
-                       ' '), x -> x <> '' AND x <> chr(9)))::BIGINT AS ws_tokens,
+                   len(regexp_extract_all(coalesce(text, ''), '\\S+'))::BIGINT
+                       AS ws_tokens,
                    len(regexp_extract_all(coalesce(text, ''),
                        '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))::BIGINT
                        AS bpe_ish_tokens
@@ -2548,8 +2544,7 @@ def oracle_sql() -> dict[str, str]:
             WITH b AS (
                 SELECT doc_id,
                        coalesce(text, '') AS txt,
-                       list_filter(string_split({norm}, ' '), x -> x <> '')
-                           AS toks
+                       {toks} AS toks
                 FROM documents
             ),
             m AS (

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparktax.textops import tokens_expr
+from sparktax.textops import normalized_text, tokens
 
 END = "</w>"
 
@@ -40,9 +40,7 @@ def word_counts(
 ) -> DataFrame:
     """(word, n) — the corpus' word-frequency table over the normalized
     token stream (ONE shuffle; map-side partial counts)."""
-    toks = F.filter(
-        tokens_expr(F.coalesce(F.col(text_col), F.lit(""))), lambda t: t != ""
-    )
+    toks = tokens(normalized_text(F.coalesce(F.col(text_col), F.lit(""))))
     return (
         documents.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -187,14 +185,10 @@ def encode_bpe(
     def enc(words: pd.Series) -> pd.Series:
         return words.map(lambda w: bpe_encode_word(w, rank_of))
 
-    # post-explode scalar filter instead of an interpreted per-element
-    # array-filter lambda: single-spaced normalized text only yields ""
-    # tokens for empty documents, and pos is used purely for ordering, so
-    # dropping "" rows after posexplode is value-identical.
-    toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+    toks = tokens(normalized_text(F.coalesce(F.col(text_col), F.lit(""))))
     exploded = documents.select(
         F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "word")
-    ).filter(F.col("word") != "")
+    )
     # per-word token STRING + token count, computed once per distinct word
     # (codegen): the per-doc rebuild then needs no interpreted lambda at
     # all — array_sort is a native sort, ``.getField`` on an array of

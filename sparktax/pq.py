@@ -24,7 +24,7 @@ Spark shapes (all JVM-side joins/aggregates, no cross join anywhere):
   (``simsearch._trainer_sample``); codebooks are tiny and travel in the
   encode UDF's closure or as a broadcast weight table.
 - encoding: one narrow pass — Arrow-batched BLAS argmin per subspace
-  (``mode="float"``), or ``simsearch._quantized_dots`` (``mode="md5int"``):
+  (``mode="float"``), or ``simsearch._slice_dots`` (``mode="md5int"``):
   the all-integer dots every md5int lane shares, which make the codes
   bit-identical in any engine (the DuckDB oracle lane; CLAUDE.md round-4
   device: ``round(x·2²⁰)`` integer quantization is immune to float
@@ -57,7 +57,7 @@ from pyspark.sql.functions import broadcast, pandas_udf
 
 from sparktax.simsearch import (
     _quantize,
-    _quantized_dots,
+    _slice_dots,
     _trainer_sample,
     ivf_candidates,
     rerank_cosine,
@@ -136,7 +136,7 @@ def _encode_int(
     the vector elements and the codebook entries quantize to
     ``round(·2²⁰)`` longs. Per (id, sub), ``Σ(q−w)² = Σq² + ‖w‖² − 2q·w``
     and ``Σq²`` is constant, so ranking ``‖w‖² − 2s`` over the shared
-    :func:`~sparktax.simsearch._quantized_dots` picks the same code —
+    :func:`~sparktax.simsearch._slice_dots` picks the same code —
     order-immune and bit-identical in any engine. Ties break toward the
     LOWER code index (matching ``_lloyd_l2``'s np.argmin and the DuckDB
     twin)."""
@@ -145,7 +145,7 @@ def _encode_int(
     norms = F.array(
         *[F.lit(int(v)).cast("long") for v in (Cq**2).sum(axis=2).ravel()]
     )
-    dist = _quantized_dots(df, Cq, id_col, vec_col).withColumn(
+    dist = _slice_dots(df, Cq, id_col, vec_col).withColumn(
         "d",
         F.element_at(norms, F.col("sub") * n_codes + F.col("code") + 1)
         - 2 * F.col("s"),
@@ -218,33 +218,9 @@ def _adc_lut(
     w = q_sub · c_{sub,code}. m_sub·n_codes rows per query — broadcast
     side by construction. Integer mode sums quantized products (exact in
     any engine); float mode the same join shape in doubles."""
-    if mode == "md5int":
-        return _quantized_dots(
-            queries, _quantize(codebooks), id_col, vec_col
-        ).select(F.col("id").alias("query_id"), "sub", "code", F.col("s").alias("w"))
-    m_sub, _, sub_dim = codebooks.shape
-    Cq = codebooks.astype(float)
-    spark = queries.sparkSession
-    rows = [
-        (m, p, c, float(Cq[m, c, p]))
-        for m in range(m_sub)
-        for c in range(Cq.shape[1])
-        for p in range(sub_dim)
-    ]
-    wdf = spark.createDataFrame(rows, "sub int, subpos int, code int, w double")
-    elems = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_x"),
-    ).select(
-        "query_id",
-        (F.col("pos") / sub_dim).cast("int").alias("sub"),
-        (F.col("pos") % sub_dim).alias("subpos"),
-        F.col("_x").cast("double").alias("x"),
-    )
-    return (
-        elems.join(broadcast(wdf), ["sub", "subpos"])
-        .groupBy("query_id", "sub", "code")
-        .agg(F.sum(F.col("x") * F.col("w")).alias("w"))
+    W = _quantize(codebooks) if mode == "md5int" else codebooks.astype(float)
+    return _slice_dots(queries, W, id_col, vec_col).select(
+        F.col("id").alias("query_id"), "sub", "code", F.col("s").alias("w")
     )
 
 

@@ -16,8 +16,8 @@ that share a probed cell (:func:`ivf_candidates`) or a sign-LSH band →
 exact :func:`pair_cosine` → per-query :func:`top_k`. No cross join ever
 materializes. ``mode``/``assign_mode="md5int"`` swaps the float
 assignment for an all-integer one DuckDB replays bit-for-bit; every
-integer lane (IVF cells, LSH planes, PQ encode and ADC) is one
-:func:`_quantized_dots`.
+integer lane (IVF cells, LSH planes, PQ encode and ADC) and the float
+ADC table are one :func:`_slice_dots`.
 
 Scores are rounded to 6 decimals so results hash identically across
 engines (float-sum order differences live below that).
@@ -155,36 +155,43 @@ def _quantize(a: np.ndarray) -> np.ndarray:
     return np.round(a * (1 << 20)).astype(np.int64)
 
 
-def _quantized_dots(
+def _slice_dots(
     df: DataFrame, W: np.ndarray, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, sub, code, s) — ALL-INTEGER dot of each vector's ``sub``-th
-    slice with integer weight row ``W[sub, code]``, for an int64 ``W`` of
-    shape ``(m_sub, n_codes, sub_dim)`` (one subspace for IVF cells and
-    LSH planes, ``m_sub`` for PQ). Vector elements quantize to
+    """(id, sub, code, s) — dot of each vector's ``sub``-th slice with
+    weight row ``W[sub, code]``, for ``W`` of shape
+    ``(m_sub, n_codes, sub_dim)`` (one subspace for IVF cells and LSH
+    planes, ``m_sub`` for PQ).
+
+    An int64 ``W`` gives the ALL-INTEGER dot: vector elements quantize to
     ``round(x·2²⁰)`` (JVM round — the same half-away-from-zero DuckDB
     uses), so ``s`` is immune to summation order and bit-identical in any
     engine. Unit-scale vectors and weights give q, |w| ≲ 2²¹, so a slice
-    sum stays far below long overflow (ANSI-safe). JVM-side: posexplode +
-    broadcast weight join + codegen hash aggregate, map-side partial
+    sum stays far below long overflow (ANSI-safe). A float64 ``W`` gives
+    the same shape in doubles (the float ADC table). JVM-side: posexplode
+    + broadcast weight join + codegen hash aggregate, map-side partial
     sums."""
     m_sub, n_codes, sub_dim = W.shape
+    integer = np.issubdtype(W.dtype, np.integer)
+    cast, wtype = (int, "long") if integer else (float, "double")
     wdf = df.sparkSession.createDataFrame(
         [
-            (m, p, c, int(W[m, c, p]))
+            (m, p, c, cast(W[m, c, p]))
             for m in range(m_sub)
             for c in range(n_codes)
             for p in range(sub_dim)
         ],
-        "sub int, subpos int, code int, w long",
+        f"sub int, subpos int, code int, w {wtype}",
     )
+    x = F.col("_x").cast("double")
+    elem = F.round(x * (1 << 20), 0).cast("long") if integer else x
     quant = df.select(
         F.col(id_col).alias("id"), F.posexplode(F.col(vec_col)).alias("pos", "_x")
     ).select(
         "id",
         (F.col("pos") / sub_dim).cast("int").alias("sub"),
         (F.col("pos") % sub_dim).alias("subpos"),
-        F.round(F.col("_x").cast("double") * (1 << 20), 0).cast("long").alias("q"),
+        elem.alias("q"),
     )
     return (
         quant.join(broadcast(wdf), ["sub", "subpos"])
@@ -216,7 +223,7 @@ def hyperplane_signatures(
     ``round(x · 2²⁰)``, and the dot product is ALL-INTEGER — bit-identical
     in any engine regardless of float summation order, so DuckDB can
     replicate the signatures exactly. Runs fully JVM-side: the planes are
-    one subspace of :func:`_quantized_dots`, then one row per vector
+    one subspace of :func:`_slice_dots`, then one row per vector
     through the exchange (the SimHash shape)."""
     assert 0 < n_planes <= 63, "signature must fit a signed long"
     if plane_gen == "md5int":
@@ -235,7 +242,7 @@ def hyperplane_signatures(
             dtype=np.int64,
         )
         pows = F.array(*[F.lit(1 << i).cast("long") for i in range(n_planes)])
-        dots = _quantized_dots(embeddings, W[None], id_col, vec_col)
+        dots = _slice_dots(embeddings, W[None], id_col, vec_col)
         return dots.groupBy("id").agg(
             F.sum(
                 F.when(
@@ -383,10 +390,10 @@ def _quantized_cells(
     vec_col: str,
 ) -> DataFrame:
     """(id, cell) — the ``n`` top cells per vector by the all-integer
-    :func:`_quantized_dots` against ``round(c·2²⁰)`` centroids (one
+    :func:`_slice_dots` against ``round(c·2²⁰)`` centroids (one
     subspace), so the assignment is bit-identical in any engine. Ties
     break toward the higher cell index, matching :func:`_top_cells_udf`."""
-    dots = _quantized_dots(embeddings, _quantize(centroids)[None], id_col, vec_col)
+    dots = _slice_dots(embeddings, _quantize(centroids)[None], id_col, vec_col)
     w = Window.partitionBy("id").orderBy(F.desc("s"), F.desc("code"))
     return (
         dots.withColumn("_rk", F.row_number().over(w))

@@ -6,6 +6,12 @@ All hot paths are Catalyst expressions (JVM, whole-stage codegen) — including
 SimHash, whose per-bit majority vote is 64 conditional sums over exploded
 token hashes. Each operator is designed to scale: dedup families avoid the
 O(n²) self-join via hash grouping (exact) or shingle/LSH blocking (near-dup).
+
+Every operator reads text through one token stream: :func:`tokens` (the
+whitespace tokens of a string, never an empty one), :func:`word_ngrams`
+(overlapping word windows) and
+:func:`~sparktax.link.minhash.char_grams` (overlapping char windows),
+each one codegen'd regex pass with no interpreted Catalyst lambda.
 """
 
 from __future__ import annotations
@@ -16,6 +22,7 @@ from pyspark.sql import functions as F
 from sparktax.hashing import md5_32, md5_60, md5_rank_expr, seeded_hash
 from sparktax.link.minhash import (
     bucket_pairs,
+    char_grams,
     exact_jaccard,
     fuzzy_match_pairs,
     shingle,
@@ -33,6 +40,26 @@ def normalized_text(col):
     c = F.regexp_replace(c, r"[^\w\s]", " ")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
+
+
+_TOKEN = r"\S+"
+
+
+def tokens(col):
+    """array<string> of the whitespace tokens of ``col`` in order — split,
+    then drop empties, as one codegen'd ``regexp_extract_all``: never an
+    empty token, so empty or whitespace-only text gives ``[]`` (and null
+    gives null). Pass :func:`normalized_text` for the normalized stream."""
+    return F.regexp_extract_all(col, F.lit(_TOKEN), 0)
+
+
+def word_ngrams(norm, n: int):
+    """array<string> of the overlapping ``n``-token windows of the
+    single-spaced string ``norm``, in start order: a zero-width lookahead
+    anchored at token starts captures ``n`` space-joined tokens per match,
+    so text with fewer than ``n`` tokens gives ``[]``."""
+    pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
+    return F.regexp_extract_all(norm, F.lit(pat), 1)
 
 
 def fingerprint(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -334,17 +361,13 @@ def simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
     them with the shared band cut and bucket-mate self-join.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    # split() emits "" tokens at text boundaries; instead of an interpreted
-    # array-filter lambda per token (HOF), keep those rows and null out
-    # their hashes — count("lo") skips NULLs and the vote sums coalesce
-    # NULL→0, so empty tokens contribute nothing and whitespace-only docs
-    # still land one row (simhash 0), exactly like the filtered form.
-    # (No fan-out here: measured A/B at sf0.1 showed the repartition's
-    # exchange + scheduling cost exceeds the single-task compute it
-    # parallelizes — 1.90 s vs 1.62 s best-of-3.)
-    toks = F.split(F.lower(txt), r"\s+")
-    md5h = F.when(F.col("tok") != "", F.md5(F.col("tok")))
-    tok = documents.select("doc_id", F.explode_outer(toks).alias("tok")).select(
+    # a doc with no token keeps one null-token row under explode_outer:
+    # md5(null) is null, count("lo") skips it and the vote sums coalesce
+    # it to 0, so that doc hashes to 0
+    md5h = F.md5(F.col("tok"))
+    tok = documents.select(
+        "doc_id", F.explode_outer(tokens(F.lower(txt))).alias("tok")
+    ).select(
         "doc_id",
         F.conv(F.substring(md5h, 1, 8), 16, 10).cast("long").alias("hi"),
         F.conv(F.substring(md5h, 9, 8), 16, 10).cast("long").alias("lo"),
@@ -410,23 +433,17 @@ def winnow_fingerprints(
     ≥1 fingerprint, while only ~2/(w+1) of positions are retained — the
     local-similarity fingerprint for plagiarism/provenance detection.
 
-    All Catalyst: k-grams via posexplode of a substring transform, the
+    All Catalyst: k-grams via posexplode of :func:`char_grams`, the
     rolling window via a per-document sliding ``min`` (sort-spills on hot
     docs, never resident in Python). The gram hash is an md5 prefix so the
     DuckDB oracle reproduces it bit-for-bit.
     """
     norm = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    # one codegen'd lookahead-regex pass per doc (the char_grams device;
-    # match order == position order, so posexplode indices are unchanged);
-    # the interpreted transform(sequence, substr) lambda this replaces ran
-    # once per character position. Short docs yield the empty array, as
-    # before.
-    grams = F.when(
-        F.length(norm) >= k,
-        F.regexp_extract_all(norm, F.lit(f"(?s)(?=(.{{{k}}}))"), 1),
-    ).otherwise(F.array().cast("array<string>"))
+    # match order == position order, so the posexplode index is the gram's
+    # start; docs shorter than k have no gram
     pos_gram = documents.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(grams).alias("i", "gram")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(char_grams(norm, k)).alias("i", "gram"),
     )
     h = md5_32(F.col("gram"))
     hashed = pos_gram.select("doc_id", "i", h.alias("h"))
@@ -444,20 +461,10 @@ def winnow_fingerprints(
 
 
 def word_shingles(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
-    """(id, shingle) — distinct word n-grams of the normalized text,
-    entirely Catalyst and fully codegen: the overlapping windows come from
-    ONE regex pass over the single-spaced normalized string — a zero-width
-    lookahead anchored at token starts captures ``n`` space-joined tokens
-    per match (``(?<!\\S)(?=((?:\\S+ ){n-1}\\S+))``, the
-    :func:`_word_grams` device generalized to n tokens). The previous
-    ``transform(sequence, array_join(slice(...)))`` form ran an interpreted
-    Catalyst lambda per window (the round-5 verdict's #2 anti-pattern,
-    measured ~50× slower on the same shape). Values are identical: windows
-    with fewer than ``n`` tokens — which the old form emitted and then
-    filtered out — simply never match the regex."""
-    norm = normalized_text(F.col(text_col))
-    pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
-    grams = F.array_distinct(F.regexp_extract_all(norm, F.lit(pat), 1))
+    """(id, shingle) — distinct word n-grams (:func:`word_ngrams`) of the
+    normalized text, fully codegen. A doc with fewer than ``n`` tokens has
+    no shingle."""
+    grams = F.array_distinct(word_ngrams(normalized_text(F.col(text_col)), n))
     return (
         df.select(F.col(id_col).alias("id"), grams.alias("_g"))
         .select("id", F.explode("_g").alias("shingle"))
@@ -533,15 +540,11 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def tokens_expr(col):
-    return F.split(normalized_text(col), " ")
-
-
 def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, lang_pred, lang_hits) — argmax of marker-word hits;
     'und' (undetermined) when no marker matches. Ties: lexicographic lang
     order, deterministic."""
-    toks = tokens_expr(F.col(text_col))
+    toks = tokens(normalized_text(F.col(text_col)))
     scores = [
         F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))).alias(lang)
         for lang, words in sorted(LANG_MARKERS.items())
@@ -564,17 +567,17 @@ def quality_score(documents: DataFrame, text_col: str = "text") -> DataFrame:
     quality ∈ [0,1]: penalizes too-short docs, extreme punctuation, and
     stopword-free (likely non-linguistic) text."""
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    toks = tokens_expr(txt)
     n_chars = F.length(txt)
     # token + stopword counts via codegen'd regexp_count over the
     # single-spaced normalized string instead of interpreted per-token
-    # array-filter lambdas: \S+ runs ARE the tokens, and each stopword
-    # token is matched exactly once (the leading separator is consumed,
-    # the trailing one only looked-ahead, so adjacent stopwords all
-    # count). Value-identical to the filter forms — pinned by the
-    # differential test and the quality_score oracle.
+    # array-filter lambdas: each stopword token is matched exactly once
+    # (the leading separator is consumed, the trailing one only
+    # looked-ahead, so adjacent stopwords all count). Value-identical to
+    # the filter forms — pinned by the differential test and the
+    # quality_score oracle.
     norm = normalized_text(txt)
-    n_tokens = F.regexp_count(norm, F.lit(r"\S+"))
+    toks = tokens(norm)
+    n_tokens = F.regexp_count(norm, F.lit(_TOKEN))
     punct = F.length(txt) - F.length(F.regexp_replace(txt, r"[^\w\s]", ""))
     all_stop = sorted({w for ws in LANG_MARKERS.values() for w in ws})
     stop_re = r"(?:^| )(?:" + "|".join(all_stop) + r")(?= |$)"
@@ -606,15 +609,19 @@ def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
     BPE-ish regex count (letter runs, single digits, punctuation marks —
     a cheap proxy for subword token cost)."""
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    # \S+ runs == the non-empty whitespace-split tokens (codegen count,
-    # no interpreted array-filter lambda)
-    ws = F.regexp_count(txt, F.lit(r"\S+"))
+    ws = F.regexp_count(txt, F.lit(_TOKEN))
     bpe = F.size(F.regexp_extract_all(txt, F.lit(BPE_TOKEN_RE), 0))
     return documents.select(
         "doc_id",
         ws.cast("long").alias("ws_tokens"),
         bpe.cast("long").alias("bpe_ish_tokens"),
     )
+
+
+# sentences = the [.!?]-separated pieces trimmed of spaces (Spark's trim
+# rule: spaces only), empties dropped: one match per piece, from its first
+# to its last non-space char
+_SENTENCE = r"[^.!? ](?:[^.!?]*[^.!? ])?"
 
 
 def repetition_signals(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -631,12 +638,7 @@ def repetition_signals(documents: DataFrame, text_col: str = "text") -> DataFram
     expressions on the unexploded table (no second explode)."""
     txt = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     toks = documents.select(
-        "doc_id",
-        # regexp_extract_all(\S+) IS split-then-drop-empties, in order —
-        # codegen, no interpreted array-filter lambda per token
-        F.posexplode(F.regexp_extract_all(txt, F.lit(r"\S+"), 0)).alias(
-            "pos", "tok"
-        ),
+        "doc_id", F.posexplode(tokens(txt)).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     bigrams = toks.withColumn("nxt", F.lead("tok").over(w)).filter(
@@ -655,10 +657,7 @@ def repetition_signals(documents: DataFrame, text_col: str = "text") -> DataFram
     tok_stats = top_frac(toks, ["tok"], "top_token_frac")
     big_stats = top_frac(bigrams, ["tok", "nxt"], "top_bigram_frac")
 
-    sents = F.filter(
-        F.transform(F.split(txt, r"[.!?]"), lambda s: F.trim(s)),
-        lambda s: s != "",
-    )
+    sents = F.regexp_extract_all(txt, F.lit(_SENTENCE), 0)
     dup_sent = F.when(
         F.size(sents) > 0,
         F.round(
@@ -784,10 +783,7 @@ def pack_sequences(
         n = F.col(n_tokens_col).cast("long")
     else:
         txt = F.coalesce(F.col(text_col), F.lit(""))
-        # \S+ runs are exactly the non-empty whitespace-split tokens —
-        # one codegen'd regexp_count instead of an interpreted per-token
-        # array-filter lambda
-        n = F.regexp_count(txt, F.lit(r"\S+")).cast("long")
+        n = F.regexp_count(txt, F.lit(_TOKEN)).cast("long")
     base = documents.select(F.col(id_col), *carry, n.alias("n_tokens"))
     base = base.localCheckpoint(eager=True)
     lo, hi = base.agg(
@@ -875,7 +871,7 @@ def chunk_documents(
         raise ValueError("chunk_size and stride must be positive")
     stride = stride or chunk_size
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.filter(F.split(txt, r"\s+"), lambda t: t != "")
+    toks = tokens(txt)
     t = documents.select(
         F.col(id_col), toks.alias("_toks"), F.size(toks).alias("_n")
     ).where(F.col("_n") > 0)
@@ -1041,19 +1037,12 @@ def split_corpus(
     if any(f < 0 for f in fractions.values()):
         raise ValueError("fractions must be >= 0")
     u = md5_rank_expr(F.col(id_col), str(seed))
-    expr, acc = None, 0.0
-    names = sorted(fractions)
-    for name in names[:-1]:
-        acc += fractions[name]
-        thresh = int(acc * (16**15))
+    *cuts, (last, _) = split_thresholds(fractions)
+    expr = None
+    for name, thresh in cuts:
         cond = u < F.lit(thresh)
-        expr = (
-            F.when(cond, name)
-            if expr is None
-            else expr.when(cond, name)
-        )
-    last = F.lit(names[-1])
-    expr = last if expr is None else expr.otherwise(names[-1])
+        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
+    expr = F.lit(last) if expr is None else expr.otherwise(last)
     return documents.select(*documents.columns, expr.alias(split_col))
 
 
@@ -1151,21 +1140,12 @@ def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, int]]:
 
 def _word_grams(text_col: str):
     """array<string> of word unigrams + bigrams over the normalized text
-    (the DSIR feature space: hashed 1–2-grams, Xie et al. 2023 §3).
-
-    Both gram sets come from codegen'd regex extraction over the
-    single-spaced normalized string — the overlapping-bigram trick is a
-    zero-width lookahead anchored at token starts (``(?<!\\S)``), so NO
-    higher-order lambda runs: the first version built bigrams with
-    ``transform(sequence, concat_ws(element_at...))`` and Catalyst's
-    interpreted HOF evaluation made it ~50× slower (measured 14.5 s vs
-    0.3 s for the plain token explode on a 20k-doc corpus — the same
-    round-2 lesson as the SimHash rewrite). Gram VALUES are unchanged, so
-    the DuckDB oracles (which build grams with list ops) still match."""
+    (the DSIR feature space: hashed 1–2-grams, Xie et al. 2023 §3):
+    :func:`tokens` then :func:`word_ngrams` with ``n = 2``, so no
+    interpreted higher-order lambda runs (a ``transform(sequence, ...)``
+    bigram form measured ~50× slower: 14.5 s vs 0.3 s on 20k docs)."""
     norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
-    unigrams = F.regexp_extract_all(norm, F.lit(r"\S+"), 0)
-    bigrams = F.regexp_extract_all(norm, F.lit(r"(?<!\S)(?=(\S+ \S+))"), 1)
-    return F.concat(unigrams, bigrams)
+    return F.concat(tokens(norm), word_ngrams(norm, 2))
 
 
 # the gram-bucket device: every DSIR / perplexity / quality-classifier /
@@ -1359,8 +1339,8 @@ def dedup_spans(
     the reference suffix-array method finds, at ≥ w granularity, without
     building a distributed suffix array.
 
-    The 100 TB shape: window hashing is a narrow per-doc ``transform``
-    (no shuffle); duplicate detection is ONE content shuffle — a
+    The 100 TB shape: window hashing is a narrow per-doc regex pass
+    (:func:`word_ngrams`, no shuffle); duplicate detection is ONE content shuffle — a
     map-side-combined count/min aggregate on the 8-byte window hash, so
     the exchange carries one row per distinct window, never one per
     occurrence; marked spans join back on the hash (AQE skew-join splits
@@ -1369,26 +1349,14 @@ def dedup_spans(
     ``doc_id`` < 2⁴³ (the composite first-occurrence key) — chunk longer
     docs first (:func:`chunk_documents`). ``hasher="md5"`` uses the
     md5-prefix hash DuckDB replays bit-for-bit."""
-    toks = F.filter(
-        tokens_expr(F.coalesce(F.col(text_col), F.lit(""))), lambda t: t != ""
-    )
-    base = documents.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
+    base = documents.select(F.col(id_col).alias("doc_id"), tokens(norm).alias("_t"))
     n = F.size("_t")
-    # window TEXTS come from one codegen'd lookahead-regex pass over the
-    # single-spaced normalized string (the _word_grams device: the first
-    # version sliced+joined per window inside an interpreted transform
-    # lambda); the array index from posexplode IS the window's token
-    # position, because every token start except the last w−1 opens one
-    # window. Hashes are then a plain codegen projection.
-    win_re = rf"(?<!\S)(?=((?:\S+ ){{{w - 1}}}\S+))"
-    wtexts = F.regexp_extract_all(
-        normalized_text(F.coalesce(F.col(text_col), F.lit(""))),
-        F.lit(win_re),
-        1,
-    )
+    # the posexplode index of a window IS its token position: every token
+    # start except the last w−1 opens one window
     wins = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(wtexts).alias("pos", "_wt"),
+        F.posexplode(word_ngrams(norm, w)).alias("pos", "_wt"),
     ).select("doc_id", "pos", seeded_hash(F.col("_wt"), hasher).alias("whash"))
     key = F.col("doc_id") * (1 << 20) + F.col("pos")
     firsts = (

@@ -1,10 +1,14 @@
-"""Round-6 optimization guards: the codegen regex gram builders must stay
-row-identical to the original interpreted-HOF forms, on adversarial inputs
-and on a slice of real generated documents.
+"""The token stream (``textops.tokens``, ``textops.word_ngrams``,
+``minhash.char_grams``) and the operators built on it must stay
+row-identical to the forms they replaced — split-then-filter token lists,
+interpreted-HOF gram builders, SimHash's null-guarded split and the
+trimmed sentence split — on adversarial inputs and on a slice of real
+generated documents.
 
 The old forms are kept INLINE here as executable specifications — if a
-future edit changes gram values (e.g. drops the short-text truncation case
-or the DOTALL flag), these fail pointing at the exact divergence.
+future edit changes token or gram values (e.g. drops the short-text
+truncation case, the DOTALL flag or the empty-token rule), these fail
+pointing at the exact divergence.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparktax.link.minhash import shingle
-from sparktax.textops import normalized_text, simhash, word_shingles
+from sparktax.textops import _SENTENCE, normalized_text, simhash, tokens, word_shingles
 
 TRICKY = [
     (1, "hello world"),
@@ -31,6 +35,11 @@ TRICKY = [
     (11, " leading and trailing "),
     (12, "\n\n\n"),
     (13, "punct, punct! -- dashes"),
+    (14, "\n"),
+    (15, " \t . \t"),
+    (16, "... !!! ??"),
+    (17, "Same. same! SAME?  same .x\r\ny. x\r\ny"),
+    (18, "naïve café\u00a0— ünïcode  \x0b vt"),
 ]
 
 
@@ -105,9 +114,75 @@ def test_word_shingles_match_hof_reference(inputs, n):
         assert got == want, name
 
 
+def _old_simhash(documents):
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    md5h = F.when(F.col("tok") != "", F.md5(F.col("tok")))
+    tok = documents.select(
+        "doc_id", F.explode_outer(F.split(F.lower(txt), r"\s+")).alias("tok")
+    ).select(
+        "doc_id",
+        F.conv(F.substring(md5h, 1, 8), 16, 10).cast("long").alias("hi"),
+        F.conv(F.substring(md5h, 9, 8), 16, 10).cast("long").alias("lo"),
+    )
+    votes = [
+        F.sum(
+            F.coalesce(
+                F.shiftright(F.col("lo" if i < 32 else "hi"), i % 32).bitwiseAND(1),
+                F.lit(0),
+            )
+        ).alias(f"v{i}")
+        for i in range(64)
+    ]
+    agg = tok.groupBy("doc_id").agg(F.count("lo").alias("n"), *votes)
+    sim = F.when(F.col("v63") * 2 > F.col("n"), F.lit(-(2**63))).otherwise(F.lit(0))
+    for i in range(63):
+        sim = sim + F.when(F.col(f"v{i}") * 2 > F.col("n"), F.lit(1 << i)).otherwise(0)
+    return agg.select("doc_id", sim.cast("long").alias("simhash"))
+
+
+def test_token_stream_matches_split_filter_reference(inputs):
+    # tokens() == the split-then-drop-empties forms it replaced: the
+    # normalized split on " " (BPE, dedup_spans, language_id) and the raw
+    # split on \s+ (chunk_documents); null text stays null
+    for name, df in inputs.items():
+        for raw in (F.col("text"), F.coalesce(F.col("text"), F.lit(""))):
+            norm = normalized_text(raw)
+            rows = df.select(
+                tokens(norm).alias("got_norm"),
+                F.filter(F.split(norm, " "), lambda t: t != "").alias("want_norm"),
+                tokens(raw).alias("got_raw"),
+                F.filter(F.split(raw, r"\s+"), lambda t: t != "").alias("want_raw"),
+            ).collect()
+            for r in rows:
+                assert r["got_norm"] == r["want_norm"], (name, r)
+                assert r["got_raw"] == r["want_raw"], (name, r)
+
+
+def test_simhash_matches_split_guard_reference(inputs):
+    for name, df in inputs.items():
+        got = sorted(map(tuple, simhash(df).collect()))
+        want = sorted(map(tuple, _old_simhash(df).collect()))
+        assert got == want, name
+
+
+def test_sentence_split_matches_trim_filter_reference(inputs):
+    # repetition_signals' sentences: the trimmed, non-empty [.!?] pieces
+    txt = F.lower(F.coalesce(F.col("text"), F.lit("")))
+    for name, df in inputs.items():
+        rows = df.select(
+            F.regexp_extract_all(txt, F.lit(_SENTENCE), 0).alias("got"),
+            F.filter(
+                F.transform(F.split(txt, r"[.!?]"), lambda s: F.trim(s)),
+                lambda s: s != "",
+            ).alias("want"),
+        ).collect()
+        for r in rows:
+            assert r["got"] == r["want"], (name, r)
+
+
 def test_simhash_empty_and_whitespace_docs_survive(tricky):
-    # the no-HOF tokenizer must keep one simhash-0 row for docs with no
-    # real token (the "" rows carry NULL hashes; count skips them)
+    # explode_outer keeps one null-token row for a doc with no token: its
+    # hash is NULL, count skips it, and the doc hashes to 0
     rows = {r["doc_id"]: r["simhash"] for r in simhash(tricky).collect()}
     assert set(rows) == {r[0] for r in TRICKY}
     for empty_id in (4, 5, 9, 12):
@@ -117,11 +192,11 @@ def test_simhash_empty_and_whitespace_docs_survive(tricky):
 def test_token_counts_match_filter_reference(tricky):
     # regexp_count(\S+) must equal size(filter(split(txt,\s+), !="")) and
     # the stopword alternation must equal per-token isin counting
-    from sparktax.textops import LANG_MARKERS, quality_score, token_counts, tokens_expr
+    from sparktax.textops import LANG_MARKERS, quality_score, token_counts
 
     txt = F.coalesce(F.col("text"), F.lit(""))
     all_stop = sorted({w for ws in LANG_MARKERS.values() for w in ws})
-    toks = tokens_expr(txt)
+    toks = F.split(normalized_text(txt), " ")
     ref = tricky.select(
         "doc_id",
         F.size(F.filter(F.split(txt, r"\s+"), lambda t: t != "")).alias("ws_ref"),

@@ -6,10 +6,10 @@ pruning, never a cartesian product — so a query that still returns
 correct rows but lost its pushdown or picked up an extra Exchange fails
 here first.
 
-The gram-lane test additionally checks the shingling queries: no
-round-robin repartition ahead of the gram explode, no interpreted
-higher-order lambda and no row-at-a-time Python stage anywhere in the
-plan.
+The gram-lane test additionally checks the shingling and token-stream
+queries (and BPE's word table): no round-robin repartition ahead of the
+gram explode, no interpreted higher-order lambda and no row-at-a-time
+Python stage anywhere in the plan.
 
 Every ``bench.HEADLINE`` query, as the bench runs it (``bench.OVERRIDES``
 applied), has its FileScan / shuffle Exchange / SortMergeJoin counts
@@ -39,6 +39,8 @@ QUERIES = {
     "minhash_neardup": OVERRIDES["minhash_neardup"],
     "ngram_jaccard": E.queries()["ngram_jaccard"],
     "decontaminate": E.queries()["decontaminate"],
+    "chunk_documents": E.queries()["chunk_documents"],
+    "repetition": E.queries()["repetition"],
 }
 
 FORBIDDEN = ["RoundRobinPartitioning", "lambdafunction", "BatchEvalPython"]
@@ -51,6 +53,15 @@ def test_gram_plan_shape(spark, name):
     assert "FileScan parquet" in plan
     for node in FORBIDDEN:
         assert node not in plan, f"{name}: {node} in plan\n{plan}"
+
+
+def test_bpe_word_counts_plan_has_no_lambda(spark):
+    from sparktax.bpe import word_counts
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = word_counts(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert "lambdafunction" not in plan, plan
 
 
 # query -> list of (description, predicate over the executed-plan string)
