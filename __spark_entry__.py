@@ -1711,6 +1711,11 @@ def _toks_sql(c: str) -> str:
     return f"list_filter(string_split({_NORM.format(c=c)}, ' '), t -> t <> '')"
 
 
+def _raw_toks_sql(c: str) -> str:
+    """The whitespace token list of ``c`` (the engine's ``tokens``)."""
+    return f"regexp_extract_all({c}, '\\S+')"
+
+
 def _word_windows_sql(src: str, n: int) -> str:
     """SELECT of ``(id, pos, g)``: every ``n``-token window ``g`` of the
     token list ``t`` of each ``src(id, t)`` row, ``pos`` its 0-based start;
@@ -2170,8 +2175,7 @@ def _simhash_sql() -> str:
     return f"""
         WITH toks AS (
             SELECT doc_id,
-                   unnest(list_filter(regexp_split_to_array(
-                       lower(coalesce(text, '')), '\\s+'), x -> x <> '')) AS tok
+                   unnest({_raw_toks_sql("lower(coalesce(text, ''))")}) AS tok
             FROM documents
         ),
         b AS (
@@ -2313,6 +2317,7 @@ def oracle_sql() -> dict[str, str]:
     all_stop = sorted({w for ws in LANG_MARKERS.values() for w in ws})
     norm = _NORM.format(c="text")
     toks = _toks_sql("text")
+    raw_toks = _raw_toks_sql("coalesce(text, '')")
     return {
         "extract_triples": """
             SELECT CAST(l_orderkey AS VARCHAR) AS conv_id,
@@ -2490,12 +2495,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "language_id": _lang_sql(),
         "redact_pii": _redact_pii_sql(),
-        "pack_sequences": """
+        "pack_sequences": f"""
             WITH n AS (
-                SELECT doc_id,
-                       len(list_filter(regexp_split_to_array(
-                           coalesce(text, ''), '\\s+'), x -> x <> ''))::BIGINT
-                           AS n_tokens
+                SELECT doc_id, len({raw_toks})::BIGINT AS n_tokens
                 FROM documents
             ), c AS (
                 SELECT doc_id, n_tokens,
@@ -2511,11 +2513,9 @@ def oracle_sql() -> dict[str, str]:
                          ELSE s // 256 END)::BIGINT AS end_seq_id
             FROM c
         """,
-        "chunk_documents": """
+        "chunk_documents": f"""
             WITH t AS (
-                SELECT doc_id,
-                       list_filter(regexp_split_to_array(coalesce(text, ''),
-                           '\\s+'), x -> x <> '') AS toks
+                SELECT doc_id, {raw_toks} AS toks
                 FROM documents
             ), s AS (
                 SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS cs
@@ -2533,8 +2533,7 @@ def oracle_sql() -> dict[str, str]:
         "split_corpus": _split_corpus_sql(),
         "token_counts": f"""
             SELECT doc_id,
-                   len(regexp_extract_all(coalesce(text, ''), '\\S+'))::BIGINT
-                       AS ws_tokens,
+                   len({raw_toks})::BIGINT AS ws_tokens,
                    len(regexp_extract_all(coalesce(text, ''),
                        '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))::BIGINT
                        AS bpe_ish_tokens
@@ -2574,14 +2573,12 @@ def oracle_sql() -> dict[str, str]:
         """,
         # Gopher repetition filters: token positions via the LATERAL
         # range-unnest idiom; bigrams via the same lead() window as Spark
-        "repetition": """
+        "repetition": f"""
             WITH base AS (
                 SELECT doc_id, lower(coalesce(text, '')) AS t FROM documents
             ),
             lists AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(t, '\\s+'),
-                                   x -> x <> '') AS l
+                SELECT doc_id, {_raw_toks_sql("t")} AS l
                 FROM base
             ),
             tok AS (

@@ -4,8 +4,9 @@ Usage: python scripts/dump_plans.py <suffix> [query ...]
 
 With no query names, dumps every bench HEADLINE query (using the bench
 OVERRIDES so the captured plan is the plan the bench actually times).
-Expression ids (``#<id>``), ``plan_id=<n>`` tags and RDD ids
-(``RDD[<n>]``) are always replaced by fixed text, so ``diff -r`` of the
+Expression ids (``#<id>``), ``plan_id=<n>`` tags, RDD ids
+(``RDD[<n>]``) and the numbered lambda variables (``lambda x_<n>``, a
+JVM-wide counter) are always replaced by fixed text, so ``diff -r`` of the
 ``plans/`` dirs of two checkouts dumped with the same suffix is the
 plan-identity check between them. Mostly planning: a few query functions
 run jobs of their own (centroid training, ``dedup_incremental``'s
@@ -31,9 +32,11 @@ from sparktax.session import get_spark  # noqa: E402
 
 def normalize(plan: str) -> str:
     """``plan`` with its per-session ids replaced: ``#123L`` -> ``#NL``,
-    ``plan_id=45`` -> ``plan_id=N``, ``RDD[289]`` -> ``RDD[N]``."""
+    ``plan_id=45`` -> ``plan_id=N``, ``RDD[289]`` -> ``RDD[N]``, and the
+    lambda variables ``lambda x_5`` -> ``lambda x_N``."""
     for pat, rep in (
-        (r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"), (r"RDD\[\d+\]", "RDD[N]")
+        (r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"), (r"RDD\[\d+\]", "RDD[N]"),
+        (r"(lambda [a-z]+)_\d+\b", r"\1_N"),
     ):
         plan = re.sub(pat, rep, plan)
     return plan

@@ -3,7 +3,6 @@ from sparktax.cluster.spark import (  # noqa: F401
     cluster_composition,
     cluster_sizes,
     clusterize,
-    dendrogram_edges,
     f_matrix,
     leaf_assignments,
 )

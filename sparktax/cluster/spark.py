@@ -4,10 +4,11 @@ One ``applyInPandas`` group = one clustering task (one axiom's entity
 sample, bounded by the sampling size — the reference's own scalability
 lever, libs/expressive/params.py:9). The kernel runs the numpy HAC and
 emits the dendrogram, leaf assignment, and leaf→ancestor closure as one
-long-form table; everything downstream (composition, sizes, F matrix) is
-plain Spark SQL over that table — one shuffle each, no recursion
-(reference init_composition / get_func_matrix,
+long-form table; everything downstream is plain Spark SQL over that
+table, no recursion (reference init_composition / get_func_matrix,
 libs/cluster/_cluster.py:88-153, are bottom-up Counter walks instead).
+The F matrix is one aggregate plus two windows over one read of it;
+composition and sizes are one groupBy each, for the inspection panels.
 
 At fleet scale, thousands of clustering tasks run as one job wave — the
 reference processes one sample at a time.
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparktax.cluster.hac import hac_children, leaf_closure
@@ -73,13 +74,6 @@ def clusterize(
     return cols.groupBy("task_id").applyInPandas(kernel, schema=CLUSTER_OUT)
 
 
-def dendrogram_edges(clu: DataFrame) -> DataFrame:
-    """(task_id, child, parent)."""
-    return clu.filter(F.col("kind") == "edge").select(
-        "task_id", F.col("a").alias("child"), F.col("b").alias("parent")
-    )
-
-
 def leaf_assignments(clu: DataFrame) -> DataFrame:
     """(task_id, leaf, sample_id, entity_id, class_id)."""
     return clu.filter(F.col("kind") == "leaf").select(
@@ -111,27 +105,38 @@ def cluster_sizes(clu: DataFrame) -> DataFrame:
 
 
 def f_matrix(clu: DataFrame) -> DataFrame:
-    """(task_id, node, class_id, precision, recall, f1) — sparse: zero rows
-    (class absent from cluster) are omitted; consumers treat missing as 0.
+    """(task_id, node, parent, class_id, precision, recall, f1) — sparse:
+    zero rows (class absent from cluster) are omitted; consumers treat
+    missing as 0. ``parent`` is the node's dendrogram parent (null at
+    the root), repeated on each of its rows.
 
     precision = n/|cluster|, recall = n/|class|, f1 = 2pr/(p+r) with
     0-guards (reference f_score + safe_divide, libs/metrics.py:1-20).
+    One groupBy over the closure and edge rows; |cluster| sums a node's
+    closure counts, |class| is the largest count of the class (the
+    root's closure holds every leaf), and the parent is the one edge
+    row keyed by the node.
     """
-    comp = cluster_composition(clu)
-    sizes = cluster_sizes(clu)
-    class_counts = (
-        clu.filter(F.col("kind") == "leaf")
-        .groupBy("task_id", "class_id")
-        .agg(F.count("*").alias("class_n"))
-    )
+    closure = F.col("kind") == "closure"
+    by_node = Window.partitionBy("task_id", "node")
+    by_class = Window.partitionBy("task_id", "class_id")
     p = F.col("n") / F.col("size")
     r = F.col("n") / F.col("class_n")
     return (
-        comp.join(sizes, ["task_id", "node"])
-        .join(class_counts, ["task_id", "class_id"])
+        clu.filter(F.col("kind") != "leaf")
+        .groupBy("task_id", "kind", F.col("a").alias("node"), "class_id")
+        .agg(F.count("*").alias("n"), F.max("b").alias("b"))
+        .select(
+            "*",
+            F.sum(F.when(closure, F.col("n"))).over(by_node).alias("size"),
+            F.max(F.when(~closure, F.col("b"))).over(by_node).alias("parent"),
+            F.max(F.when(closure, F.col("n"))).over(by_class).alias("class_n"),
+        )
+        .filter(closure)
         .select(
             "task_id",
             "node",
+            "parent",
             "class_id",
             p.alias("precision"),
             r.alias("recall"),
@@ -146,9 +151,9 @@ def f_matrix_pandas(
     """Collect helper: densify the sparse F rows of ONE task into the
     (n_clusters × n_classes) pandas matrix the driver-side mapping
     algorithms expect (reference Cluster.F(), _cluster.py:152-153)."""
-    M = pd.DataFrame(
-        np.zeros((n_nodes, len(class_ids))), columns=class_ids, index=range(n_nodes)
+    return (
+        fdf.pivot(index="node", columns="class_id", values="f1")
+        .reindex(index=range(n_nodes), columns=class_ids)
+        .fillna(0.0)
+        .rename_axis(index=None, columns=None)
     )
-    for row in fdf.itertuples(index=False):
-        M.loc[int(row.node), int(row.class_id)] = row.f1
-    return M

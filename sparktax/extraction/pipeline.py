@@ -1,7 +1,9 @@
 """Non-expressive taxonomy extraction, end-to-end (reference
 TaxonomyExtractor.run, libs/extraction/extractor.py:46-54).
 
-Distributed: clustering kernel + composition/F roll-ups (Spark).
+Distributed: clustering kernel + the F roll-up (Spark). One collect
+brings back the F rows, each carrying its node's dendrogram parent (and
+the class name, when given), so the HAC kernel runs once.
 Driver: F-matrix densify + Hungarian/greedy/soft mapping + contraction
 (collected structures are ≤ 2·sample_size rows by design).
 """
@@ -13,12 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparktax.cluster.spark import (
-    clusterize,
-    dendrogram_edges,
-    f_matrix,
-    f_matrix_pandas,
-)
+from sparktax.cluster.spark import clusterize, f_matrix, f_matrix_pandas
 from sparktax.extraction.assign import greedy_mapping, hard_mapping
 from sparktax.extraction.common import mapping_to_axioms
 from sparktax.extraction.soft import soft_mapping
@@ -58,17 +55,24 @@ def extract_taxonomy(
         .withColumn("task_id", F.lit(0))
         .select("task_id", "sample_id", "entity_id", "class_id", "vector")
     )
-    clu = clusterize(tasks, linkage=linkage, metric=metric).cache()
-    try:
-        fd = f_matrix(clu).toPandas()
-        edges = dendrogram_edges(clu).toPandas()[["child", "parent"]]
-    finally:
-        clu.unpersist()
+    fdf = f_matrix(clusterize(tasks, linkage=linkage, metric=metric))
+    if classes is not None:
+        names = classes.select("class_id", "class_name")
+        fdf = fdf.join(F.broadcast(names), "class_id", "left")
+    fd = fdf.toPandas()
+    if fd.empty:
+        return set()
 
-    n_nodes = int(edges["parent"].max()) + 1
+    n_nodes = int(fd["node"].max()) + 1
     class_ids = sorted(fd["class_id"].unique())
     Fm = f_matrix_pandas(fd, n_nodes, class_ids)
     root_id = n_nodes - 1
+    edges = (
+        fd.loc[fd["parent"].notna(), ["node", "parent"]]
+        .drop_duplicates()
+        .astype("int64")
+        .rename(columns={"node": "child"})
+    )
 
     if method in ("hard", "greedy"):
         mapper = hard_mapping if method == "hard" else greedy_mapping
@@ -86,10 +90,6 @@ def extract_taxonomy(
         raise ValueError(f"unknown method {method!r}")
 
     if classes is not None:
-        names = dict(
-            classes.select("class_id", "class_name")
-            .toPandas()
-            .itertuples(index=False, name=None)
-        )
-        axioms = {(names[c], names[p]) for c, p in axioms}
+        name = dict(fd[["class_id", "class_name"]].dropna().itertuples(index=False))
+        axioms = {(name[c], name[p]) for c, p in axioms}
     return axioms

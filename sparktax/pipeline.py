@@ -190,14 +190,8 @@ def run_pipeline(
         def _nonexpressive():
             from sparktax.extraction.pipeline import extract_taxonomy
 
-            got = (
-                extract_taxonomy(ds, tv, classes)
-                if ds.limit(1).count()
-                else set()
-            )
-            return spark.createDataFrame(
-                sorted(got) or [("", "")], "child string, parent string"
-            ).filter(F.col("child") != "")
+            got = sorted(extract_taxonomy(ds, tv, classes))
+            return spark.createDataFrame(got, "child string, parent string")
 
         ck.stage(
             "60_taxonomy",
@@ -214,8 +208,8 @@ def run_pipeline(
                 ex = ExpressiveExtractor(kg, tv)
                 edges_list = ex.run(ckpt=ck, state_name="61_expressive")
                 return spark.createDataFrame(
-                    edges_list or [("", "")], "child string, parent string"
-                ).filter(F.col("child") != "")
+                    sorted(edges_list), "child string, parent string"
+                )
 
             ck.stage(
                 "61_expressive",

@@ -7,12 +7,14 @@ import pandas as pd
 import pytest
 
 from sparktax.cluster.hac import hac_children, leaf_closure, pairwise_distance
+from pyspark.sql import functions as F
+
 from sparktax.cluster.spark import (
     cluster_composition,
     cluster_sizes,
     clusterize,
-    dendrogram_edges,
     f_matrix,
+    f_matrix_pandas,
 )
 from sparktax.synth import gen_blob_embeddings_pdf
 
@@ -61,16 +63,49 @@ def test_pairwise_metrics():
     assert d[0, 1] == pytest.approx(np.sqrt(2))
 
 
-def test_spark_clusterize_matches_local(spark):
-    dataset, classes, emb, gold = gen_blob_embeddings_pdf(per_class=10, seed=5)
+def _blob_clustering(spark, per_class, seed):
+    dataset, classes, emb, gold = gen_blob_embeddings_pdf(per_class=per_class, seed=seed)
     pdf = dataset.merge(emb, on="entity_id")
     pdf["task_id"] = 0
     tasks = spark.createDataFrame(pdf[["task_id", "sample_id", "entity_id", "class_id", "vector"]])
-    clu = clusterize(tasks).cache()
+    return pdf, clusterize(tasks)
+
+
+def _f_matrix_joins(clu):
+    """The F matrix as three groupBys and two joins (the form the one
+    aggregate in ``f_matrix`` replaced), plus the dendrogram edges."""
+    comp = cluster_composition(clu)
+    sizes = cluster_sizes(clu)
+    class_counts = (
+        clu.filter(F.col("kind") == "leaf")
+        .groupBy("task_id", "class_id")
+        .agg(F.count("*").alias("class_n"))
+    )
+    p = F.col("n") / F.col("size")
+    r = F.col("n") / F.col("class_n")
+    fm = (
+        comp.join(sizes, ["task_id", "node"])
+        .join(class_counts, ["task_id", "class_id"])
+        .select(
+            "task_id",
+            "node",
+            "class_id",
+            p.alias("precision"),
+            r.alias("recall"),
+            F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0).alias("f1"),
+        )
+    )
+    edges = clu.filter(F.col("kind") == "edge").select(
+        "task_id", F.col("a").alias("child"), F.col("b").alias("parent")
+    )
+    return fm, edges
+
+
+def test_spark_clusterize_matches_local(spark):
+    pdf, clu = _blob_clustering(spark, per_class=10, seed=5)
+    clu = clu.cache()
 
     n = len(pdf)
-    edges = dendrogram_edges(clu).toPandas()
-    assert len(edges) == 2 * (n - 1)
     sizes = cluster_sizes(clu).toPandas().set_index("node")["size"]
     assert sizes[2 * n - 2] == n  # root holds everything
     assert (sizes.loc[range(n)] == 1).all()
@@ -89,4 +124,34 @@ def test_spark_clusterize_matches_local(spark):
     cnt = int((pdf.class_id == leaf0_cls).sum())
     assert row.precision == pytest.approx(1.0)
     assert row.recall == pytest.approx(1 / cnt)
+
+    # the one aggregate == the three groupBys and two joins, bit for bit,
+    # and its parent column == the dendrogram edges (null at the root)
+    key = ["task_id", "node", "class_id"]
+    old_fm, old_edges = (d.toPandas() for d in _f_matrix_joins(clu))
+    got = fm.drop(columns="parent").sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got, old_fm[got.columns].sort_values(key).reset_index(drop=True)
+    )
+    assert len(old_edges) == 2 * (n - 1)
+    parents = fm.drop_duplicates("node").set_index("node")["parent"]
+    assert parents.isna().sum() == 1 and pd.isna(parents[2 * n - 2])
+    assert parents.dropna().astype("int64").sort_index().to_dict() == dict(
+        zip(old_edges.child, old_edges.parent)
+    )
     clu.unpersist()
+
+
+def test_f_matrix_pandas_matches_cell_loop(spark):
+    """The pivot densify == the one-cell-per-row loop it replaced, on the
+    golden blobs."""
+    _, clu = _blob_clustering(spark, per_class=30, seed=42)
+    fd = f_matrix(clu).toPandas()
+    n_nodes = int(fd["node"].max()) + 1
+    class_ids = sorted(fd["class_id"].unique())
+    want = pd.DataFrame(
+        np.zeros((n_nodes, len(class_ids))), columns=class_ids, index=range(n_nodes)
+    )
+    for row in fd.itertuples(index=False):
+        want.loc[int(row.node), int(row.class_id)] = row.f1
+    pd.testing.assert_frame_equal(f_matrix_pandas(fd, n_nodes, class_ids), want)

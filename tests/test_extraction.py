@@ -132,20 +132,63 @@ def test_transitive_closure_and_eval():
 GOLD_TREE = {"B": "A", "C": "A", "D": "B", "E": "B", "F": "C", "G": "C"}
 
 
+def _golden_blobs(spark):
+    from sparktax.synth import gen_blob_embeddings_pdf
+
+    dataset, classes, emb, gold = gen_blob_embeddings_pdf(per_class=30, seed=42)
+    frames = (spark.createDataFrame(d) for d in (dataset, emb, classes))
+    return (*frames, {(c, p) for c, p in gold})
+
+
 @pytest.mark.parametrize("method", ["hard", "greedy", "soft"])
 def test_golden_blob_recovery(spark, method):
     """Planted hierarchical blobs → extracted taxonomy == planted tree,
     direct F1 = 1.0 (FIXTURES.md F4 golden test)."""
     from sparktax.extraction.pipeline import extract_taxonomy
-    from sparktax.synth import gen_blob_embeddings_pdf
 
-    dataset, classes, emb, gold = gen_blob_embeddings_pdf(per_class=30, seed=42)
-    gold = {(c, p) for c, p in gold}
-    ds = spark.createDataFrame(dataset)
-    ed = spark.createDataFrame(emb)
-    cl = spark.createDataFrame(classes)
+    ds, ed, cl, gold = _golden_blobs(spark)
     got = extract_taxonomy(
         ds, ed, classes=cl, method=method, beta=200.0, threshold=0.3
     )
     assert got == gold
     assert evaluate(gold, got)[2] == 1.0
+
+
+def test_extraction_collects_once(spark, monkeypatch):
+    """One collect per call: the F rows, carrying their dendrogram
+    parent and class name, are collected once from a plan that runs the
+    HAC kernel once, and the call costs at most 7 Spark jobs."""
+    from sparktax.extraction.pipeline import extract_taxonomy
+
+    ds, ed, cl, gold = _golden_blobs(spark)
+    collected = []
+    for name in ("toPandas", "collect"):
+        action = getattr(type(ds), name)
+        monkeypatch.setattr(
+            type(ds), name, lambda df, _a=action: collected.append(df) or _a(df)
+        )
+    sc = spark.sparkContext
+    sc.setJobGroup("extract-taxonomy", "extract-taxonomy")
+    try:
+        got = extract_taxonomy(ds, ed, classes=cl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == gold
+    assert len(collected) == 1
+    plan = collected[0]._jdf.queryExecution().executedPlan().toString()
+    final_plan = plan.split("== Initial Plan ==")[0]
+    assert final_plan.count("FlatMapGroupsInPandas") == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("extract-taxonomy")) <= 7
+
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_tiny_dataset_extracts_empty_taxonomy(spark, n_rows):
+    """An empty sample has no F row and a one-entity sample has no
+    dendrogram edge: both extract the empty taxonomy instead of raising."""
+    from sparktax.extraction.pipeline import extract_taxonomy
+
+    ds, ed, cl, _ = _golden_blobs(spark)
+    ds = ds.orderBy("sample_id").limit(n_rows)
+    for method in ("hard", "greedy", "soft"):
+        assert extract_taxonomy(ds, ed, classes=cl, method=method) == set()

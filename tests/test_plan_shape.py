@@ -375,3 +375,22 @@ def test_headline_plan_nodes(spark, name):
     plan = df._jdf.queryExecution().executedPlan().toString()
     got = tuple(len(re.findall(p, plan)) for p in NODE_PATTERNS)
     assert got == HEADLINE_NODES[name], f"{name}: (FileScan, Exchange, SMJ) = {got}\n{plan}"
+
+
+def test_dump_plans_normalize_lambda_variables():
+    """Two plans that differ only in the JVM-wide lambda counter
+    normalize to the same text (and keep their lambda structure)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", Path(__file__).resolve().parents[1] / "scripts/dump_plans.py"
+    )
+    dump_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plans)
+    plan = (
+        "transform(a#1, lambdafunction((lambda x_{n}#5L + 1), lambda x_{n}#5L, "
+        "false)) AS b#2, lambdafunction(lambda id#10L, lambda id#10L, false)"
+    )
+    a, b = (dump_plans.normalize(plan.format(n=n)) for n in (5, 9))
+    assert a == b
+    assert "lambda x_N#NL + 1" in a and "lambda id#NL" in a
